@@ -1,30 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A failed query is recorded (name in "failed",
   * negative time) — never silently timed as ~0 s. Each query's first
   * attempt is an untimed warm run, so reported numbers are steady-state
-  * (comparable to BenchOne warm isolation), never first-touch codegen cost.
+  * (comparable to Probe's warm iterations), never first-touch codegen cost.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a 65-query fleet with multi-stage plans
-      // evicts its own generated classes and re-compiles mid-run (measured:
-      // q30 3.9 s in-fleet vs 0.6-1.0 s warm in isolation). Production
-      // tuning for any many-query service, not a bench trick.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // creation-time off: session clones must not bind per-clone executor
-      // classloaders (re-keys the codegen cache per clone; GraftSession.tune)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench")
     // ---- fixture fingerprint, computed FIRST ------------------------------
     // The driver regenerated /root/testdata between rounds twice now (r9→r10
     // events.ts type change; r14→r15 ded8c644→0572d512) — both times silently,
@@ -127,7 +112,7 @@ object Bench {
     // a late-fleet query hit a cold cache (measured: q123 6.10 s in-fleet vs
     // 0.73 s warm isolated, q139 6.30 vs 2.75, q145 6.74 vs 4.85). Excluding
     // each query's own first attempt makes the fleet number steady-state by
-    // construction — the same number BenchOne reports warm — at the cost of
+    // construction — the same number Probe reports warm — at the cost of
     // one extra execution per query. Queries whose warm attempt is already
     // below the 0.25 s noise floor get a single timed attempt; slower ones
     // get two, plus an adaptive third when the two disagree by >30% (the

@@ -17,21 +17,9 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  val ROCKSDB_PROVIDER =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** True iff the RocksDB state store provider can actually run here:
-    * provider class present AND the JNI native library loads. Computed
-    * once — loadLibrary is idempotent but not cheap.
-    */
-  lazy val rocksDbAvailable: Boolean = scala.util.Try {
-    Class.forName(ROCKSDB_PROVIDER)
-    org.rocksdb.RocksDB.loadLibrary()
-  }.isSuccess
-
-  /** Runtime confs every graft query assumes. Safe to call on a session we
-    * did not build (the driver's Verify/Bench build their own); only session
-    * confs that are settable at runtime go here.
+  /** Runtime confs every graft query assumes. Safe to call on a session
+    * [[local]] did not build; only session confs that are settable at
+    * runtime go here.
     */
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
@@ -48,54 +36,6 @@ object GraftSession {
     // this flag (Tables.events then truncates ns→µs like DuckDB does). Set
     // here — not in the loader — so loaders never mutate session state.
     c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // RocksDB state store: spillable, incrementally-checkpointed streaming
-    // state — the 100 TB deploy answer once stream-stream join / dedup
-    // state outgrows executor heap (the default HDFS-backed provider keeps
-    // every key in an in-memory map). Guarded three ways: never overrides
-    // an explicit setting, requires the provider class on the classpath,
-    // and requires the rocksdbjni NATIVE library to actually load on this
-    // host (the jar alone doesn't guarantee a linkable .so).
-    if (c.getOption("spark.sql.streaming.stateStore.providerClass").forall(_.isEmpty)
-        && rocksDbAvailable)
-      c.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    // Whole-stage codegen cache hits for ITERATIVE plans (r19, measured):
-    // with the default useIdInClassName=true, the per-query-execution
-    // codegenStageId is baked into the generated CLASS NAME, so every
-    // round of an iterative query (CC large/small-star, PR/HITS/LPA,
-    // Lloyd) — a fresh query execution per round under AQE — produces a
-    // textually-new source and misses the codegen cache (ProfileOne: q194
-    // re-compiled 122-125 stages per WARM iteration, q67's single CC
-    // 19-27, vs ~0 for non-iterative queries). The id is debug cosmetics
-    // (SPARK-23032 added the conf precisely for the cache trade-off);
-    // with it off, identical round plans reuse one compiled class. This
-    // is production tuning for any iterative workload, not a local-mode
-    // trick — on a cluster every executor pays the same janino misses.
-    // getOption-guarded (r19 ADVICE): a driver that deliberately enables
-    // the id to debug codegen stack traces keeps its setting.
-    if (c.getOption("spark.sql.codegen.useIdInClassName").isEmpty)
-      c.set("spark.sql.codegen.useIdInClassName", "false")
-    // The OTHER half of the iterative-recompile tax, root-caused in r20
-    // (CodegenProbe): Spark 4 keys the codegen cache on
-    // (contextClassLoader, source). With per-session artifact isolation
-    // on (the 4.x default, added for Spark Connect), every cloned
-    // session — each streaming run's internal clone, every
-    // Components.narrowClone around CC/PR/HITS/LPA rounds — ships its
-    // own JobArtifactState, so the executor binds tasks to a FRESH
-    // ExecutorClassLoader per clone and byte-identical generated sources
-    // re-janino-compile under the new cache key (q194 warm iteration:
-    // ~100 recompiles, 100% same-body-new-loader, 0 textually novel).
-    // This engine adds no session artifacts (no addArtifact/REPL jars),
-    // so isolation buys nothing and the per-clone loaders only cost:
-    // janino time each iteration plus an ever-growing executor-side
-    // loader/class live set in a long session (the fleet-JVM pressure
-    // limb). Disabling it restores one stable loader = one cache entry
-    // per distinct source. Set here so every session this engine tunes
-    // passes it to the clones it spawns (the conf is creation-time for
-    // a session's OWN ArtifactManager, but clones copy the runtime conf
-    // before their managers materialize); the graft session builders
-    // also set it at construction.
-    if (c.getOption("spark.sql.artifact.isolation.enabled").isEmpty)
-      c.set("spark.sql.artifact.isolation.enabled", "false")
     // Union.rewriteConstraints crashes ("key not found: <attr>") when a
     // filter constraint over a custom deterministic expression is
     // alias-chased through a self-union of the same scan (q57 shape; the
@@ -107,8 +47,15 @@ object GraftSession {
     spark
   }
 
-  /** Local session for tests / CLI runs. */
-  def local(appName: String = "graft", cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
+  /** Cores for a local session: `$SPARK_GRAFT_CPUS`, else this host's
+    * processors capped at 32. */
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors.min(32))
+
+  /** The one session builder: every graft main, the tests and the
+    * benchmark harness get their session here, so they all run under the
+    * same confs. */
+  def local(appName: String = "graft", cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -119,9 +66,12 @@ object GraftSession {
       // the working tree
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse-").toString)
-      // no session artifacts anywhere in this engine: creation-time off so
-      // session clones never bind per-clone executor classloaders (which
-      // would re-key the codegen cache per clone — see tune())
+      // static conf, default 100: a many-query session with multi-stage
+      // plans evicts its own generated classes and re-compiles mid-run
+      // (measured: q30 3.9 s in the Bench fleet vs 0.6-1.0 s warm alone)
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // creation-time only: with isolation on, every session clone binds its
+      // own executor classloader, which re-keys the codegen cache per clone
       .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

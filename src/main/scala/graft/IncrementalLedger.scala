@@ -1,12 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.graftbridge.SessionBridge
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
 /** Measures the per-batch incremental cost of the versioned-state
   * streaming family (r16, verdict item 5): for each member, run the
-  * query's micro-batch loop with [[graft.streaming.Streams.runForeachBatch]]
-  * instrumentation armed, then read the versioned state the loop left in
-  * its store and emit one ledger row per micro-batch —
+  * query's micro-batch loop, take each `foreachBatch` micro-batch's
+  * `addBatch` time from its streaming progress event, then read the
+  * versioned state the loop left in its store and emit one ledger row per
+  * micro-batch —
   * (query, batch_id, seconds, state rows per table) — so the
   * "state grows → per-batch cost grows" curve in SCALE.md is MEASURED,
   * not asserted. Two store layouts are walked:
@@ -66,90 +73,90 @@ object IncrementalLedger {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outMd = if (args.length > 1) args(1) else "INCREMENTAL_LEDGER.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // match Bench
-      // creation-time off: session clones must not bind per-clone executor
-      // classloaders (re-keys the codegen cache per clone; GraftSession.tune)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-ledger")
+    // (batchId, seconds) of every foreachBatch micro-batch since the last
+    // clear; the progress events reach a SparkListener as "other" events
+    val batches = new ConcurrentLinkedQueue[(Long, Double)]
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent
+            if p.progress.sink.description.startsWith("ForeachBatchSink") =>
+          Option(p.progress.durationMs.get("addBatch"))
+            .foreach(ms => batches.add((p.progress.batchId, ms / 1000.0)))
+        case _ =>
+      }
+    })
     val sb = new StringBuilder
     sb ++= s"# Incremental-cost ledger (streaming versioned-state family)\n\n"
     sb ++= s"Generated by `runMain graft.IncrementalLedger $sfDir` — one row\n"
-    sb ++= s"per micro-batch of each family member's AvailableNow run: wall\n"
-    sb ++= s"seconds of the foreachBatch body and the rows of every state\n"
+    sb ++= s"per micro-batch of each family member's AvailableNow run: the\n"
+    sb ++= s"foreachBatch sink's addBatch seconds and the rows of every state\n"
     sb ++= s"table the batch left in its versioned store. `sf`: `$sfDir`.\n"
-    graft.streaming.Streams.batchLedgerArmed = true
-    try {
-      FAMILY.foreach { case (name, prefix) =>
-        val fn = SparkEntry.queries(name)
-        // warm run: first-touch codegen/JIT lands here, not in the ledger
-        fn(spark, sfDir).count()
-        spark.catalog.clearCache()
-        graft.streaming.Streams.batchLedger.clear()
-        fn(spark, sfDir).count()
-        spark.catalog.clearCache()
-        import scala.jdk.CollectionConverters._
-        val times = graft.streaming.Streams.batchLedger.asScala.toSeq.sortBy(_._1)
-        // state rows per batch, from the store the run left behind
-        val store = graft.queries.TextDedupPack.existingStore(sfDir, prefix)
-        val children = store.toSeq.flatMap { p =>
-          Option(p.toFile.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-            .filter(_.isDirectory)
-        }
-        def rows(f: java.io.File): Long =
-          try spark.read.parquet(f.getPath).count() catch { case _: Throwable => -1L }
-        // versioned tables: rows AT version b; increments: cumulative ≤ b
-        val versioned = children.flatMap { f =>
-          f.getName match {
-            case VersionedDir(t, b) =>
-              Some((b.toLong, Option(t).getOrElse("state"), rows(f)))
-            case _ => None
-          }
-        }
-        // increments either sit directly in the store root (q225-style:
-        // store/batch_id=N) or one level down in NAMED tables (q305/q306:
-        // store/grams/batch_id=N, store/events/batch_id=N, ...) — walk both
-        val incRoots: Seq[(String, java.io.File)] =
-          children.collect { case f if IncrementDir.matches(f.getName) =>
-            "store" -> f.getParentFile
-          }.distinct ++
-            children.flatMap { t =>
-              Option(t.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-                .filter(c => c.isDirectory && IncrementDir.matches(c.getName))
-                .map(_ => t.getName -> t)
-            }.distinct
-        val cumulative = incRoots.flatMap { case (tname, root) =>
-          val incs = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-            .toSeq.flatMap { f =>
-              f.getName match {
-                case IncrementDir(b) => Some((b.toLong, rows(f)))
-                case _ => None
-              }
-            }.sortBy(_._1)
-          incs.scanLeft((-1L, 0L)) {
-            case ((_, acc), (b, n)) => (b, acc + n)
-          }.drop(1).map { case (b, n) =>
-            (b, if (tname == "store") "store_cumulative" else s"${tname}_cum", n)
-          }
-        }
-        val states = (versioned ++ cumulative)
-          .groupBy(_._1).view.mapValues(_.map(t => t._2 -> t._3).sortBy(_._1))
-        val tables = (versioned ++ cumulative).map(_._2).distinct.sorted
-        sb ++= s"\n## $name\n\n"
-        sb ++= s"| batch | seconds | ${tables.mkString(" rows | ")} rows |\n"
-        sb ++= s"|---|---|${tables.map(_ => "---|").mkString}\n"
-        times.foreach { case (b, sec) =>
-          val st = states.getOrElse(b, Seq.empty).toMap
-          sb ++= f"| $b | $sec%.2f | ${tables.map(t => st.getOrElse(t, -1L)).mkString(" | ")} |\n"
-        }
-        println(s"[ledger] $name: ${times.map(t => f"${t._2}%.2f").mkString(", ")} s over ${times.size} batches")
+    FAMILY.foreach { case (name, prefix) =>
+      val fn = SparkEntry.queries(name)
+      // warm run: first-touch codegen/JIT lands here, not in the ledger
+      fn(spark, sfDir).count()
+      spark.catalog.clearCache()
+      SessionBridge.drainListenerBus(spark)
+      batches.clear()
+      fn(spark, sfDir).count()
+      spark.catalog.clearCache()
+      SessionBridge.drainListenerBus(spark)
+      val times = batches.asScala.toSeq.sortBy(_._1)
+      // state rows per batch, from the store the run left behind
+      val store = graft.queries.TextDedupPack.existingStore(sfDir, prefix)
+      val children = store.toSeq.flatMap { p =>
+        Option(p.toFile.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+          .filter(_.isDirectory)
       }
-    } finally graft.streaming.Streams.batchLedgerArmed = false
+      def rows(f: java.io.File): Long =
+        try spark.read.parquet(f.getPath).count() catch { case _: Throwable => -1L }
+      // versioned tables: rows AT version b; increments: cumulative ≤ b
+      val versioned = children.flatMap { f =>
+        f.getName match {
+          case VersionedDir(t, b) =>
+            Some((b.toLong, Option(t).getOrElse("state"), rows(f)))
+          case _ => None
+        }
+      }
+      // increments either sit directly in the store root (q225-style:
+      // store/batch_id=N) or one level down in NAMED tables (q305/q306:
+      // store/grams/batch_id=N, store/events/batch_id=N, ...) — walk both
+      val incRoots: Seq[(String, java.io.File)] =
+        children.collect { case f if IncrementDir.matches(f.getName) =>
+          "store" -> f.getParentFile
+        }.distinct ++
+          children.flatMap { t =>
+            Option(t.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+              .filter(c => c.isDirectory && IncrementDir.matches(c.getName))
+              .map(_ => t.getName -> t)
+          }.distinct
+      val cumulative = incRoots.flatMap { case (tname, root) =>
+        val incs = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
+          .toSeq.flatMap { f =>
+            f.getName match {
+              case IncrementDir(b) => Some((b.toLong, rows(f)))
+              case _ => None
+            }
+          }.sortBy(_._1)
+        incs.scanLeft((-1L, 0L)) {
+          case ((_, acc), (b, n)) => (b, acc + n)
+        }.drop(1).map { case (b, n) =>
+          (b, if (tname == "store") "store_cumulative" else s"${tname}_cum", n)
+        }
+      }
+      val states = (versioned ++ cumulative)
+        .groupBy(_._1).view.mapValues(_.map(t => t._2 -> t._3).sortBy(_._1))
+      val tables = (versioned ++ cumulative).map(_._2).distinct.sorted
+      sb ++= s"\n## $name\n\n"
+      sb ++= s"| batch | seconds | ${tables.mkString(" rows | ")} rows |\n"
+      sb ++= s"|---|---|${tables.map(_ => "---|").mkString}\n"
+      times.foreach { case (b, sec) =>
+        val st = states.getOrElse(b, Seq.empty).toMap
+        sb ++= f"| $b | $sec%.2f | ${tables.map(t => st.getOrElse(t, -1L)).mkString(" | ")} |\n"
+      }
+      println(s"[ledger] $name: ${times.map(t => f"${t._2}%.2f").mkString(", ")} s over ${times.size} batches")
+    }
     java.nio.file.Files.write(java.nio.file.Paths.get(outMd),
       sb.toString.getBytes("UTF-8"))
     println(sb.toString)

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One driver-checkable query: a Spark implementation plus (when the
-  * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle SQL over
-  * the same parquet tables. Column names/aliases MUST match between the two
-  * — the driver sorts columns by name before hashing values.
+/** One oracle-checked query: a Spark implementation plus an equivalent
+  * DuckDB oracle SQL over the same parquet tables. Column names/aliases
+  * MUST match between the two — the comparison sorts columns by name
+  * before hashing values.
   *
   * Cross-engine determinism rules used throughout the packs:
   *   - SUM over doubles is order-dependent → sum `CAST(x AS DECIMAL(18,4))`
@@ -20,14 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   /** Oracle-checked query. */
   def apply(name: String, sql: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, (s, d) => run(GraftSession.tune(s), d), Some(sql))
-
-  /** Rows-only query (semantics not expressible in portable SQL). */
-  def rowsOnly(name: String)(run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, (s, d) => run(GraftSession.tune(s), d), None)
+    QueryDef(name, (s, d) => run(GraftSession.tune(s), d), sql)
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Queries are contributed by the packs under `graft.queries`; each is a
-  * [[QueryDef]] pairing the Spark implementation with (where expressible)
-  * a DuckDB oracle SQL over the same parquet tables.
+  * [[QueryDef]] pairing the Spark implementation with a DuckDB oracle SQL
+  * over the same parquet tables.
   */
 object SparkEntry {
 
@@ -44,7 +44,7 @@ object SparkEntry {
     index.map { case (n, q) => n -> q.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    packs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    packs.map(q => q.name -> q.oracle).toMap
 }

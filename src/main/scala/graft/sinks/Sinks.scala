@@ -70,9 +70,6 @@ object Sinks {
     df.select(col("key").cast("string"), col("value").cast("string"))
       .write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** K4: console sample (`df.show(n)` sites in the reference). */
-  def consoleSample(df: DataFrame, n: Int = 5): Unit = df.show(n, truncate = false)
-
   /** Compacted parquet write: bounds BOTH file-count and rows-per-file —
     * the two ends of the small-files/giant-files problem that kills
     * 100 TB table maintenance (a files.maxPartitionBytes-sized scan task

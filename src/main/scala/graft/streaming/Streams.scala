@@ -295,35 +295,17 @@ object Streams {
   def runForeachBatch(spark: SparkSession, stream: DataFrame,
                       f: (DataFrame, Long) => Unit): Unit = {
     val ckpt = Files.createTempDirectory("graft-ckpt-feb-")
-    // Opt-in per-batch wall-clock instrumentation (r16, verdict item 5):
-    // when the ledger is armed, each micro-batch's duration is recorded so
-    // graft.IncrementalLedger can MEASURE the "state grows → per-batch cost
-    // grows" curve of the versioned-state family instead of asserting it.
-    // Off (identity wrapper) everywhere else — Bench/Verify never arm it.
-    val g: (DataFrame, Long) => Unit =
-      if (!batchLedgerArmed) f
-      else (df, b) => {
-        val t0 = System.nanoTime()
-        f(df, b)
-        batchLedger.add((b, (System.nanoTime() - t0) / 1e9))
-      }
     // try/finally spans start() too (cf. runToMemory): a config error that
     // throws from start() must still clean up the fresh checkpoint dir
     try {
       val q = stream.writeStream
-        .foreachBatch(g)
+        .foreachBatch(f)
         .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
     } finally deleteRecursively(ckpt)
   }
-
-  /** Per-batch (batchId, seconds) buffer for [[runForeachBatch]] — armed
-    * only by graft.IncrementalLedger; drained between queries. */
-  private[graft] val batchLedger =
-    new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]
-  @volatile private[graft] var batchLedgerArmed = false
 
   private[graft] def deleteRecursively(root: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Shim into two `private[sql]` session APIs, used to scope per-query conf
   * overrides (`graft.streaming.Streams.runToMemory`) to a cloned session
   * instead of mutating the caller's — a session-global mutate-and-restore
-  * would leak the override to any concurrent query on the same session.
+  * would leak the override to any concurrent query on the same session —
+  * and into the `private[spark]` listener bus.
   */
 object SessionBridge {
 
@@ -22,4 +23,10 @@ object SessionBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       to.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       df.queryExecution.logical)
+
+  /** Block until the listener bus has delivered every event posted so far;
+    * the bus is asynchronous, so a listener may otherwise miss the events
+    * of a query that just returned. */
+  def drainListenerBus(s: SparkSession): Unit =
+    s.sparkContext.listenerBus.waitUntilEmpty()
 }
