@@ -64,8 +64,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       // managed tables (bucketed-write tests) land in a scratch dir, never
       // the working tree
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse-").toString)
+      .config("spark.sql.warehouse.dir", Stage.scratch("graft-warehouse-").toString)
       // static conf, default 100: a many-query session with multi-stage
       // plans evicts its own generated classes and re-compiles mid-run
       // (measured: q30 3.9 s in the Bench fleet vs 0.6-1.0 s warm alone)

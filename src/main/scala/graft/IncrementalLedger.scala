@@ -104,7 +104,7 @@ object IncrementalLedger {
       SessionBridge.drainListenerBus(spark)
       val times = batches.asScala.toSeq.sortBy(_._1)
       // state rows per batch, from the store the run left behind
-      val store = graft.queries.TextDedupPack.existingStore(sfDir, prefix)
+      val store = Stage.existing(prefix, sfDir)
       val children = store.toSeq.flatMap { p =>
         Option(p.toFile.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
           .filter(_.isDirectory)

@@ -1,12 +1,10 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import graft.operators.Changes
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-
-import java.util.concurrent.ConcurrentHashMap
 
 /** Change-data pack: changelog compaction and SCD2 history over the events
   * table — the maintenance operators behind the reference's
@@ -17,33 +15,10 @@ import java.util.concurrent.ConcurrentHashMap
   */
 object ChangeDataPack {
 
-  /** Staged 3-file copy of events per sf dir (cached for the JVM) — the
-    * micro-batch replay source for q116, one file per AvailableNow batch. */
-  private val eventStages = new ConcurrentHashMap[String, String]()
+  /** Staged 3-file copy of events per sf dir — the micro-batch replay
+    * source for q116, one file per AvailableNow batch. */
   private def stagedEventBatches(s: org.apache.spark.sql.SparkSession, d: String): String =
-    eventStages.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-q116-src-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
-      Tables.load(s, d, "events").repartition(3)
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
-    })
-
-  /** One reusable state-table store per sf dir, cleared per invocation and
-    * deleted at JVM exit (the returned plan lazily reads the final
-    * version, so no eager delete). */
-  private val stateStores = new ConcurrentHashMap[String, java.nio.file.Path]()
-  private def q116StateStore(d: String): java.nio.file.Path = {
-    val p = stateStores.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-q116-state-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
-      dir
-    })
-    import scala.jdk.CollectionConverters._
-    val children = java.nio.file.Files.list(p).iterator().asScala.toSeq
-    children.foreach(graft.streaming.Streams.deleteRecursively)
-    p
-  }
+    Stage.parquet("graft-q116-src-", d)(Tables.load(s, d, "events").repartition(3))
 
   def all: Seq[QueryDef] = Seq(
 
@@ -165,7 +140,8 @@ object ChangeDataPack {
         |WHERE rn = 1
         |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
       val srcDir = stagedEventBatches(s, d)
-      val store = q116StateStore(d)
+      // the returned plan lazily reads the final version: no eager delete
+      val store = Stage.cleared("graft-q116-state-", d)
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
       val schema = s.read.parquet(srcDir).schema
       val stream = Tables.normalizeTs(s.readStream.schema(schema)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -280,7 +280,7 @@ object CrawlPack {
     QueryDef(
       "q225_stream_url_dedup", URL_DEDUP_ORACLE) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
-      val store = clearedStore(d, "graft-q225-url-")
+      val store = Stage.cleared("graft-q225-url-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -349,7 +349,7 @@ object CrawlPack {
     QueryDef(
       "q235_stream_domain_quota", DOMAIN_QUOTA_ORACLE) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
-      val store = clearedStore(d, "graft-q235-quota-")
+      val store = Stage.cleared("graft-q235-quota-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -586,7 +586,7 @@ object CrawlPack {
     QueryDef(
       "q227_stream_overlap_matrix", SRC_OVERLAP_ORACLE) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
-      val store = clearedStore(d, "graft-q227-ovl-")
+      val store = Stage.cleared("graft-q227-ovl-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

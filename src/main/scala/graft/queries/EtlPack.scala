@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import graft.etl.Etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -132,7 +132,7 @@ object EtlPack {
          |SELECT id, name, icao, latitude, longitude
          |FROM cleaned
          |ORDER BY id""".stripMargin) { (s, d) =>
-      val out = java.nio.file.Files.createTempDirectory("graft-q36-").toString + "/airports"
+      val out = Stage.cleared("graft-q36-", d).toString + "/airports"
       val (nClean, _) = Etl.runBatch(s, wire(s, d),
         df => df.write.mode("overwrite").parquet(out))
       val back = s.read.parquet(out)
@@ -294,7 +294,7 @@ object EtlPack {
     QueryDef(
       "q290_stream_schema_drift", Q286_ORACLE) { (s, d) =>
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
-      val store = TextDedupPack.clearedStore(d, "graft-q290-drift-")
+      val store = Stage.cleared("graft-q290-drift-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -621,19 +621,12 @@ object EtlPack {
     docs.groupBy("source").agg(aggs.head, aggs.tail: _*).orderBy("source")
   }
 
-  /** One staged multi-file copy of `documents` per (sf dir, format),
-    * written once per JVM by the engine's own writer and deleted at exit
-    * (cf. TextDedupPack.stagedDocBatches). CSV writes a header and quotes
-    * as needed — exactly what the q137 read-back must survive. */
-  private val docStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** q299's two-generation staged corpus: g=1 carries the legacy schema
     * (even doc_ids), g=2 (odd doc_ids) adds the `score` column — one copy
-    * per (JVM, sf dir), deleted at exit (cf. [[stagedDocs]]). */
+    * per (JVM, sf dir) (cf. [[stagedDocs]]). */
   private def stagedEvolution(s: SparkSession, d: String): String =
-    docStages.computeIfAbsent(s"evolved:$d", _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-stage-evolved-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
+    Stage.once("graft-stage-evolved-", d) {
+      val dir = Stage.scratch("graft-stage-evolved-")
       val base = Tables.documents(s, d)
       base.filter(col("doc_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/g=1")
@@ -642,12 +635,15 @@ object EtlPack {
           col("n_chars").cast("long") % 97L + col("doc_id") % 13L)
         .write.mode("overwrite").parquet(s"$dir/g=2")
       dir.toString
-    })
+    }
 
+  /** One staged multi-file copy of `documents` per (sf dir, format),
+    * written once per JVM by the engine's own writer (cf.
+    * TextDedupPack.stagedDocBatches). CSV writes a header and quotes as
+    * needed — exactly what the q137 read-back must survive. */
   private def stagedDocs(s: SparkSession, d: String, format: String): String =
-    docStages.computeIfAbsent(s"$format:$d", _ => {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-stage-$format-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
+    Stage.once(s"graft-stage-$format-", d) {
+      val dir = Stage.scratch(s"graft-stage-$format-")
       val base = Tables.documents(s, d).repartition(4)
       format match {
         case "json" => base.write.mode("overwrite").json(dir.toString)
@@ -659,5 +655,5 @@ object EtlPack {
           .format("xml").save(dir.toString)
       }
       dir.toString
-    })
+    }
 }

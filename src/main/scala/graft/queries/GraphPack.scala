@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -182,20 +182,11 @@ object GraphPack {
     * run pays the WALK_STEPS checkpoint ladder ONCE instead of 4×
     * (r14 fleet: ~10 s rebuilt). The corpus is all-BIGINT (start, walk,
     * step, node), so the parquet round trip is exact and every consumer
-    * stays hash-identical to its direct-build answer. Deleted at JVM
-    * exit; cf. [[stagedPairBatches]]. */
-  private val walkCorpusStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * stays hash-identical to its direct-build answer; cf.
+    * [[stagedPairBatches]]. */
   private def stagedWalkCorpus(s: org.apache.spark.sql.SparkSession,
-                               d: String): org.apache.spark.sql.DataFrame = {
-    val dir = walkCorpusStages.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-walks-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(p))
-      walkCorpus(s, d).write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    s.read.parquet(dir)
-  }
+                               d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Stage.parquet("graft-walks-", d)(walkCorpus(s, d)))
 
 
   /** q217's planted-wedge id offsets (prefix / suffix variant). Disjoint
@@ -788,7 +779,7 @@ object GraphPack {
     QueryDef(
       "q241_stream_incremental_lpa", LPA_MATCH_ORACLE) { (s, d) =>
       val srcDir = stagedPairBatches(s, d)
-      val store = clearedStore(d, "graft-q241-lpa-")
+      val store = Stage.cleared("graft-q241-lpa-", d)
       val latestLabels =
         new java.util.concurrent.atomic.AtomicReference[String](null)
       val schema = s.read.parquet(srcDir).schema
@@ -851,7 +842,7 @@ object GraphPack {
       "q308_warm_stream_lpa", WARM_LPA_ORACLE) { (s, d) =>
       val srcDir = stagedTaggedBatches("graft-q308-src-",
         jaccardPairs(s, d).select("doc_a", "doc_b"), "doc_a", "doc_b", d)
-      val store = clearedStore(d, "graft-q308-lpa-")
+      val store = Stage.cleared("graft-q308-lpa-", d)
       val latestLabels =
         new java.util.concurrent.atomic.AtomicReference[String](null)
       val schema = s.read.parquet(srcDir).schema
@@ -1019,7 +1010,7 @@ object GraphPack {
          |FROM comp
          |ORDER BY cluster_id, doc_id""".stripMargin) { (s, d) =>
       val srcDir = stagedPairBatches(s, d)
-      val store = clearedStore(d, "graft-q194-cc-")
+      val store = Stage.cleared("graft-q194-cc-", d)
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
@@ -1144,7 +1135,7 @@ object GraphPack {
     QueryDef(
       "q200_stream_incremental_pagerank", PR_MATCH_ORACLE) { (s, d) =>
       val srcDir = stagedWinnowPairBatches(s, d)
-      val store = clearedStore(d, "graft-q200-pr-")
+      val store = Stage.cleared("graft-q200-pr-", d)
       val latestRanks =
         new java.util.concurrent.atomic.AtomicReference[String](null)
       val schema = s.read.parquet(srcDir).schema
@@ -1206,7 +1197,7 @@ object GraphPack {
       "q303_warm_stream_pagerank", WARM_PR_ORACLE) { (s, d) =>
       val srcDir = stagedTaggedBatches("graft-q303-src-",
         winnowMatchPairs(s, d).select("id_a", "id_b"), "id_a", "id_b", d)
-      val store = clearedStore(d, "graft-q303-warmpr-")
+      val store = Stage.cleared("graft-q303-warmpr-", d)
       val latestRanks =
         new java.util.concurrent.atomic.AtomicReference[String](null)
       val schema = s.read.parquet(srcDir).schema

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import graft.operators.{Multimodal, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2223,7 +2223,7 @@ object MultimodalPack {
     QueryDef(
       "q294_stream_pcm_gate", Q292_ORACLE) { (s, d) =>
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
-      val store = TextDedupPack.clearedStore(d, "graft-q294-pcm-")
+      val store = Stage.cleared("graft-q294-pcm-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2209,7 +2209,7 @@ object RelationalPack {
     QueryDef(
       "q253_stream_hits", HITS_ORACLE) { (s, d) =>
       val srcDir = stagedEventEdgeBatches(s, d)
-      val store = TextDedupPack.clearedStore(d, "graft-q253-hits-")
+      val store = Stage.cleared("graft-q253-hits-", d)
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
@@ -2261,7 +2261,7 @@ object RelationalPack {
       "q304_warm_stream_hits", WARM_HITS_ORACLE) { (s, d) =>
       val srcDir = TextDedupPack.stagedTaggedBatches("graft-q304-src-",
         eventEdges(s, d), "u", "v", d)
-      val store = TextDedupPack.clearedStore(d, "graft-q304-hits-")
+      val store = Stage.cleared("graft-q304-hits-", d)
       val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
@@ -2341,16 +2341,8 @@ object RelationalPack {
   /** One staged 4-file copy of [[eventEdges]] per sf dir — q253's edge
     * stream (the q247 graph arriving incrementally); cf.
     * TextDedupPack.stagedPairBatches. */
-  private val eventEdgeStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedEventEdgeBatches(s: SparkSession, d: String): String =
-    eventEdgeStages.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-q253-src-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
-      eventEdges(s, d).repartition(4)
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
-    })
+    Stage.parquet("graft-q253-src-", d)(eventEdges(s, d).repartition(4))
 
   /** Shared oracle for q247 (batch HITS) and q253 (streaming incremental
     * HITS — same final edge set ⇒ same scores): 4 mutual-reinforcement

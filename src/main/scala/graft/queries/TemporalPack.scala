@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import graft.operators.TemporalJoins
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,21 +95,12 @@ object TemporalPack {
       .orderBy("event_type")
   }
 
-  /** Staged 3-file copy of events per sf dir (cached for the JVM) — q180's
-    * micro-batch replay source, one file per AvailableNow batch. Written
-    * from the ts-normalized load so the stream side reads plain zoned
-    * timestamps. */
-  private val eventStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Staged 3-file copy of events per sf dir — q180's micro-batch replay
+    * source, one file per AvailableNow batch. Written from the
+    * ts-normalized load so the stream side reads plain zoned timestamps. */
   private def stagedEventBatches(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    eventStages.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-q180-src-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
-      Tables.events(s, d).repartition(3)
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
-    })
+    Stage.parquet("graft-q180-src-", d)(Tables.events(s, d).repartition(3))
 
   def all: Seq[QueryDef] = Seq(
 
@@ -174,7 +165,7 @@ object TemporalPack {
     // hours×types-sized.
     QueryDef("q180_stream_cusum", CUSUM_SQL) { (s, d) =>
       val srcDir = stagedEventBatches(s, d)
-      val store = TextDedupPack.clearedStore(d, "graft-q180-hourly-")
+      val store = Stage.cleared("graft-q180-hourly-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -359,7 +350,7 @@ object TemporalPack {
     QueryDef(
       "q285_stream_asof", ASOF_SQL) { (s, d) =>
       val srcDir = stagedEventBatches(s, d)
-      val store = TextDedupPack.clearedStore(d, "graft-q285-asof-")
+      val store = Stage.cleared("graft-q285-asof-", d)
       val o = asofOrders(s, d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import graft.operators.Dedup
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -439,40 +439,6 @@ object TextDedupPack {
   private[queries] def sparkGrams(s: org.apache.spark.sql.SparkSession, d: String) =
     sparkGramsOf(Tables.documentsSpread(s, d))
 
-  /** One staged multi-split copy of `documents` per sf dir (4 parquet
-    * files), built on first use and reused for the JVM's lifetime — the
-    * replayable "4 ingest days" source q85 streams with
-    * maxFilesPerTrigger=1. Deleted at JVM exit (cf. VectorPack.ivfLayout).
-    */
-  private[queries] val docBatchStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** One reusable per-batch-artifact store dir per (prefix, sf dir) —
-    * cf. docBatchStages: the dir and its JVM-exit cleanup hook are created
-    * once; each invocation clears the previous run's contents so min-of-2
-    * bench plus correctness runs in one JVM don't accumulate dirs or
-    * shutdown hooks. q85 stores HLL sketches here, q130 Count-Min grids. */
-  private[queries] val sketchStores =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  /** Peek the store directory a prior run of `clearedStore(d, prefix)`
-    * created in THIS JVM, without clearing it — lets the incremental-cost
-    * ledger count the versioned state tables a streaming query left behind
-    * (r16, verdict item 5). */
-  private[graft] def existingStore(d: String, prefix: String): Option[java.nio.file.Path] =
-    Option(sketchStores.get(s"$prefix:$d"))
-
-  private[queries] def clearedStore(d: String, prefix: String): java.nio.file.Path = {
-    val p = sketchStores.computeIfAbsent(s"$prefix:$d", _ => {
-      val dir = java.nio.file.Files.createTempDirectory(prefix)
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
-      dir
-    })
-    import scala.jdk.CollectionConverters._
-    val children = java.nio.file.Files.list(p).iterator().asScala.toSeq
-    children.foreach(graft.streaming.Streams.deleteRecursively)
-    p
-  }
-
   /** Append one micro-batch's increments for SEVERAL logical store
     * tables as ONE write job: the frames are null-padded to the union
     * schema, tagged with a `kind` discriminator, unioned, and written
@@ -595,29 +561,17 @@ object TextDedupPack {
     kids.exists(k => k.isFile && k.getName.endsWith(".parquet")) ||
       kids.exists(k => k.isDirectory && hasParquetPart(k))
   }
+  /** One staged 4-split copy of `documents` per sf dir — the replayable
+    * "4 ingest days" source q85 streams with maxFilesPerTrigger=1. */
   private[graft] def stagedDocBatches(s: org.apache.spark.sql.SparkSession, d: String): String =
-    docBatchStages.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-q85-src-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
-      Tables.documents(s, d).repartition(4)
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
-    })
+    Stage.parquet("graft-q85-src-", d)(Tables.documents(s, d).repartition(4))
 
   /** One staged 4-file copy of the exact-Jaccard PAIR list per sf dir —
     * the match-edge stream q194 ingests with maxFilesPerTrigger=1 (the
-    * "pairs arrive as candidates are discovered" shape). Built on first
-    * use, deleted at JVM exit; cf. [[stagedDocBatches]]. */
-  private[queries] val pairBatchStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * "pairs arrive as candidates are discovered" shape). */
   private[queries] def stagedPairBatches(s: org.apache.spark.sql.SparkSession, d: String): String =
-    pairBatchStages.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-q194-src-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
-      jaccardPairs(s, d).select("doc_a", "doc_b").repartition(4)
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
-    })
+    Stage.parquet("graft-q194-src-", d)(
+      jaccardPairs(s, d).select("doc_a", "doc_b").repartition(4))
 
 
   /** Stage an edge list as 4 SINGLE-FILE parquet batches in DETERMINISTIC
@@ -631,9 +585,7 @@ object TextDedupPack {
     * (FileStreamSource sorts candidates by modification time). An empty
     * tag still writes its one empty part file (coalesce(1) commits a
     * single task), so batchId always equals tag. Built on first use per
-    * (prefix, sf dir), deleted at JVM exit; cf. [[stagedDocBatches]]. */
-  private[queries] val taggedBatchStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * (prefix, sf dir). */
   private[queries] def stagedTaggedBatches(
       prefix: String, pairs: org.apache.spark.sql.DataFrame,
       ca: String, cb: String, d: String): String = {
@@ -645,7 +597,7 @@ object TextDedupPack {
     }
     // try/finally: if a batch write throws mid-build, the persisted
     // tagged frame must still release (ADVICE r18 — it leaked for the
-    // session on failure, alongside the computeIfAbsent mapping)
+    // session on failure)
     try stagedOrderedBatches(prefix, d,
       (0 until 4).map(b => () =>
         tagged.filter(col("__tag") === b.toLong).select(ca, cb)))
@@ -659,11 +611,10 @@ object TextDedupPack {
   private[queries] def stagedOrderedBatches(
       prefix: String, d: String,
       batches: Seq[() => org.apache.spark.sql.DataFrame]): String =
-    taggedBatchStages.computeIfAbsent(s"$prefix:$d", _ => {
-      val dir = java.nio.file.Files.createTempDirectory(prefix)
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
+    Stage.once(prefix, d) {
+      val dir = Stage.scratch(prefix)
       batches.zipWithIndex.foreach { case (mk, b) =>
-        val tmp = java.nio.file.Files.createTempDirectory(s"$prefix-tmp-")
+        val tmp = Stage.scratch(s"$prefix-tmp-")
         mk().coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
           .find(_.getName.endsWith(".parquet"))
@@ -680,22 +631,15 @@ object TextDedupPack {
         graft.streaming.Streams.deleteRecursively(tmp)
       }
       dir.toString
-    })
+    }
 
   /** One staged 4-file copy of the WINNOW match-pair list per sf dir —
     * q200's edge stream (the q109 graph arriving incrementally); cf.
     * [[stagedPairBatches]] (which stages the q67/q194 Jaccard pairs). */
-  private[queries] val winnowPairStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def stagedWinnowPairBatches(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    winnowPairStages.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files.createTempDirectory("graft-q200-src-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(dir))
-      winnowMatchPairs(s, d).select("id_a", "id_b").repartition(4)
-        .write.mode("overwrite").parquet(dir.toString)
-      dir.toString
-    })
+    Stage.parquet("graft-q200-src-", d)(
+      winnowMatchPairs(s, d).select("id_a", "id_b").repartition(4))
 
   /** Spark side of [[pairsSql]]: exact n-gram Jaccard near-dup pairs
     * (doc_a, doc_b, jaccard ≥ 0.5), unordered. Shared by q27 (pair listing),
@@ -1280,9 +1224,9 @@ object TextDedupPack {
         |FROM fp GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val norm = docFp
       val srcDir = stagedDocBatches(s, d)
-      // one reusable store per sf dir, cleared per invocation; deleted at
-      // JVM exit, not eagerly — the returned plan lazily reads it
-      val store = clearedStore(d, "graft-q85-sketches-")
+      // one reusable store per sf dir, cleared per invocation; never
+      // deleted eagerly — the returned plan lazily reads it
+      val store = Stage.cleared("graft-q85-sketches-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1351,7 +1295,7 @@ object TextDedupPack {
       "q298_stream_kmv", KMV_SQL) { (s, d) =>
       val bk = udaf(new graft.functions.BottomKLongs(64))
       val srcDir = stagedDocBatches(s, d)
-      val store = clearedStore(d, "graft-q298-kmv-")
+      val store = Stage.cleared("graft-q298-kmv-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -2246,7 +2190,7 @@ object TextDedupPack {
     // compactable to O(D·W) by re-summing.
     QueryDef("q130_stream_countmin", CM_ORACLE) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
-      val store = clearedStore(d, "graft-q130-grid-")
+      val store = Stage.cleared("graft-q130-grid-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -2286,7 +2230,7 @@ object TextDedupPack {
         |ORDER BY source, rk""".stripMargin) { (s, d) =>
       val topk = udaf(new graft.functions.TopKRows(5))
       val srcDir = stagedDocBatches(s, d)
-      val store = clearedStore(d, "graft-q139-topk-")
+      val store = Stage.cleared("graft-q139-topk-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -2659,7 +2603,7 @@ object TextDedupPack {
     // oracle-checked end to end instead of rows-only.
     QueryDef("q205_stream_hll_merge", HLL_ORACLE_STREAM) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
-      val store = clearedStore(d, "graft-q205-hll-")
+      val store = Stage.cleared("graft-q205-hll-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -3318,7 +3262,7 @@ object TextDedupPack {
            |ORDER BY cluster_id, doc_id""".stripMargin
       }) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
-      val store = clearedStore(d, "graft-q305-recrawl-")
+      val store = Stage.cleared("graft-q305-recrawl-", d)
       val latest = new java.util.concurrent.atomic.AtomicLong(-1L)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
@@ -3541,7 +3485,7 @@ object TextDedupPack {
               .as("text"))
         }
       })
-      versionedRecrawlClusters(s, srcDir, clearedStore(d, "graft-q306-recrawl-"))
+      versionedRecrawlClusters(s, srcDir, Stage.cleared("graft-q306-recrawl-", d))
     },
 
     // ---- q309: recrawl DELETIONS — right-to-be-forgotten propagation -------
@@ -3632,7 +3576,7 @@ object TextDedupPack {
             .filter(pmod(col("doc_id"), lit(5)) === b.toLong)
             .select(col("doc_id"), lit("").as("text"))
       })
-      versionedRecrawlClusters(s, srcDir, clearedStore(d, "graft-q309-recrawl-"))
+      versionedRecrawlClusters(s, srcDir, Stage.cleared("graft-q309-recrawl-", d))
     },
 
   )

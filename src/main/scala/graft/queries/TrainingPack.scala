@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Stage, Tables}
 import graft.operators.{Occupancy, Packing, Redact, Sampling}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -918,7 +918,7 @@ object TrainingPack {
       // discipline: derived eval-side state lives in storage, not cache.
       // The build cost is the same one pass the persist materialization
       // paid.
-      val teDir = TextDedupPack.clearedStore(d, "graft-q153-te-")
+      val teDir = Stage.cleared("graft-q153-te-", d)
       grams.filter(col("split") === "test")
         .select(col("doc_id").as("test_doc_id"), col("gram"))
         .write.mode("overwrite").parquet(teDir.toString)
@@ -926,7 +926,7 @@ object TrainingPack {
       val bloom = graft.functions.BloomFuncs.build(
         te, col("gram"), expectedItems = 1000000L)
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
-      val store = TextDedupPack.clearedStore(d, "graft-q153-flags-")
+      val store = Stage.cleared("graft-q153-flags-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1255,7 +1255,7 @@ object TrainingPack {
     QueryDef(
       "q158_stream_priority_sample", PRIO_SAMPLE_SQL) { (s, d) =>
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
-      val store = TextDedupPack.clearedStore(d, "graft-q158-prio-")
+      val store = Stage.cleared("graft-q158-prio-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1785,7 +1785,7 @@ object TrainingPack {
     QueryDef(
       "q216_stream_drift_gate", PSI_ORACLE) { (s, d) =>
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
-      val store = TextDedupPack.clearedStore(d, "graft-q216-psi-")
+      val store = Stage.cleared("graft-q216-psi-", d)
       val schema = s.read.parquet(srcDir).schema
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -2903,18 +2903,9 @@ object TrainingPack {
     * avg_nll DOUBLE), so every consumer stays hash-identical. q245 keeps
     * the TOKEN-level stream (per-domain sums need it) — cf.
     * TextDedupPack's staged walk corpus for the pattern. */
-  private[queries] val nllPerDocStages =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[queries] def unigramNllPerDoc(s: org.apache.spark.sql.SparkSession,
-                               d: String): org.apache.spark.sql.DataFrame = {
-    val dir = nllPerDocStages.computeIfAbsent(d, _ => {
-      val p = java.nio.file.Files.createTempDirectory("graft-nllpd-")
-      sys.addShutdownHook(graft.streaming.Streams.deleteRecursively(p))
-      unigramNllPerDocBuild(s, d).write.mode("overwrite").parquet(p.toString)
-      p.toString
-    })
-    s.read.parquet(dir)
-  }
+                               d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Stage.parquet("graft-nllpd-", d)(unigramNllPerDocBuild(s, d)))
 
   private[queries] def unigramNllPerDocBuild(s: org.apache.spark.sql.SparkSession,
                                     d: String): org.apache.spark.sql.DataFrame = {

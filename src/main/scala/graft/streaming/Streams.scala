@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import graft.Stage
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -258,7 +259,7 @@ object Streams {
   def runToMemory(
       spark: SparkSession, agg: DataFrame, name: String,
       mode: String = "complete", statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val ckpt = Files.createTempDirectory(s"graft-ckpt-$name-")
+    val ckpt = Stage.scratch(s"graft-ckpt-$name-")
     // try/finally spans start() too: a bad source/checkpoint config throws
     // from start(), and the fresh checkpoint dir must not outlive it
     try {
@@ -294,7 +295,7 @@ object Streams {
     */
   def runForeachBatch(spark: SparkSession, stream: DataFrame,
                       f: (DataFrame, Long) => Unit): Unit = {
-    val ckpt = Files.createTempDirectory("graft-ckpt-feb-")
+    val ckpt = Stage.scratch("graft-ckpt-feb-")
     // try/finally spans start() too (cf. runToMemory): a config error that
     // throws from start() must still clean up the fresh checkpoint dir
     try {

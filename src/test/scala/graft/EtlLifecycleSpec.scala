@@ -19,7 +19,7 @@ class EtlLifecycleSpec extends AnyFunSuite {
   import spark.implicits._
 
   // Derby writes derby.log to derby.system.home; keep it out of the repo.
-  System.setProperty("derby.system.home", Files.createTempDirectory("graft-derby-").toString)
+  System.setProperty("derby.system.home", Stage.scratch("graft-derby-").toString)
 
   private val wireJson = Seq(
     """{"id":"1","icao":"AAAA","name":"alpha","lat":"10","lon":"20"}""",
@@ -32,7 +32,7 @@ class EtlLifecycleSpec extends AnyFunSuite {
   private def wire = wireJson.toDF("s").select(encode($"s", "UTF-8").as("value"))
 
   test("runBatch: count-gate → parse → clean → stats → sink → read-back (parquet)") {
-    val out = Files.createTempDirectory("graft-lifecycle-").toString + "/cleaned"
+    val out = Stage.scratch("graft-lifecycle-").toString + "/cleaned"
     val (nClean, nStats) = Etl.runBatch(spark, wire,
       df => df.write.mode("overwrite").parquet(out))
     assert(nClean == 3)   // ids 1, 2, 6 survive
@@ -94,7 +94,7 @@ class EtlLifecycleSpec extends AnyFunSuite {
       .toDF("s").select(encode($"s", "UTF-8").as("value"))
     val parsed = Etl.parse(cleanedWire)
     val wired = Etl.toWire(parsed, "id", Seq("id", "icao", "name", "lat", "lon"))
-    val path = Files.createTempDirectory("graft-wire-").toString + "/wire"
+    val path = Stage.scratch("graft-wire-").toString + "/wire"
     Sinks.wireParquet(wired, path)
     val back = spark.read.parquet(path)
     assert(back.columns.toSeq == Seq("key", "value"))
@@ -129,7 +129,7 @@ class EtlLifecycleSpec extends AnyFunSuite {
   }
 
   test("compactParquet bounds file count and rows per file") {
-    val dir = Files.createTempDirectory("graft-compact-").toString + "/docs"
+    val dir = Stage.scratch("graft-compact-").toString + "/docs"
     val docs = Tables.documents(spark, TestSpark.sf)
     graft.sinks.Sinks.compactParquet(docs, dir, numFiles = 3, maxRecordsPerFile = 100)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
@@ -140,7 +140,7 @@ class EtlLifecycleSpec extends AnyFunSuite {
   }
 
   test("HttpSource.fromFile reads a fixture body (S4 fixture leg)") {
-    val f = Files.createTempFile("graft-page-", ".json")
+    val f = Stage.scratch("graft-page-").resolve("page.json")
     Files.writeString(f, """{"items":[{"id":"9","name":"iota","lat":"0","lon":"0"}]}""")
     val items = Etl.splitItems(HttpSource.fromFile(spark, f.toString), "body")
     assert(items.select("id").as[String].collect().toSeq == Seq("9"))

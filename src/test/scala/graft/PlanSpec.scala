@@ -215,7 +215,7 @@ class PlanSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sf)
     val centroids = graft.operators.Ivf.kmeansCentroids(emb, "vec_id", "embedding",
       nlist = 8, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-").toString + "/corpus"
+    val dir = Stage.scratch("graft-ivf-").toString + "/corpus"
     graft.operators.Ivf.writeCellPartitioned(emb, "vec_id", "embedding", centroids, dir)
     val probe = graft.operators.Ivf.ivfTopKPartitioned(
       spark, dir, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -263,7 +263,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet write + filtered read prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part-").toString + "/docs"
+    val dir = Stage.scratch("graft-part-").toString + "/docs"
     Tables.documents(spark, sf).write.partitionBy("lang").mode("overwrite").parquet(dir)
     val s = plan(spark.read.parquet(dir).filter(org.apache.spark.sql.functions.col("lang") === "en"))
       .toString

@@ -89,7 +89,7 @@ class SimilaritySpec extends AnyFunSuite {
       .select("qid", "nid", "rk").as[(Long, Long, Long)].collect().toSet
     val centroids = graft.operators.Ivf.kmeansCentroids(
       corpus, "vec_id", "embedding", nlist = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-eq-")
+    val dir = Stage.scratch("graft-ivf-eq-")
     try {
       graft.operators.Ivf.writeCellPartitioned(
         corpus, "vec_id", "embedding", centroids, dir.toString)
@@ -180,7 +180,7 @@ class SimilaritySpec extends AnyFunSuite {
     import graft.operators.Ivf
     import org.apache.spark.sql.SaveMode
     val centroids = Ivf.kmeansCentroids(emb, "vec_id", "embedding", nlist = 8, iters = 1)
-    val root = java.nio.file.Files.createTempDirectory("graft-q98-spec-")
+    val root = Stage.scratch("graft-q98-spec-")
     try {
       val batchDir = s"$root/batch"
       val streamDir = s"$root/stream"

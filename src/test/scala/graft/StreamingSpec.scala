@@ -75,7 +75,7 @@ class StreamingSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Long, java.sql.Timestamp)]
     val sessions = Streams.sessionize(
       mem.toDF.toDF("user_id", "event_id", "ts"), gapSec = 1800, delay = "4 hours")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-late-").toString
+    val ckpt = Stage.scratch("graft-late-").toString
     val q = sessions.toDF.writeStream.outputMode("append")
       .format("memory").queryName("t_late")
       .option("checkpointLocation", ckpt).start()

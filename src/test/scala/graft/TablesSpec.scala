@@ -15,7 +15,7 @@ class TablesSpec extends AnyFunSuite {
   private def roundTrip(values: Seq[java.lang.Long]): org.apache.spark.sql.DataFrame = {
     // write plain INT64 (no timestamp annotation) and read it back, exactly
     // what a regenerated fixture with un-annotated epoch columns would give
-    val dir = java.nio.file.Files.createTempDirectory("graft-ts-").toString + "/t"
+    val dir = Stage.scratch("graft-ts-").toString + "/t"
     spark.createDataFrame(
       java.util.Arrays.asList(values.map(org.apache.spark.sql.Row(_)): _*),
       org.apache.spark.sql.types.StructType(Seq(
