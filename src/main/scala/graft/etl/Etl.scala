@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,7 +21,9 @@ import org.apache.spark.sql.types._
   * Scale notes: every step here is a narrow map — no shuffle until the
   * stats aggregate (partial+final hash agg). The parse/clean path is pure
   * codegen'd Catalyst expressions (no UDFs), so it whole-stage-codegens
-  * into the scan.
+  * into the scan. [[runBatch]] runs that path as one narrow job before
+  * its sink: the reference's two `count()` actions become two
+  * `Observation`s on the job that fills the batch's cache.
   */
 object Etl {
 
@@ -100,26 +102,42 @@ object Etl {
       .select("item.*")
 
   /** F3 + full lifecycle: the reference's batch job
-    * (`spark_airports_final.py`, §3.1) with the 8-actions-no-cache quirk
-    * fixed by a single persist. Returns (cleanedCount, stats row count)
-    * after writing `cleaned` via `sink`; short-circuits on empty input
-    * exactly like the reference's `if count > 0` gate.
+    * (`spark_airports_final.py`, §3.1) as ONE Spark job before the sink.
+    * The reference runs 8 uncached actions; here one narrow `noop` write
+    * fills the persisted cleaned frame, and its actions map as follows:
+    *  - #1 `df_kafka.count()` (the F3 gate) → an `Observation` on the wire;
+    *  - #2 `df_clean.count()` → an `Observation` on the cleaned frame;
+    *    both are fulfilled by the materializing job, no extra scan;
+    *  - #3-4 `show()` → not run (display only);
+    *  - #5 the A1 stats `show()` → not run: it is one global-aggregate row
+    *    over any input, so its row count is the constant 1;
+    *  - #6 the durable write → `sink`, handed the cached frame;
+    *  - #7-8 the read-back → the sink's business.
+    *
+    * Returns (clean rows, stats row count = 1). Empty input short-circuits
+    * to (0, 0) without calling `sink`, like the reference's `if count > 0`
+    * gate; the gate counts wire rows, so an all-dirty batch still calls
+    * `sink` (with an empty frame) and returns (0, 1).
     */
   def runBatch(
       spark: SparkSession,
       wire: DataFrame,
       sink: DataFrame => Unit): (Long, Long) = {
-    val n = wire.count()              // A2 action #1, gate input
-    if (n == 0) (0L, 0L)              // F3 empty-topic short-circuit
-    else {
-      val cleaned = clean(parse(wire)).persist()
-      try {
-        val nClean = cleaned.count()  // A2 action #2
-        val st = stats(cleaned)
-        val nStats = st.count()
+    val nIn = Observation()           // A2 count #1: wire rows, the F3 gate
+    val nClean = Observation()        // A2 count #2: clean rows
+    val cleaned = clean(parse(wire.observe(nIn, count(lit(1)).as("n"))))
+      .observe(nClean, count(lit(1)).as("n"))
+      .persist()
+    try {
+      // the one job: fills the cache and fulfils both observations
+      cleaned.write.format("noop").mode("overwrite").save()
+      if (observedRows(nIn) == 0) (0L, 0L)  // F3 empty-topic short-circuit
+      else {
         sink(cleaned)                 // K1-equivalent durable write
-        (nClean, nStats)
-      } finally { cleaned.unpersist(); () }
-    }
+        (observedRows(nClean), 1L)
+      }
+    } finally { cleaned.unpersist(); () }
   }
+
+  private def observedRows(o: Observation): Long = o.get("n").asInstanceOf[Long]
 }

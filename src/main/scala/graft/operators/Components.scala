@@ -111,14 +111,13 @@ object Components {
     // round's — are freed by the ContextCleaner once unreferenced, not
     // deterministically (the r12 form's CacheScope/unpersist no longer
     // has anything to release, so the parameter is gone).
-    val eInit = edges
+    val (eInit, n0) = Observe.checkpointCounted(edges
       .select(
         greatest(col(srcCol), col(dstCol)).as("u"),
         least(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    var n = eInit.count()
+      .distinct())
+    var n = n0
     var chk: Option[(java.math.BigDecimal, Long)] = None
     var converged = n == 0L
     var rounds = 0

@@ -153,9 +153,8 @@ object Graph {
   def hits(edges: DataFrame, src: String, dst: String,
            iters: Int): (DataFrame, DataFrame) = {
     val spark = edges.sparkSession
-    val e = edges.select(col(src).as("u"), col(dst).as("v")).distinct()
-      .localCheckpoint()
-    val nEdges = e.count()
+    val (e, nEdges) = Observe.checkpointCounted(
+      edges.select(col(src).as("u"), col(dst).as("v")).distinct())
     val w = Components.roundWidth(
       spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
     val s2 = Components.narrowClone(spark, w)
@@ -180,9 +179,8 @@ object Graph {
                     prevHubs: DataFrame, iters: Int)
       : (DataFrame, DataFrame) = {
     val spark = edges.sparkSession
-    val e = edges.select(col(src).as("u"), col(dst).as("v")).distinct()
-      .localCheckpoint()
-    val nEdges = e.count()
+    val (e, nEdges) = Observe.checkpointCounted(
+      edges.select(col(src).as("u"), col(dst).as("v")).distinct())
     val w = Components.roundWidth(
       spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
     val s2 = Components.narrowClone(spark, w)
@@ -246,8 +244,7 @@ object Graph {
     // [[Components.connectedComponents]]). The single reused narrow
     // exchange inside rankRounds reads these blocks once; they free via
     // the ContextCleaner when the returned checkpoint drops them.
-    val ed = e.join(deg, "u").localCheckpoint()
-    val nEdges = ed.count()
+    val (ed, nEdges) = Observe.checkpointCounted(e.join(deg, "u"))
     val w = Components.roundWidth(
       spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
     val s2 = Components.narrowClone(spark, w)
@@ -269,8 +266,7 @@ object Graph {
     val spark = edges.sparkSession
     val e = edges.select(col(src).as("u"), col(dst).as("v"))
     val deg = e.groupBy("u").agg(count(lit(1)).as("od"))
-    val ed = e.join(deg, "u").localCheckpoint()
-    val nEdges = ed.count()
+    val (ed, nEdges) = Observe.checkpointCounted(e.join(deg, "u"))
     val w = Components.roundWidth(
       spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
     val s2 = Components.narrowClone(spark, w)
@@ -335,7 +331,7 @@ object Graph {
     val e = edges.select(col(src).as("u"), col(dst).as("v"))
     val deg = e.groupBy("u").agg(count(lit(1)).as("od"))
     // eager checkpoint for cross-session rebinding — see fixedPointPageRank
-    val ed = e.join(deg, "u").localCheckpoint()
+    val (ed, nEdges) = Observe.checkpointCounted(e.join(deg, "u"))
     // nodes = BOTH endpoint sets, not just out-degree holders: a sink (or
     // an isolated seed on a directed graph) has no out-edges but must
     // still appear — and a seed among them must keep its restart mass.
@@ -348,7 +344,6 @@ object Graph {
     // distinct rides), and that exchange materializes once.
     val nodes = ed.select(col("u").as("id"))
       .unionByName(ed.select(col("v").as("id")))
-    val nEdges = ed.count()
     val w = Components.roundWidth(
       spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
     val s2 = Components.narrowClone(spark, w)

@@ -31,9 +31,8 @@ object Successor {
     * ahead, mn = min id over the window [v .. f^(2^rounds − 1)(v)]. */
   def doubled(succ: DataFrame, rounds: Int): DataFrame = {
     val spark = succ.sparkSession
-    val s0 = succ.select(col("v"), col("p"), col("v").as("mn"))
-      .localCheckpoint()
-    val n = s0.count()
+    val (s0, n) = Observe.checkpointCounted(
+      succ.select(col("v"), col("p"), col("v").as("mn")))
     val w = Components.roundWidth(
       spark.conf.get("spark.sql.shuffle.partitions").toInt, n)
     val s2 = Components.narrowClone(spark, w)

@@ -121,7 +121,7 @@ object EtlPack {
     },
 
     // ---- q36: the full §3.1 lifecycle as a checked entry -------------------
-    // Drives Etl.runBatch (F3 count-gate, A2 actions, persist) with a
+    // Drives Etl.runBatch (F3 count-gate, A2 counts, persist) with a
     // parquet sink (K1-surrogate durable write), then answers from the
     // READ-BACK table — the oracle checking this row-for-row means the
     // write+read-back leg round-tripped losslessly, the reference's own

@@ -937,12 +937,11 @@ object GraphPack {
       }) { (s, d) =>
       val jp = jaccardPairs(s, d)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val ed = jp.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(jp.select(col("b").as("u"), col("a").as("v")))
-        .localCheckpoint()
+      val (ed, nEdges) = graft.operators.Observe.checkpointCounted(
+        jp.select(col("a").as("u"), col("b").as("v"))
+          .unionAll(jp.select(col("b").as("u"), col("a").as("v"))))
       // no unpersist of ed: localCheckpoint-backed (cf. q144's note)
       val peeled = {
-        val nEdges = ed.count()
         val w = graft.operators.Components.roundWidth(
           s.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
         val s2 = graft.operators.Components.narrowClone(s, w)

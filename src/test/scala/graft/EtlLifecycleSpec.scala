@@ -29,7 +29,8 @@ class EtlLifecycleSpec extends AnyFunSuite {
     """{"id":"5","icao":"EEEE","name":"trunc","lat":"1""",       // invalid JSON
     """{"id":"6","icao":"FFFF","name":"zeta","lat":"-89","lon":"179"}""")
 
-  private def wire = wireJson.toDF("s").select(encode($"s", "UTF-8").as("value"))
+  private def wireOf(json: Seq[String]) = json.toDF("s").select(encode($"s", "UTF-8").as("value"))
+  private def wire = wireOf(wireJson)
 
   test("runBatch: count-gate → parse → clean → stats → sink → read-back (parquet)") {
     val out = Stage.scratch("graft-lifecycle-").toString + "/cleaned"
@@ -53,6 +54,28 @@ class EtlLifecycleSpec extends AnyFunSuite {
     val (nClean, nStats) = Etl.runBatch(spark, empty, _ => sinkCalls += 1)
     assert((nClean, nStats) == ((0L, 0L)))
     assert(sinkCalls == 0)
+  }
+
+  test("runBatch runs exactly one Spark job before it calls the sink") {
+    val counter = new TestSpark.JobCounter
+    var jobsBeforeSink = -1
+    val (nClean, nStats) =
+      try Etl.runBatch(spark, wire, _ => jobsBeforeSink = counter.jobs)
+      finally counter.close()
+    assert((nClean, nStats) == ((3L, 1L)))
+    assert(jobsBeforeSink == 1)
+  }
+
+  test("runBatch gates on wire rows: an all-dirty batch still reaches the sink") {
+    val dirty = wireOf(wireJson.slice(2, 5)) // ids 3-5: bad coord, '' coord, truncated
+    var sunk = Seq.empty[Long]
+    val (nClean, nStats) = Etl.runBatch(spark, dirty, df => sunk :+= df.count())
+    assert((nClean, nStats) == ((0L, 1L)))
+    assert(sunk == Seq(0L))
+  }
+
+  test("Etl.stats is one row over empty input (runBatch's stats row count)") {
+    assert(Etl.stats(Etl.clean(Etl.parse(wire.filter(lit(false))))).collect().length == 1)
   }
 
   test("JDBC overwrite write + single-task read-back against embedded Derby (K1/S3)") {
