@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Connected components over an edge list — the clustering step that turns
@@ -29,112 +29,41 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Shared measured-shuffle-width formula for iterative rounds (CC,
-    * PageRank, personalized PR, LPA): ~2M edge rows per partition, at
-    * least 1, never above the session's configured width. One definition
-    * so the rows-per-partition target cannot drift between operators. */
-  private[graft] def roundWidth(configuredWidth: Int, rows: Long): Int =
-    math.max(1L, math.min(configuredWidth.toLong, rows / 2000000L + 1L)).toInt
-
-  /** A PRIVATE session clone whose `spark.sql.shuffle.partitions` is the
-    * measured round width `w` — the mechanism that lets iterative rounds
-    * (CC / PageRank / PPR / LPA) run every exchange, aggregation, and
-    * checkpoint at the width the data warrants WITHOUT mutating the
-    * caller's session. `SessionBridge.cloneSession` (the shim
-    * `Streams.runToMemory` already uses for scoped conf overrides) shares
-    * the SparkContext, the CacheManager, and all executors, and COPIES
-    * the caller's entire runtime SQLConf — so the clone inherits
-    * GraftSession.tune's pins plus any caller-side overrides (a test's
-    * broadcast threshold, say) verbatim, and conf changes made here are
-    * invisible to concurrent queries on the caller's session, which was
-    * the r11 objection to narrowing the shared conf around the rounds.
-    * Narrow-width planning matters because Catalyst sizes EVERY exchange
-    * it inserts (aggregation shuffles, EnsureRequirements repartitions)
-    * and every `repartition(cols*)` from the session conf: with the
-    * aggregations at the narrow width their partial hash agg still runs
-    * map-side (combine preserved), the per-round `localCheckpoint`
-    * stores `w` partitions instead of the session's 32, and a 6-round CC
-    * on an 8k-edge graph schedules ~10 tasks per round instead of ~130
-    * (the r12 in-plan `repartition(w, …)` form narrowed only the
-    * exchanges it spelled out, leaving the agg shuffles, checkpoints and
-    * re-scan stages at full width — measured 1.5–2.5× slower across the
-    * iterative family at sf0.1).
-    */
-  private[graft] def narrowClone(spark: SparkSession, w: Int): SparkSession = {
-    val s2 = org.apache.spark.sql.graftbridge.SessionBridge.cloneSession(spark)
-    s2.conf.set("spark.sql.shuffle.partitions", w.toString)
-    s2
-  }
-
-  /** Re-resolve `df`'s plan in `target` (a session of the same
-    * SparkContext) so execution picks up that session's conf — delegates
-    * to `SessionBridge.rebind` (no catalog round-trip; the earlier
-    * global-temp-view form churned the shared catalog per call).
-    */
-  private[graft] def rebind(df: DataFrame, target: SparkSession): DataFrame =
-    org.apache.spark.sql.graftbridge.SessionBridge.rebind(df, target)
-
   /** (id, component) for every node that appears in `edges`; `component` is
     * the minimum node id of the connected component. Self-loops and
     * duplicate/reversed edges are tolerated. Nodes with no edges don't
     * appear — left-join the vertex set and coalesce to taste.
     *
-    * Round shuffle width is sized from the MEASURED edge count (each
-    * round's count already rides the checkpoint job): ~2M edge rows per
-    * partition, clamped to [1, session `spark.sql.shuffle.partitions`].
-    * Rationale: the edge set contracts monotonically, and AQE's default
-    * `coalescePartitions.parallelismFirst=true` refuses to coalesce below
-    * `defaultParallelism` — so late rounds over a few thousand surviving
-    * edges were scheduling full-width stages whose task-launch overhead
-    * dominated the round (measured: 5 rounds at width 32 = 6.3 s vs 3.0 s
-    * at width 4 on an 8k-edge graph). At 10⁹ edges the same formula gives
-    * ~500 partitions — the width a cluster wants — and the cap means a
-    * submit-time `spark.sql.shuffle.partitions` is never exceeded. The
-    * rounds run in a [[narrowClone]] of the caller's session (re-sized per
-    * round as the edge set contracts), so every exchange — the stars'
-    * neighborhood shuffles, the map-side-combined dedup aggregations, the
-    * per-round checkpoint — plans at the measured width while the
-    * caller's session conf is never touched and concurrent queries on it
-    * are unaffected by construction.
+    * The rounds run in a [[Rounds]] scope re-sized per round from the
+    * measured edge count (each round's count already rides the
+    * checkpoint job): the edge set contracts monotonically, and late
+    * rounds over a few thousand surviving edges at full width spent the
+    * round on task launch (5 rounds at width 32 = 6.3 s vs 3.0 s at
+    * width 4 on an 8k-edge graph). Every exchange — the stars'
+    * neighborhood shuffles, the map-side-combined dedup aggregations,
+    * the per-round checkpoint — plans at the measured width; the
+    * caller's session conf is never touched.
     */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 25): DataFrame = {
-    // canonical big→small orientation, self-loops dropped, one row per pair.
-    // Eager localCheckpoint, NOT persist: the rounds run in a session
-    // clone, and a checkpoint-backed LogicalRDD is a plain block scan
-    // valid in any session of the context — whereas cache substitution is
-    // plan-matching against the shared CacheManager, which a rebound plan
-    // does not reliably hit (measured: a cache miss re-ran the entire
-    // upstream candidate-pair pipeline 2–4× inside round 0 — 12 s for a
-    // 256-edge graph). The blocks — this one's and each superseded
-    // round's — are freed by the ContextCleaner once unreferenced, not
-    // deterministically (the r12 form's CacheScope/unpersist no longer
-    // has anything to release, so the parameter is gone).
-    val (eInit, n0) = Observe.checkpointCounted(edges
+    // canonical big→small orientation, self-loops dropped, one row per pair
+    var (e, n) = Rounds.narrowed(edges
       .select(
         greatest(col(srcCol), col(dstCol)).as("u"),
         least(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
-    var n = n0
     var chk: Option[(java.math.BigDecimal, Long)] = None
     var converged = n == 0L
     var rounds = 0
     val spark = edges.sparkSession
-    val configuredWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // all rounds run in the conf-isolated narrow clone; re-sized per round
-    // below as the edge set contracts
-    val s2 = narrowClone(spark, roundWidth(configuredWidth, n))
-    var e = rebind(eInit, s2)
     // `<= maxRounds`: detection consumes a round — the loop only learns it
     // converged one iteration AFTER the edge set stops changing, so a graph
     // needing exactly maxRounds productive rounds gets one extra detection
     // round instead of a spurious failure.
     while (!converged && rounds <= maxRounds) {
-      val tRound = System.nanoTime()
-      s2.conf.set("spark.sql.shuffle.partitions",
-        roundWidth(configuredWidth, n).toString)
+      Rounds.resize(e, spark, n)
       // the observe metric rides the SAME job that materializes the eager
       // localCheckpoint (which also truncates lineage) — no separate count()
       // action per round
@@ -173,9 +102,6 @@ object Components {
         // set-difference so the loop can still terminate
         case _ => next.exceptAll(e).isEmpty
       })
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $rounds: n=$n -> $nNext converged=$converged " +
-          f"(${(System.nanoTime() - tRound) / 1e9}%.2f s)")
       // the superseded round's checkpoint blocks free via the
       // ContextCleaner once `e` is reassigned — Dataset.unpersist would
       // be a no-op on a checkpointed frame
@@ -189,10 +115,8 @@ object Components {
         s"connectedComponents did not converge in $maxRounds productive rounds " +
           "+ 1 detection round (raise maxRounds; expected O(log² n))")
     // fixpoint is a union of stars: every non-min node has exactly one edge
-    // to its component min; the mins label themselves. Rebound to the
-    // CALLER's session — the narrow clone is an implementation detail and
-    // must not leak into the frame the caller composes further.
-    rebind(
+    // to its component min; the mins label themselves.
+    Rounds.back(
       e.select(col("u").as("id"), col("v").as("component"))
         .unionByName(
           e.select(col("v").as("id")).distinct()
@@ -202,8 +126,8 @@ object Components {
 
   /** One large-star + small-star round — the lazy plan
     * [[connectedComponents]] checkpoints per round. Width comes from the
-    * session `e` is bound to (the [[narrowClone]] in production; a
-    * narrowed test session in PlanSpec). Exposed for plan tests: every
+    * session `e` is bound to (the [[Rounds]] scope in production; a
+    * narrowed test scope in PlanSpec). Exposed for plan tests: every
     * exchange in a round — each star's min-table aggregation and its
     * closing `distinct` — is map-side combined and at the clone width,
     * and the edge list itself is never raw-shuffled while the min table
@@ -223,8 +147,8 @@ object Components {
     * the same (v, m) pair) collapses before it is shuffled. The r12 form
     * pre-repartitioned and shipped those duplicates raw — measured
     * 1.5–2.5× slower across the CC family at sf0.1 (q74 2.37 s → 5.85 s).
-    * Inside the [[narrowClone]] that exchange (like every other) plans at
-    * the measured round width.
+    * Inside the [[Rounds]] scope that exchange (like every other) plans
+    * at the measured round width.
     *
     * No explicit repartition anywhere: the neighborhood join is left to
     * Catalyst, which broadcasts the node-sized min table while it fits

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Iterative graph analytics beyond [[Components]]: fixed-point PageRank.
   *
@@ -14,34 +15,24 @@ import org.apache.spark.sql.functions._
   *
   * Scale: each iteration is one keyed join of the degree-annotated edge
   * list against the current rank table and one keyed aggregation — the
-  * standard Pregel-as-join shape. The iteration width is expressed IN THE
-  * standard Pregel-as-join shape. The iterations run inside a
-  * [[Components.narrowClone]] — a conf-isolated `newSession()` whose
-  * `spark.sql.shuffle.partitions` is the measured round width — so every
-  * exchange, aggregation, and checkpoint plans at the width the measured
-  * edge count warrants while the CALLER's session conf is never touched
-  * (the r11 form narrowed the shared conf around the rounds — racy under
-  * concurrent queries; the r12 form spelled the width as in-plan
-  * `repartition(w, key)` of the raw contributions, which pushed the
-  * aggregations' partial step after the exchange — edge-volume rows
-  * shuffled uncombined — and left the agg/checkpoint stages at full
-  * width, measured 1.5–2.5× slower across the family at sf0.1). Inside
-  * the clone the edge list is routed through one hash exchange on the
-  * join key that every iteration reads back, each iteration's only
-  * exchange is the contribution aggregation's map-side-combined shuffle,
-  * and results are rebound to the caller's session before returning.
+  * standard Pregel-as-join shape. The iterations run in a [[Rounds]]
+  * scope at the width the measured edge count warrants. Inside it the
+  * edge list is routed through one hash exchange on the join key that
+  * every iteration reads back, each iteration's only exchange is the
+  * contribution aggregation's map-side-combined shuffle, and results are
+  * rebound to the caller's session before returning.
   */
 object Graph {
 
   /** The lazy iteration plan over a degree-annotated edge list
     * `ed(u, v, od)`: `iters` rounds of damping-0.85 fixed-point PageRank.
-    * Width comes from the session `ed` is bound to — the
-    * [[Components.narrowClone]] in production, a narrowed test session in
-    * PlanSpec. Exposed for plan tests: a spec can assert every exchange
-    * is at the narrow width, that the edge side of each iteration join
-    * introduces no exchange beyond the one reused `repartition`, and that
-    * each iteration's only exchange is the contribution aggregation's —
-    * whose partial (map-side combine) runs inside the join stage.
+    * Width comes from the session `ed` is bound to — the [[Rounds]]
+    * scope in production, a narrowed test scope in PlanSpec. Exposed for
+    * plan tests: a spec can assert every exchange is at the narrow width,
+    * that the edge side of each iteration join introduces no exchange
+    * beyond the one reused `repartition`, and that each iteration's only
+    * exchange is the contribution aggregation's — whose partial
+    * (map-side combine) runs inside the join stage.
     */
   private[graft] def rankRounds(ed: DataFrame, iters: Int): DataFrame = {
     val edP = ed.repartition(col("u"))
@@ -148,18 +139,14 @@ object Graph {
   }
 
   /** [[hitsRounds]] over raw (src, dst) pairs, deduplicated, iterations
-    * in a [[Components.narrowClone]] at the measured width (cf.
-    * [[fixedPointPageRank]]). */
+    * in a [[Rounds]] scope at the measured width. */
   def hits(edges: DataFrame, src: String, dst: String,
            iters: Int): (DataFrame, DataFrame) = {
     val spark = edges.sparkSession
-    val (e, nEdges) = Observe.checkpointCounted(
-      edges.select(col(src).as("u"), col(dst).as("v")).distinct())
-    val w = Components.roundWidth(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
-    val s2 = Components.narrowClone(spark, w)
-    val (h, a) = hitsRounds(Components.rebind(e, s2), iters)
-    (Components.rebind(h, spark), Components.rebind(a, spark))
+    val e = Rounds.narrowed(
+      edges.select(col(src).as("u"), col(dst).as("v")).distinct())._1
+    val (h, a) = hitsRounds(e, iters)
+    (Rounds.back(h, spark), Rounds.back(a, spark))
   }
 
   /** [[hits]] warm-started from a previous hub table `prevHubs(id, s)` —
@@ -179,14 +166,11 @@ object Graph {
                     prevHubs: DataFrame, iters: Int)
       : (DataFrame, DataFrame) = {
     val spark = edges.sparkSession
-    val (e, nEdges) = Observe.checkpointCounted(
-      edges.select(col(src).as("u"), col(dst).as("v")).distinct())
-    val w = Components.roundWidth(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
-    val s2 = Components.narrowClone(spark, w)
-    val (h, a) = warmHitsRounds(Components.rebind(e, s2),
-      Components.rebind(prevHubs.localCheckpoint(), s2), iters)
-    (Components.rebind(h, spark), Components.rebind(a, spark))
+    val e = Rounds.narrowed(
+      edges.select(col(src).as("u"), col(dst).as("v")).distinct())._1
+    val (h, a) = warmHitsRounds(e,
+      SessionBridge.rebind(prevHubs.localCheckpoint(), e.sparkSession), iters)
+    (Rounds.back(h, spark), Rounds.back(a, spark))
   }
 
   /** The shared damping-0.85 fixed-point loop over the `u`-partitioned
@@ -220,37 +204,22 @@ object Graph {
     *
     * EAGER: the returned frame is `localCheckpoint`ed — the rank table is
     * node-sized (metadata-scale next to the edge list), and materializing
-    * inside the call lets the iterations run in a
-    * [[Components.narrowClone]] sized from the MEASURED edge count (same
-    * formula as [[Components.roundWidth]]: AQE's parallelismFirst refuses
-    * to coalesce below defaultParallelism, so fixed-width iteration
-    * stages on a small graph pay task-launch overhead ~4× the useful
-    * work — measured 3.0 s → 1.5 s on a 16k-edge graph at local[32]).
-    * The degree-annotation pass over the full edge list runs at the
-    * caller's session width; only the iterations narrow, inside the
-    * conf-isolated clone (see the object scaladoc — the caller's session
-    * conf is never touched). Eagerness also lets the internal edge-list
-    * cache be released before returning; the checkpointed result is
-    * rebound to the caller's session.
+    * inside the call lets the iterations run in a [[Rounds]] scope sized
+    * from the MEASURED edge count (fixed-width iteration stages on a
+    * small graph paid task-launch overhead ~4× the useful work —
+    * measured 3.0 s → 1.5 s on a 16k-edge graph at local[32]). The
+    * degree-annotation pass over the full edge list runs at the caller's
+    * session width; only the iterations narrow. The checkpointed result
+    * is rebound to the caller's session.
     */
   def fixedPointPageRank(edges: DataFrame, src: String, dst: String,
                          iters: Int): DataFrame = {
-    val spark = edges.sparkSession
     val e = edges.select(col(src).as("u"), col(dst).as("v"))
     val deg = e.groupBy("u").agg(count(lit(1)).as("od"))
-    // (u, v, od): materialized once at session width via eager
-    // localCheckpoint — a block scan any session of the context can read
-    // (cross-session cache substitution is unreliable; see
-    // [[Components.connectedComponents]]). The single reused narrow
-    // exchange inside rankRounds reads these blocks once; they free via
-    // the ContextCleaner when the returned checkpoint drops them.
-    val (ed, nEdges) = Observe.checkpointCounted(e.join(deg, "u"))
-    val w = Components.roundWidth(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
-    val s2 = Components.narrowClone(spark, w)
-    Components.rebind(
-      rankRounds(Components.rebind(ed, s2), iters).localCheckpoint(),
-      spark)
+    // (u, v, od) enters the scope checkpointed at the caller's width; the
+    // single reused narrow exchange inside rankRounds reads it once
+    val ed = Rounds.narrowed(e.join(deg, "u"))._1
+    Rounds.back(rankRounds(ed, iters).localCheckpoint(), edges.sparkSession)
   }
 
   /** [[fixedPointPageRank]] warm-started from a previous rank table
@@ -263,18 +232,14 @@ object Graph {
     * recurrence than from-uniform — spec-audited, not oracle-hashed. */
   def warmStartPageRank(edges: DataFrame, src: String, dst: String,
                         prevRanks: DataFrame, iters: Int): DataFrame = {
-    val spark = edges.sparkSession
     val e = edges.select(col(src).as("u"), col(dst).as("v"))
     val deg = e.groupBy("u").agg(count(lit(1)).as("od"))
-    val (ed, nEdges) = Observe.checkpointCounted(e.join(deg, "u"))
-    val w = Components.roundWidth(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
-    val s2 = Components.narrowClone(spark, w)
-    Components.rebind(
-      warmRankRounds(Components.rebind(ed, s2),
-        Components.rebind(prevRanks.localCheckpoint(), s2),
+    val ed = Rounds.narrowed(e.join(deg, "u"))._1
+    Rounds.back(
+      warmRankRounds(ed,
+        SessionBridge.rebind(prevRanks.localCheckpoint(), ed.sparkSession),
         iters).localCheckpoint(),
-      spark)
+      edges.sparkSession)
   }
 
   /** Lazy iteration plan for [[personalizedPageRank]] over the
@@ -327,11 +292,9 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, src: String, dst: String,
                            seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                            iters: Int): DataFrame = {
-    val spark = edges.sparkSession
     val e = edges.select(col(src).as("u"), col(dst).as("v"))
     val deg = e.groupBy("u").agg(count(lit(1)).as("od"))
-    // eager checkpoint for cross-session rebinding — see fixedPointPageRank
-    val (ed, nEdges) = Observe.checkpointCounted(e.join(deg, "u"))
+    val ed = Rounds.narrowed(e.join(deg, "u"))._1
     // nodes = BOTH endpoint sets, not just out-degree holders: a sink (or
     // an isolated seed on a directed graph) has no out-edges but must
     // still appear — and a seed among them must keep its restart mass.
@@ -344,12 +307,8 @@ object Graph {
     // distinct rides), and that exchange materializes once.
     val nodes = ed.select(col("u").as("id"))
       .unionByName(ed.select(col("v").as("id")))
-    val w = Components.roundWidth(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
-    val s2 = Components.narrowClone(spark, w)
-    Components.rebind(
-      personalizedRounds(Components.rebind(ed, s2),
-        Components.rebind(nodes, s2), seedPred, iters).localCheckpoint(),
-      spark)
+    Rounds.back(
+      personalizedRounds(ed, nodes, seedPred, iters).localCheckpoint(),
+      edges.sparkSession)
   }
 }

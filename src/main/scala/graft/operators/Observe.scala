@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Observability (SURVEY.md §2.10, NiFi `LogAttribute` ×4): flow-level
@@ -38,16 +38,6 @@ object Observe {
   /** Generic row counter on any stage (the `LogAttribute` success route). */
   def rowCount(df: DataFrame, name: String): DataFrame =
     df.observe(name, count(lit(1)).as("rows"))
-
-  /** Eager `localCheckpoint()` of `df` and its row count, both from the
-    * checkpoint's own job: an `Observation` rides the materialization, so
-    * sizing a round width from the count costs no `count()` action (which
-    * would be two more jobs). */
-  def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val rows = Observation()
-    val chk = df.observe(rows, count(lit(1)).as("n")).localCheckpoint()
-    (chk, rows.get("n").asInstanceOf[Long])
-  }
 
   /** Named metric columns on an already-run observation, fetched from the
     * DataFrame's collected metrics map (batch path). The action must have

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     undirected CC.
   *
   * Scale shape: each round is ONE self-equi-join of the N-row state at the
-  * measured narrow-clone width, localCheckpointed so round t never replans
+  * measured [[Rounds]] width, localCheckpointed so round t never replans
   * rounds < t — K·N join rows total, K = ⌈log₂ N⌉ (vs. the O(N) sequential
   * chase). Extra rounds past convergence are idempotent: callers can pin K
   * for a fleet of scale factors and stay bit-identical.
@@ -30,13 +30,8 @@ object Successor {
     * Returns (v, p, mn) after `rounds` doublings: p = 2^rounds steps
     * ahead, mn = min id over the window [v .. f^(2^rounds − 1)(v)]. */
   def doubled(succ: DataFrame, rounds: Int): DataFrame = {
-    val spark = succ.sparkSession
-    val (s0, n) = Observe.checkpointCounted(
-      succ.select(col("v"), col("p"), col("v").as("mn")))
-    val w = Components.roundWidth(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, n)
-    val s2 = Components.narrowClone(spark, w)
-    var cur = Components.rebind(s0, s2)
+    var cur = Rounds.narrowed(
+      succ.select(col("v"), col("p"), col("v").as("mn")))._1
     for (_ <- 1 to rounds) {
       val b = cur.select(
         col("v").as("bv"), col("p").as("bp"), col("mn").as("bmn"))
@@ -45,6 +40,6 @@ object Successor {
           least(cur("mn"), col("bmn")).as("mn"))
         .localCheckpoint()
     }
-    Components.rebind(cur, spark)
+    Rounds.back(cur, succ.sparkSession)
   }
 }

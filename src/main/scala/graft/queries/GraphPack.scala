@@ -1,8 +1,10 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.operators.Rounds
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.types.DecimalType
 
 // Shared text-dedup primitives (PAIRS_SQL, jaccardPairs, winnow pairs,
@@ -56,19 +58,17 @@ object GraphPack {
        |ORDER BY community""".stripMargin
   }
 
-  /** q144/q241 shared LPA core over a checkpointed symmetric edge list
-    * `ed(u, v)`: LPA_ROUNDS majority-vote rounds (ties to the smallest
-    * label) from singleton labels, run inside a conf-isolated
-    * Components.narrowClone at the measured width (one reused narrow
-    * repartition over the edge list; the vote count's partial agg runs
-    * map-side inside the join stage, the label-choice groupBy plans its
-    * own narrow partial-combined exchange; the caller session's conf is
-    * never touched). Returns the node-sized (id, lab) table checkpointed
-    * and rebound to the caller's session. */
-  private def lpaLabels(s: org.apache.spark.sql.SparkSession,
-                        ed: org.apache.spark.sql.DataFrame)
+  /** q144/q241 shared LPA core over a symmetric edge list `ed(u, v)`:
+    * LPA_ROUNDS majority-vote rounds (ties to the smallest label) from
+    * singleton labels, run in a [[Rounds]] scope at the measured width
+    * (one reused narrow repartition over the edge list; the vote count's
+    * partial agg runs map-side inside the join stage, the label-choice
+    * groupBy plans its own narrow partial-combined exchange). Returns the
+    * node-sized (id, lab) table checkpointed and rebound to `ed`'s
+    * session. */
+  private def lpaLabels(ed: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    lpaLabelsFrom(s, ed, None, LPA_ROUNDS)
+    lpaLabelsFrom(ed, None, LPA_ROUNDS)
 
   /** The q144/q241 LPA core, generalized with an optional WARM initial
     * label table (the q308 production flag, sibling of
@@ -76,23 +76,17 @@ object GraphPack {
     * seed their node, first-seen nodes start at their own id (LPA's
     * uniform init), then `iters` majority-vote rounds. `prev = None`
     * reproduces the cold ladder exactly (same init expression). */
-  private def lpaLabelsFrom(s: org.apache.spark.sql.SparkSession,
-                            ed: org.apache.spark.sql.DataFrame,
+  private def lpaLabelsFrom(edges: org.apache.spark.sql.DataFrame,
                             prev: Option[org.apache.spark.sql.DataFrame],
                             iters: Int)
       : org.apache.spark.sql.DataFrame = {
-    val nEdges = ed.count()
-    val w = graft.operators.Components.roundWidth(
-      s.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
-    val s2 = graft.operators.Components.narrowClone(s, w)
-    val edP = graft.operators.Components.rebind(ed, s2)
-      .repartition(col("u"))
+    val ed = Rounds.narrowed(edges)._1
+    val edP = ed.repartition(col("u"))
     val nodes = edP.select(col("u").as("id")).distinct()
     var l = prev match {
       case None => nodes.select(col("id"), col("id").as("lab"))
       case Some(p) =>
-        nodes.join(graft.operators.Components
-            .rebind(p.localCheckpoint(), s2)
+        nodes.join(SessionBridge.rebind(p.localCheckpoint(), ed.sparkSession)
             .select(col("id").as("pid"), col("lab").as("plab")),
           col("id") === col("pid"), "left")
           .select(col("id"), coalesce(col("plab"), col("id")).as("lab"))
@@ -105,7 +99,7 @@ object GraphPack {
         .agg(max_by(col("lab"), struct(col("c"), lit(0L) - col("lab"))).as("lab"))
         .select(col("v").as("id"), col("lab"))
     }
-    graft.operators.Components.rebind(l.localCheckpoint(), s)
+    Rounds.back(l.localCheckpoint(), edges.sparkSession)
   }
 
   /** q308's warm-round count per ingest batch (cf. WARM_PR_ROUNDS). */
@@ -741,17 +735,8 @@ object GraphPack {
       "q144_label_propagation", LPA_MATCH_ORACLE) { (s, d) =>
       val jp = jaccardPairs(s, d)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      // eager checkpoint, not persist: the LPA rounds run in a session
-      // clone, which reads checkpoint blocks directly (cross-session
-      // cache substitution is unreliable — see
-      // Components.connectedComponents)
-      val ed = jp.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(jp.select(col("b").as("u"), col("a").as("v")))
-        .localCheckpoint()
-      // no unpersist: ed is localCheckpoint-backed — its blocks are not in
-      // the CacheManager, so Dataset.unpersist releases nothing (ADVICE
-      // r18); the ContextCleaner frees checkpoint blocks on dereference
-      val labels = lpaLabels(s, ed)
+      val labels = lpaLabels(jp.select(col("a").as("u"), col("b").as("v"))
+        .unionAll(jp.select(col("b").as("u"), col("a").as("v"))))
       labels.groupBy("lab")
         .agg(count(lit(1)).as("n_members"), min(col("id")).as("min_member"))
         .select(col("lab").as("community"), col("n_members"), col("min_member"))
@@ -767,7 +752,7 @@ object GraphPack {
     // near-dup graph. State is the accumulated edge list in versioned
     // parquet (write v{batchId}, read previous — idempotent under
     // micro-batch replay); per batch the FULL fixed-round LPA re-runs
-    // from singleton labels over state ∪ batch inside the narrow clone
+    // from singleton labels over state ∪ batch inside the Rounds scope
     // (label warm-starting is deliberately NOT used — q144's contract is
     // exactly-LPA_ROUNDS-from-singletons, the fixed-round replay that
     // makes the iterative answer hash-checkable; a warm-started label
@@ -801,11 +786,9 @@ object GraphPack {
         val mp = TextDedupPack.readStoreOr(ss, edges,
             batch.select(col("doc_a"), col("doc_b")))
           .select("doc_a", "doc_b")
-        val sym = mp.select(col("doc_a").as("u"), col("doc_b").as("v"))
-          .unionAll(mp.select(col("doc_b").as("u"), col("doc_a").as("v")))
-          .localCheckpoint()
-        // no unpersist: sym is localCheckpoint-backed (cf. q144's note)
-        val labels = lpaLabels(ss, sym)
+        val labels = lpaLabels(
+          mp.select(col("doc_a").as("u"), col("doc_b").as("v"))
+            .unionAll(mp.select(col("doc_b").as("u"), col("doc_a").as("v"))))
         val labelsV = s"$store/labels_v$batchId"
         labels.write.mode("overwrite").parquet(labelsV)
         latestLabels.set(labelsV)
@@ -861,18 +844,11 @@ object GraphPack {
           .select("doc_a", "doc_b")
         val sym = mp.select(col("doc_a").as("u"), col("doc_b").as("v"))
           .unionAll(mp.select(col("doc_b").as("u"), col("doc_a").as("v")))
-          .localCheckpoint()
         val prevLabV = s"$store/labels_v${batchId - 1}"
-        // no unpersist: sym is localCheckpoint-backed, whose blocks are
-        // not registered in the CacheManager — Dataset.unpersist was a
-        // no-op and the eager-release intent unachievable (ADVICE r18);
-        // blocks free via the ContextCleaner, which Bench's heavy
-        // quiesce already waits out
         val labels =
           if (batchId > 0 && new java.io.File(prevLabV).isDirectory)
-            lpaLabelsFrom(ss, sym,
-              Some(ss.read.parquet(prevLabV)), WARM_LPA_ROUNDS)
-          else lpaLabelsFrom(ss, sym, None, LPA_ROUNDS)
+            lpaLabelsFrom(sym, Some(ss.read.parquet(prevLabV)), WARM_LPA_ROUNDS)
+          else lpaLabelsFrom(sym, None, LPA_ROUNDS)
         val labelsV = s"$store/labels_v$batchId"
         labels.write.mode("overwrite").parquet(labelsV)
         latestLabels.set(labelsV)
@@ -905,8 +881,8 @@ object GraphPack {
     // 100 TB shape: each round is one map-side-combined degree agg + two
     // keyed semi-joins on the edge list — edge-linear, node-sized state,
     // per-round localCheckpoint truncating lineage (the q195 ladder);
-    // all rounds run inside the conf-isolated narrowClone at measured
-    // width, result rebound node-sized. No windows, no driver graph.
+    // all rounds run in a Rounds scope at measured width, result
+    // rebound node-sized. No windows, no driver graph.
     QueryDef(
       "q238_kcore_peel", {
         // each e_{r-1} is referenced three times per round (degree agg +
@@ -937,18 +913,12 @@ object GraphPack {
       }) { (s, d) =>
       val jp = jaccardPairs(s, d)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      val (ed, nEdges) = graft.operators.Observe.checkpointCounted(
+      val ed = Rounds.narrowed(
         jp.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(jp.select(col("b").as("u"), col("a").as("v"))))
-      // no unpersist of ed: localCheckpoint-backed (cf. q144's note)
+          .unionAll(jp.select(col("b").as("u"), col("a").as("v"))))._1
       val peeled = {
-        val w = graft.operators.Components.roundWidth(
-          s.conf.get("spark.sql.shuffle.partitions").toInt, nEdges)
-        val s2 = graft.operators.Components.narrowClone(s, w)
-        val nodes0 = graft.operators.Components.rebind(ed, s2)
-          .select("u").distinct().localCheckpoint()
-        var e = graft.operators.Components.rebind(ed, s2)
-          .repartition(col("u"))
+        val nodes0 = ed.select("u").distinct().localCheckpoint()
+        var e = ed.repartition(col("u"))
         var alive = nodes0
         for (_ <- 1 to KCORE_ROUNDS) {
           alive = e.groupBy("u").agg(count(lit(1)).as("c"))
@@ -964,7 +934,7 @@ object GraphPack {
           .select(col("u").as("node_id"),
             coalesce(col("in_core"), lit(0L)).as("in_core"),
             coalesce(col("c"), lit(0L)).as("core_deg"))
-        graft.operators.Components.rebind(out.localCheckpoint(), s)
+        Rounds.back(out.localCheckpoint(), s)
       }
       peeled.orderBy("node_id")
     },
@@ -1118,7 +1088,7 @@ object GraphPack {
     // accumulated EDGE list in versioned parquet (the q116 MERGE trick:
     // write v{batchId}, read v{batchId-1} — idempotent under micro-batch
     // replay); per batch, the full 5 fixed-point rounds re-run from the
-    // uniform init over state ∪ batch inside the narrow clone
+    // uniform init over state ∪ batch inside the Rounds scope
     // (Graph.fixedPointPageRank — conf-isolated width, checkpointed
     // rounds), and the node-sized rank table lands in its own version.
     // Rank warm-starting is deliberately NOT used: q109's contract is

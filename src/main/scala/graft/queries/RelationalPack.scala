@@ -2202,7 +2202,7 @@ object RelationalPack {
     // under at-least-once replay — r19, cf. q303; HITS sums are
     // multiplicity-sensitive, hence the read-side distinct replacing the
     // old merge-side one); per batch the full 4 mutual-reinforcement
-    // rounds re-run from uniform inside the narrow clone. The final
+    // rounds re-run from uniform inside the Rounds scope. The final
     // batch's output hash-matches batch q247's oracle VERBATIM (mutual
     // reinforcement from uniform is a function of the edge SET, so any
     // batch split yields the same final scores).
@@ -2316,7 +2316,7 @@ object RelationalPack {
     // checkpointed) edge list against node-sized score tables, two
     // map-side-combined sums, and two 1-row normalization aggregates
     // broadcast back — the Pregel-as-join shape ×2, zero driver-side
-    // actions, iterations at the measured narrow-clone width.
+    // actions, iterations at the measured Rounds width.
     QueryDef(
       "q247_hits_scores", HITS_ORACLE) { (s, d) =>
       val (h, a) = graft.operators.Graph.hits(eventEdges(s, d), "u", "v", 4)

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Rounds}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.types.DecimalType
 
 /** Text-analysis + deduplication pack over the `documents` table — the
@@ -483,10 +484,10 @@ object TextDedupPack {
   }
 
   /** Measured narrow width for a per-batch store pipeline (r20; guide §2
-    * "make partitioning scale-adaptive", the Components.roundWidth
-    * discipline applied to the streaming-store engines): one shuffle
-    * partition per ~64 MB of accumulated on-disk store, at least 1,
-    * never above the session's configured width. Sized by a DRIVER-side
+    * "make partitioning scale-adaptive", the [[Rounds]] discipline
+    * applied to the streaming-store engines): one shuffle partition per
+    * ~64 MB of accumulated on-disk store, which [[Rounds.scope]] clamps
+    * to [1, the session's configured width]. Sized by a DRIVER-side
     * directory walk — no Spark job, no extra action per micro-batch.
     * Rationale: the recrawl/semantic per-batch reconcile pipelines run
     * ~15-20 exchange-bearing stages per micro-batch over stores that are
@@ -499,14 +500,11 @@ object TextDedupPack {
     * defaultParallelism. At 100 TB the same formula saturates at the
     * submit-time width (stores are GB-TB), so nothing is tuned to local
     * mode. */
-  private[queries] def storeWidth(
-      spark: org.apache.spark.sql.SparkSession, dirs: Seq[String]): Int = {
+  private[queries] def storeWidth(dirs: Seq[String]): Long = {
     def bytes(f: java.io.File): Long =
       if (f.isFile) f.length
       else Option(f.listFiles()).map(_.map(bytes).sum).getOrElse(0L)
-    val b = dirs.map(d => bytes(new java.io.File(d))).sum
-    val configured = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1L, math.min(configured.toLong, b / (64L << 20) + 1L)).toInt
+    dirs.map(d => bytes(new java.io.File(d))).sum / (64L << 20) + 1L
   }
 
   /** Read one logical table (`kind` partition) back from an
@@ -3284,9 +3282,9 @@ object TextDedupPack {
       graft.streaming.Streams.runForeachBatch(s, stream, (batch0, batchId) => {
         // per-batch pipeline planned at the measured store width (r20;
         // see storeWidth / versionedRecrawlClusters — same anti-scaling fix)
-        val ss = graft.operators.Components.narrowClone(batch0.sparkSession,
-          storeWidth(batch0.sparkSession, Seq(docState, pairState)))
-        val batch = graft.operators.Components.rebind(batch0, ss)
+        val ss = Rounds.scope(batch0.sparkSession,
+          storeWidth(Seq(docState, pairState)))
+        val batch = SessionBridge.rebind(batch0, ss)
         val docs = batch.select(col("doc_id"), col("text"))
         // new docs' derived state, computed ONCE (never recomputed later),
         // landed as ONE write job. Bands come from the persisted gram rows
@@ -3348,8 +3346,7 @@ object TextDedupPack {
         // final reconcile: FINAL occupancy re-filters the event store, the
         // survivors' verified pairs feed the q67 closure — planned at the
         // measured store width (r20), rebound to the caller
-        val sN = graft.operators.Components.narrowClone(s,
-          storeWidth(s, Seq(docState, pairState)))
+        val sN = Rounds.scope(s, storeWidth(Seq(docState, pairState)))
         val allB = readKindOr(sN, docState, "bucket", emptyDocState(sN))
         val under = allB.groupBy("band", "bh").agg(count(lit(1)).as("nb"))
           .filter(col("nb") <= MAX_BUCKET).select("band", "bh")
@@ -3359,7 +3356,7 @@ object TextDedupPack {
           .join(readKindOr(sN, pairState, "pair", emptyPairState(sN))
             .select("doc_a", "doc_b"),
             Seq("doc_a", "doc_b"))
-        graft.operators.Components.rebind(
+        Rounds.back(
           graft.operators.Components
             .connectedComponents(kept, "doc_a", "doc_b")
             .select(col("component").as("cluster_id"), col("id").as("doc_id"),
@@ -3618,9 +3615,9 @@ object TextDedupPack {
         // (r20; see storeWidth — the fix for the family's 8c-beats-32c
         // anti-scaling). Results are partitioning-independent: integer
         // keys, md5 strings, count aggregates, set semantics.
-        val ss = graft.operators.Components.narrowClone(batch0.sparkSession,
-          storeWidth(batch0.sparkSession, Seq(docState, pairState)))
-        val batch = graft.operators.Components.rebind(batch0, ss)
+        val ss = Rounds.scope(batch0.sparkSession,
+          storeWidth(Seq(docState, pairState)))
+        val batch = SessionBridge.rebind(batch0, ss)
         // this batch's versions, keyed by uid = doc_id*4 + ver(=batchId);
         // derived state computed ONCE and landed as ONE write job (bands
         // from the persisted gram rows — codegen'd agg form, not the
@@ -3690,8 +3687,7 @@ object TextDedupPack {
         // final reconcile: cumulative cap + both endpoint versions latest —
         // planned at the measured store width like the per-batch pipelines
         // (r20; CC narrows its own rounds already), rebound to the caller
-        val sN = graft.operators.Components.narrowClone(s,
-          storeWidth(s, Seq(docState, pairState)))
+        val sN = Rounds.scope(s, storeWidth(Seq(docState, pairState)))
         val lat = readKindOr(sN, docState, "version", emptyDocState(sN))
           .groupBy("doc_id").agg(max(col("batch_id")).as("ver"))
           .select((col("doc_id") * 4L + col("ver")).as("uid"))
@@ -3706,7 +3702,7 @@ object TextDedupPack {
           .join(readKindOr(sN, pairState, "pair", emptyPairState(sN))
             .select("doc_a", "doc_b", "ua", "ub"),
             Seq("doc_a", "doc_b", "ua", "ub"))
-        graft.operators.Components.rebind(
+        Rounds.back(
           graft.operators.Components
             .connectedComponents(kept.select("doc_a", "doc_b"), "doc_a", "doc_b")
             .select(col("component").as("cluster_id"), col("id").as("doc_id"),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Components, Graph}
+import graft.operators.{Components, Graph, Rounds}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,31 +36,29 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got == expected, clue)
   }
 
-  test("narrowClone re-plans successive rounds at the re-measured width " +
+  test("Rounds.resize re-plans successive rounds at the re-measured width " +
        "(multi-width path: mock 5M -> 1M edge counts)") {
-    // At test SFs roundWidth always lands on 1-2, so the clone-resize
+    // At test SFs the round width always lands on 1-2, so the resize
     // branch the 10^9-edge claim rests on never runs organically
     // (VERDICT r13 item 8). Pin it with the widths the formula yields for
-    // a 5M-row round contracting to 1M: the SAME clone, re-conf'd between
-    // rounds exactly as connectedComponents does, must plan the next
-    // round's exchanges at the new width — and the caller session's width
-    // must never move.
+    // a 5M-row round contracting to 1M: the SAME round scope, re-sized
+    // between rounds exactly as connectedComponents does, must plan the
+    // next round's exchanges at the new width — and the caller session's
+    // width must never move.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val configured = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val w1 = Components.roundWidth(configured, 5000000L)
-    val w2 = Components.roundWidth(configured, 1000000L)
+    val w1 = Rounds.width(configured, 5000000L)
+    val w2 = Rounds.width(configured, 1000000L)
     assert(w1 == 3 && w2 == 1 && w1 != w2,
       s"mock counts must exercise distinct widths, got $w1/$w2 (configured=$configured)")
-    val s2 = Components.narrowClone(spark, w1)
+    val (e, _) = Rounds.narrowed(
+      spark.range(200).selectExpr("id % 50 AS u", "id % 37 + 1 AS v"))
     def roundPlanWidths(): Seq[Int] = {
       // the shape of one star round's aggregation: keyed groupBy over the
-      // rebound edge list — the exchange Catalyst inserts must carry the
-      // clone's CURRENT width
-      val e = Components.rebind(
-        spark.range(200).selectExpr("id % 50 AS u", "id % 37 + 1 AS v")
-          .localCheckpoint(), s2)
+      // round's edge list — the exchange Catalyst inserts must carry the
+      // scope's CURRENT width
       val p = e.groupBy("u").count().queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.initialPlan
         case other: SparkPlan => other
@@ -68,27 +66,16 @@ class ComponentsSpec extends AnyFunSuite {
       p.collect { case s: ShuffleExchangeExec =>
         s.outputPartitioning.numPartitions }
     }
+    Rounds.resize(e, spark, 5000000L)
     val r1 = roundPlanWidths()
     assert(r1.nonEmpty && r1.forall(_ == w1), s"round-1 widths $r1 != $w1")
-    // the edge set "contracted" to 1M rows: re-size the SAME clone, as the
+    // the edge set "contracted" to 1M rows: re-size the SAME scope, as the
     // CC loop does before each round
-    s2.conf.set("spark.sql.shuffle.partitions", w2.toString)
+    Rounds.resize(e, spark, 1000000L)
     val r2 = roundPlanWidths()
     assert(r2.nonEmpty && r2.forall(_ == w2), s"round-2 widths $r2 != $w2")
     assert(spark.conf.get("spark.sql.shuffle.partitions").toInt == configured,
-      "clone re-size leaked into the caller session")
-  }
-
-  test("roundWidth clamps to [1, configured] and scales with measured rows") {
-    // the shared width formula behind CC/PageRank/PPR/LPA round sizing:
-    // ~2M rows/partition, never 0, never above the session setting
-    assert(Components.roundWidth(32, 0L) == 1)
-    assert(Components.roundWidth(32, 1999999L) == 1)
-    assert(Components.roundWidth(32, 2000000L) == 2)
-    assert(Components.roundWidth(32, 10000000L) == 6)
-    assert(Components.roundWidth(32, 1000000000L) == 32) // capped
-    assert(Components.roundWidth(4, 1000000000L) == 4)
-    assert(Components.roundWidth(1, 0L) == 1)
+      "scope re-size leaked into the caller session")
   }
 
   test("random sparse graph matches union-find") {
@@ -197,8 +184,8 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("the narrow clone never leaks: caller conf untouched, result is a " +
        "caller-session frame, composable with caller frames") {
-    // The rounds run inside Components.narrowClone (an isolated
-    // newSession() at the measured width). Contract pinned here: the
+    // The rounds run inside a Rounds scope (a private session clone at
+    // the measured width). Contract pinned here: the
     // CALLER's shuffle width is never read-modified (the r11 form mutated
     // it around the rounds — racy under concurrent queries), the returned
     // frame is rebound to the caller's session (a clone-bound frame would

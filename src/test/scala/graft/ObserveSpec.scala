@@ -39,20 +39,4 @@ class ObserveSpec extends AnyFunSuite {
     assert(Observe.metricsOf(df, "docs").get("rows") == n)
     assert(Observe.metricsOf(df, "nope").isEmpty)
   }
-
-  test("checkpointCounted counts like count() and adds no job to the checkpoint's") {
-    val grouped = spark.range(0, 1000, 1, 4).toDF("id")
-      .groupBy(($"id" % 37).as("k")).count() // an exchange under the checkpoint
-    val empty = grouped.filter(lit(false))
-    for (df <- Seq(grouped, empty)) {
-      val expected = df.count()
-      val plain = new TestSpark.JobCounter
-      try df.localCheckpoint() finally plain.close()
-      val counted = new TestSpark.JobCounter
-      val (chk, n) = try Observe.checkpointCounted(df) finally counted.close()
-      assert(n == expected)
-      assert(counted.jobs == plain.jobs)
-      assert(chk.collect().length == expected)
-    }
-  }
 }

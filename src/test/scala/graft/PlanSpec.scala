@@ -121,8 +121,8 @@ class PlanSpec extends AnyFunSuite {
        "list shuffles once, aggregation exchanges map-side combined") {
     // CC / PageRank / PPR / LPA used to narrow spark.sql.shuffle.partitions
     // around their rounds on the SHARED session (racy under concurrent
-    // queries). They now run inside Components.narrowClone — an isolated
-    // newSession() whose conf carries the measured width — so the narrow
+    // queries). They now run inside a Rounds scope — a private session
+    // clone whose conf carries the measured width — so the narrow
     // width is still assertable from the plan (every exchange's
     // numPartitions) while the caller's session is untouched by
     // construction. Assertions per plan:
@@ -160,9 +160,9 @@ class PlanSpec extends AnyFunSuite {
           s"got $combined:\n$p")
     }
     val w = 3
-    val s2 = graft.operators.Components.narrowClone(spark, w)
+    val s2 = graft.operators.Rounds.scope(spark, w)
     def narrow(df: DataFrame): DataFrame =
-      graft.operators.Components.rebind(df, s2)
+      org.apache.spark.sql.graftbridge.SessionBridge.rebind(df, s2)
     val edges = spark.range(200)
       .select((col("id") % 50).as("u"), (col("id") % 37 + 1).as("v"))
       .localCheckpoint()
