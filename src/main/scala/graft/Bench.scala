@@ -5,6 +5,9 @@ package graft
   * negative time) — never silently timed as ~0 s. Each query's first
   * attempt is an untimed warm run, so reported numbers are steady-state
   * (comparable to Probe's warm iterations), never first-touch codegen cost.
+  * Every attempt runs in its own [[Stage.query]], and only the query's
+  * action is timed: the release of its cached and checkpoint blocks runs
+  * after the clock stops.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -99,9 +102,8 @@ object Bench {
     // it only reduced the cost of attempts that are no longer timed.
     val warmup = SparkEntry.queries.getOrElse("q05_join_priority_agg",
       SparkEntry.queries.toSeq.minBy(_._1)._2)
-    try warmup(spark, sfDir).count()
+    try Stage.query(spark)(warmup(spark, sfDir).count())
     catch { case e: Throwable => System.err.println(s"[bench] warm-up FAILED: ${e.getMessage}") }
-    spark.catalog.clearCache()
     var failed = List.empty[String]
     // Per-query protocol: attempt 0 is an UNTIMED warm run (it still runs and
     // still fails the query on error, but its duration never enters the min),
@@ -118,81 +120,29 @@ object Bench {
     // get two, plus an adaptive third when the two disagree by >30% (the
     // slower was a GC/contention artifact; r9 measured 12 of 48 heavy
     // queries drifting >20% across consecutive invocations).
-    // Quiesce barrier, run UNTIMED before every attempt: queries that
-    // materialize driver-held state (q183's collect-to-LocalRelation, the
-    // driver-held ANN/quantile models) leave broadcast blocks, weak
-    // references, and short-lived driver garbage behind; the ContextCleaner
-    // only learns a broadcast is dead after a GC enqueues its reference, so
-    // without a barrier that cleanup lands inside the NEXT queries' timed
-    // attempts (r11: q19 4.39 s in-fleet vs 0.47-0.50 s warm isolated, and
-    // q20/q21/q22 — the queries after q183 in fleet order — inflated
-    // 1.4-2.7x in the same pocket). r12 ran the FULL barrier (two GC
-    // passes + 75 ms of drain sleep — the first GC enqueues dead refs,
-    // the pause lets the cleaner drain removeBroadcast/removeBlock calls,
-    // the second collects the drain's own garbage) before all ~760
-    // attempts; r13 targets it (verdict item 3): the heavy barrier runs
-    // only around the queries that actually materialize driver-held
-    // relations/models (the DIRTY set below — every attempt of a dirty
-    // query and of its fleet successor), everything else gets a single GC
-    // pass with a short drain. The pocket-free property is preserved —
-    // q183 (the r11 culprit) is dirty, so its own attempts and q19's (its
-    // alphabetical successor) still see the full barrier.
-    val DIRTY = Set(
-      "q76", "q77", "q88", "q89", "q94", "q95", // driver-held ANN models (SRP/IVF/PQ)
-      "q134", "q135", "q211",                   // BPE: driver-held merge table, 1-row rounds
-      "q136", "q140",                           // mergeable-state / driver-held relations
-      "q155", "q158",                           // priority-sample driver-held thresholds
-      "q156", "q159", "q166",                   // exact distributed quantile models
-      "q183", "q185", "q191", "q193",           // fused lists / IVF probe + Lloyd models
-      // the iterative CC/PageRank family: per-round localCheckpoint blocks
-      // free via GC + ContextCleaner (not deterministically), so their
-      // successors need the full drain barrier — q194 doubly so (it is
-      // ALSO q19's fleet predecessor, the r11 pocket victim: 'q194...' <
-      // 'q19_...' because '4' < '_')
-      "q67", "q73", "q74", "q109", "q124", "q144", "q145", "q147",
-      "q190", "q194", "q200", // q200: per-batch checkpointed PR rounds
-      // q195/q198 localCheckpoint the edge list + every per-step frontier
-      // level (ADVICE r13; q198 re-derives the walk corpus), and
-      // q150/q193's Lloyd rounds are checkpoint-backed (r14) — same
-      // GC+ContextCleaner-freed-blocks criterion as the CC family above
-      "q195", "q198", "q201", "q206", "q208", "q150",
-      "q210", "q219", // q210/q219 run a full CC (per-round localCheckpoint), as q67
-      "q234", "q238", // q234 runs the CC; q238 peels with per-round checkpoints
-      "q241", // q241 re-runs checkpointed LPA rounds per micro-batch
-      "q242", // q242's waterfall runs the survivor-graph CC
-      // HITS/TextRank iterate with per-round checkpoints (q247/q249), and
-      // q253 re-runs the checkpointed HITS rounds per micro-batch — same
-      // GC+ContextCleaner-freed-blocks criterion as the CC/PR family
-      "q247", "q249", "q253",
-      // r18 warm-start streams checkpoint per micro-batch like their
-      // cold-replay twins (q303~q200, q304~q253, q308~q241); q305/q306/
-      // q309's final reconcile runs a full CC; q307 trains the
-      // driver-held quantizer
-      "q303", "q304", "q305", "q306", "q307", "q308", "q309")
-    def quiesce(heavy: Boolean): Unit =
-      if (heavy) {
-        System.gc(); Thread.sleep(50)
-        System.gc(); Thread.sleep(25)
-      } else {
-        System.gc(); Thread.sleep(15)
-      }
-    def shortIdOf(n: String): String = n.takeWhile(_ != '_')
-    var prevDirty = false // did the previously-run query materialize driver state?
+    // Each attempt is one Stage.query: only the action is timed; the cache
+    // drop and the blocking release of the attempt's cached and checkpoint
+    // blocks run after the clock stops, so no query's blocks are left for a
+    // later query's timed attempt to free. One GC pass with a short drain,
+    // untimed, before every attempt lets the ContextCleaner retire the
+    // broadcasts and driver-side garbage of the attempt before.
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val heavy = prevDirty || DIRTY(shortIdOf(name))
       def once(): (Boolean, Double) = {
-        quiesce(heavy)
-        val t0 = System.nanoTime()
+        System.gc(); Thread.sleep(15)
+        var secs = 0.0
         val ok =
-          try { fn(spark, sfDir).count(); true }
+          try Stage.query(spark) {
+            val t0 = System.nanoTime()
+            try fn(spark, sfDir).count()
+            finally secs = (System.nanoTime() - t0) / 1e9
+            true
+          }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             false
           }
-        spark.catalog.clearCache()
-        (ok, (System.nanoTime() - t0) / 1e9)
+        (ok, secs)
       }
-      prevDirty = DIRTY(shortIdOf(name))
       val warm = once() // attempt 0: first-touch codegen/JIT, never timed
       val timed =
         if (!warm._1) Seq.empty

@@ -6,14 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dev harness: run one or more queries repeatedly in one session, with the
-  * cache cleared between iterations (the conditions Bench measures under),
-  * and print per iteration the wall time and row count next to the JVM-level
-  * counters that tell its cost apart: GC time and collections (allocation),
-  * whole-stage-codegen compiles and their mean time (Spark's CodegenMetrics
-  * source) and heap in use. A spike whose GC delta is close to its wall
-  * delta is allocation; one with many compiles is codegen; one with neither
-  * is I/O or scheduling.
+/** Dev harness: run one or more queries repeatedly in one session, each
+  * iteration in its own [[Stage.query]] (the conditions Bench measures
+  * under), and print per iteration the wall time and row count next to the
+  * JVM-level counters that tell its cost apart: GC time and collections
+  * (allocation), whole-stage-codegen compiles and their mean time (Spark's
+  * CodegenMetrics source) and heap in use. A spike whose GC delta is close
+  * to its wall delta is allocation; one with many compiles is codegen; one
+  * with neither is I/O or scheduling. `held` is what stays persistent after
+  * the iteration's release: a nonzero count is a query that leaks blocks.
   *
   * Usage: runMain graft.Probe <q1[,q2,...]> <sfDir> [iters] [plansDir]
   * With `plansDir`, each query's `explain("formatted")` is written to
@@ -47,18 +48,23 @@ object Probe {
       (1 to iters).foreach { i =>
         val (gct0, gcc0, cgc0) = (gcTimeMs, gcCount, cg.getCount)
         val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val n = df.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (i == 1) plansDir.foreach { dir =>
-          val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-          Files.writeString(dir.resolve(s"$name.txt"), plan)
+        var dt = 0.0
+        val n = Stage.query(spark) {
+          val df = fn(spark, sfDir)
+          val rows = df.count()
+          dt = (System.nanoTime() - t0) / 1e9
+          if (i == 1) plansDir.foreach { dir =>
+            val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+            Files.writeString(dir.resolve(s"$name.txt"), plan)
+          }
+          rows
         }
-        spark.catalog.clearCache()
+        val (heldRdds, heldBytes) = Stage.held(spark)
         println(f"[probe] $name iter $i: wall=$dt%.2f s " +
           f"gc=${(gcTimeMs - gct0) / 1000.0}%.2f s (${gcCount - gcc0} colls) " +
           f"codegenCompiles=${cg.getCount - cgc0} (mean ${cg.getSnapshot.getMean}%.0f ms) " +
-          f"heap=$heapMb MB ($n rows)")
+          f"heap=$heapMb MB ($n rows) " +
+          f"held=$heldRdds RDDs, ${heldBytes / 1e6}%.1f MB")
       }
     } finally spark.stop()
   }

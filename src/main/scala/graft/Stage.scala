@@ -3,12 +3,13 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.streaming.Streams.deleteRecursively
 
 /** The one owner of graft's per-JVM staged state: replayable stream
-  * sources, per-batch stores, driver-held models and scratch dirs.
+  * sources, per-batch stores, driver-held models and scratch dirs, and of
+  * the cache and checkpoint blocks each query makes ([[query]]).
   *
   * Everything on disk lives under [[root]], one temp dir created on first
   * use and deleted at JVM exit by the one shutdown hook. Staged values are
@@ -65,4 +66,36 @@ object Stage {
     * left, without creating or emptying it. */
   def existing(name: String, sfDir: String): Option[Path] =
     Option(memos.get((name, sfDir))).map(_.value).collect { case p: Path => p }
+
+  /** Runs `action` as one query and then releases every block it made: the
+    * session's cached frames (`clearCache`) and every RDD that became
+    * persistent inside the scope, `localCheckpoint` blocks included,
+    * unpersisted blocking. The release runs also when `action` throws.
+    * Reading a released checkpoint-backed frame afterwards fails with
+    * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`; it never returns wrong rows.
+    *
+    * Two conditions hold it sound. One query runs at a time per
+    * SparkContext, as in every harness main; a concurrent query's blocks
+    * would be released too. And a [[once]] value outlives the scope that
+    * built it, so it is a path or a driver-side value, never a frame
+    * backed by cached or checkpointed blocks.
+    */
+  def query[T](spark: SparkSession)(action: => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try action
+    finally {
+      spark.catalog.clearCache()
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id)) rdd.unpersist(blocking = true)
+      }
+    }
+  }
+
+  /** (RDDs, bytes in memory and on disk) the context holds persistent. */
+  def held(spark: SparkSession): (Int, Long) = {
+    val sc = spark.sparkContext
+    (sc.getPersistentRDDs.size,
+      sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum)
+  }
 }

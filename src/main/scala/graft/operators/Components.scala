@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * explain/codegen walk over it) grows exponentially; checkpointing resets
   * it to a scan of the materialized round. On a real cluster prefer
   * `sparkContext.setCheckpointDir` + reliable `checkpoint()` — local
-  * checkpoints die with an executor. Superseded rounds' blocks are released
-  * by the ContextCleaner once unreferenced.
+  * checkpoints die with an executor. Every round's blocks are released at
+  * query end by the caller's [[graft.Stage.query]].
   */
 object Components {
 
@@ -102,9 +102,8 @@ object Components {
         // set-difference so the loop can still terminate
         case _ => next.exceptAll(e).isEmpty
       })
-      // the superseded round's checkpoint blocks free via the
-      // ContextCleaner once `e` is reassigned — Dataset.unpersist would
-      // be a no-op on a checkpointed frame
+      // the superseded round's checkpoint blocks are released at the
+      // latest by the caller's Stage.query at query end
       e = next
       n = nNext
       chk = chkNext

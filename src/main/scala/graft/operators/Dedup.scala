@@ -92,8 +92,7 @@ object Dedup {
   def lshCandidates(
       sig: DataFrame, idCol: String,
       numHashes: Int, bands: Int,
-      maxBucket: Int = 1000,
-      scope: CacheScope = CacheScope.sessionManaged): DataFrame = {
+      maxBucket: Int = 1000): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
     val bandCols = (0 until bands).map { b =>
@@ -106,7 +105,7 @@ object Dedup {
     // cap pathological buckets before the O(k²) pair expansion; persisted —
     // both sides of the self-join scan it
     val capped = Occupancy.cap(buckets, Seq("band", "bh"), maxBucket,
-      persistResult = true, scope = scope)
+      persistResult = true)
     val a = capped.select(col(idCol).as("id_a"), col("band"), col("bh"))
     val b = capped.select(col(idCol).as("id_b"), col("band"), col("bh"))
     a.join(b, Seq("band", "bh")).filter(col("id_a") < col("id_b"))
@@ -138,19 +137,16 @@ object Dedup {
     *
     * The shingle set feeds three consumers (signatures + both verify join
     * legs), so it is persisted — without it the explode lineage recomputes
-    * per consumer. Cache lifecycle follows `scope`: by default session-
-    * managed (Bench/Verify `clearCache()` between queries); a long-lived
-    * session passes a [[CacheScope]], materializes the result, then
-    * `scope.release()`.
+    * per consumer. The caller's [[graft.Stage.query]] releases the caches
+    * at query end.
     */
   def nearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.5,
-      scope: CacheScope = CacheScope.sessionManaged): DataFrame = {
-    val sh = scope.persist(shingles(df, idCol, textCol, n))
-    val sig = scope.persist(minHashSignatures(sh, idCol, numHashes))
-    val cand = lshCandidates(sig, idCol, numHashes, bands, scope = scope)
+      threshold: Double = 0.5): DataFrame = {
+    val sh = shingles(df, idCol, textCol, n).persist()
+    val sig = minHashSignatures(sh, idCol, numHashes).persist()
+    val cand = lshCandidates(sig, idCol, numHashes, bands)
     verifyJaccard(sh, idCol, cand,
       precomputedSizes = Some(sig.select(col(idCol), col("n_sh").as("n"))))
       .filter(col("jaccard") >= threshold)
@@ -258,8 +254,7 @@ object Dedup {
     */
   def simHashNearDup(
       sim: DataFrame, idCol: String, maxDist: Int = 3,
-      maxBlock: Int = Int.MaxValue,
-      scope: CacheScope = CacheScope.sessionManaged): DataFrame = {
+      maxBlock: Int = Int.MaxValue): DataFrame = {
     require(maxDist >= 0 && maxDist < 32, "maxDist must be in [0, 32)")
     val nChunks = maxDist + 1
     val base = 64 / nChunks
@@ -274,7 +269,7 @@ object Dedup {
       .select(col(idCol), col("simhash"), col("b.chunk").as("chunk"), col("b.ck").as("ck"))
     // persisted either way: both sides of the self-join scan the blocked set
     val capped = Occupancy.cap(blocked, Seq("chunk", "ck"), maxBlock,
-      persistResult = true, scope = scope)
+      persistResult = true)
     val a = capped.select(col(idCol).as("id_a"), col("simhash").as("sh_a"), col("chunk"), col("ck"))
     val b = capped.select(col(idCol).as("id_b"), col("simhash").as("sh_b"), col("chunk"), col("ck"))
     a.join(b, Seq("chunk", "ck")).filter(col("id_a") < col("id_b"))

@@ -15,18 +15,16 @@ object Occupancy {
 
   /** Filter out over-occupied key groups. Set `persistResult` when the
     * result feeds BOTH sides of a self-join — the window count would
-    * otherwise run once per side. Cache lifecycle follows `scope`
-    * (default: session-managed, released by the harness's clearCache();
-    * long-lived sessions pass a [[CacheScope]] and release it). */
+    * otherwise run once per side; the caller's [[graft.Stage.query]]
+    * releases the cache at query end. */
   def cap(df: DataFrame, keys: Seq[String], max: Int,
-          persistResult: Boolean = false,
-          scope: CacheScope = CacheScope.sessionManaged): DataFrame = {
+          persistResult: Boolean = false): DataFrame = {
     val out =
       if (max == Int.MaxValue) df // no window, no filter
       else df
         .withColumn("__n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
         .filter(col("__n") <= max)
         .drop("__n")
-    if (persistResult) scope.persist(out) else out
+    if (persistResult) out.persist() else out
   }
 }

@@ -35,9 +35,9 @@ import org.apache.spark.sql.graftbridge.SessionBridge
   * against the shared CacheManager, which a rebound plan does not
   * reliably hit (a miss re-ran the whole upstream candidate-pair pipeline
   * 2–4× inside CC's round 0). Checkpoint blocks are not in the
-  * CacheManager, so `unpersist` releases nothing; the ContextCleaner
-  * frees them once unreferenced. Results leave through [[back]], so no
-  * clone-bound frame reaches the caller.
+  * CacheManager, so `clearCache` misses them; the caller's
+  * [[graft.Stage.query]] unpersists them at query end. Results leave
+  * through [[back]], so no clone-bound frame reaches the caller.
   */
 object Rounds {
 

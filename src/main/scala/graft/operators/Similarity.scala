@@ -128,12 +128,11 @@ object Similarity {
                     threshold: Double = 0.95,
                     dim: Int = 64, bits: Int = 16, tables: Int = 6,
                     seed: Long = 42L, maxBucket: Int = 10000,
-                    score: (Column, Column) => Column = cosine,
-                    scope: CacheScope = CacheScope.sessionManaged): DataFrame = {
+                    score: (Column, Column) => Column = cosine): DataFrame = {
     // persisted: both sides of the candidate self-join scan the capped set
     val b = Occupancy.cap(
       lshBuckets(df, idCol, vecCol, dim, bits, tables, seed),
-      Seq("tbl", "bucket"), maxBucket, persistResult = true, scope = scope)
+      Seq("tbl", "bucket"), maxBucket, persistResult = true)
     val a = b.select(col(idCol).as("id_a"), col("tbl"), col("bucket"))
     val bb = b.select(col(idCol).as("id_b"), col("tbl"), col("bucket"))
     val cand = a.join(bb, Seq("tbl", "bucket"))
@@ -178,12 +177,11 @@ object Similarity {
                     centroids: Array[Array[Double]],
                     threshold: Double = 0.95,
                     probes: Int = 1,
-                    score: (Column, Column) => Column = cosine,
-                    scope: CacheScope = CacheScope.sessionManaged): DataFrame = {
+                    score: (Column, Column) => Column = cosine): DataFrame = {
     // persisted: both sides of the candidate self-join scan the assigned
     // corpus (and assignment is an nlist-way argmin per row)
-    val cells = scope.persist(df.select(col(idCol),
-      explode(Ivf.probeCells(col(vecCol), centroids, probes)).as("cid")))
+    val cells = df.select(col(idCol),
+      explode(Ivf.probeCells(col(vecCol), centroids, probes)).as("cid")).persist()
     val cand = cells.select(col(idCol).as("id_a"), col("cid"))
       .join(cells.select(col(idCol).as("id_b"), col("cid")), "cid")
       .filter(col("id_a") < col("id_b"))

@@ -242,11 +242,10 @@ object MultimodalPack {
           .select((col("doc_id") + DUP_OFFSET).as("doc_id"), col("content")))
       val feats = corpus
         .select(col("doc_id"), Multimodal.featuresStub(col("content")).as("feat"))
-      val pairs = graft.operators.CacheScope.sessionManaged.persist(
-        Similarity.cosineNearDup(
-          feats, "doc_id", "feat", threshold = 0.9999,
-          dim = 8, bits = 8, tables = 4)
-      ) // two consumers (twin probe + shape audit); harness clearCache releases
+      val pairs = Similarity.cosineNearDup(
+        feats, "doc_id", "feat", threshold = 0.9999,
+        dim = 8, bits = 8, tables = 4)
+        .persist() // two consumers (twin probe + shape audit); Stage.query releases
       val twins = pairs
         .filter(col("id_a") < 50 && col("id_b") === col("id_a") + DUP_OFFSET)
         .select(col("id_a").as("doc_id"),

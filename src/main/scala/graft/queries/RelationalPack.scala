@@ -970,10 +970,9 @@ object RelationalPack {
         |FROM st ORDER BY lag""".stripMargin) { (s, d) =>
       val e = Tables.events(s, d).select(to_date(col("ts")).as("dt"))
       val d0 = e.agg(min(col("dt")).as("d0"))
-      val dc = graft.operators.CacheScope.sessionManaged.persist(
-        e.crossJoin(broadcast(d0)) // 1-row aggregate: statically bounded
-          .select(datediff(col("dt"), col("d0")).cast("long").as("day"))
-          .groupBy("day").agg(count(lit(1)).as("c")))
+      val dc = e.crossJoin(broadcast(d0)) // 1-row aggregate: statically bounded
+        .select(datediff(col("dt"), col("d0")).cast("long").as("day"))
+        .groupBy("day").agg(count(lit(1)).as("c")).persist()
       Seq(1L, 2L, 3L, 7L).map { k =>
         val a = dc.select(col("day"), col("c").as("x"))
         val b = dc.select((col("day") - k).as("day"), col("c").as("y"))

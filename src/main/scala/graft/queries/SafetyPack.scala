@@ -482,20 +482,15 @@ object SafetyPack {
         .map(_._3)
       val bkt = cuts.map(c => when(col("x") > lit(c), 1L).otherwise(0L))
         .reduce(_ + _).as("bkt")
-      // session-scoped persist (ADVICE r16 — the bare .persist() was never
-      // released): the registry convention for a cached intermediate that
-      // the RETURNED lazy plan still consumes (cf. Dedup.nearDuplicates,
-      // q47's token cache) is CacheScope.sessionManaged — Bench/Verify
-      // release it via clearCache() between queries, and a long-lived
-      // library session owns the lifecycle by passing a tracking scope
-      // and calling release(). A try/finally unpersist here would fire
+      // persisted for the RETURNED lazy plan's four consumers (cf.
+      // Dedup.nearDuplicates, q47's token cache); the caller's Stage.query
+      // releases it at query end. A try/finally unpersist here would fire
       // before the plan ever executes (no action runs inside this
       // builder), and dropping the persist costs ~0.5 s/run (measured
       // r17: the four consumers re-run cls's final agg even with
       // ReuseExchange deduping the shuffle).
-      val cls = graft.operators.CacheScope.sessionManaged.persist(
-        docs.select(col("source"), col("lang"), bkt)
-          .groupBy("source", "lang", "bkt").agg(count(lit(1)).as("cnt")))
+      val cls = docs.select(col("source"), col("lang"), bkt)
+        .groupBy("source", "lang", "bkt").agg(count(lit(1)).as("cnt")).persist()
       val tot = cls.groupBy("source", "lang").agg(sum(col("cnt")).as("ct"))
       val glob = cls.groupBy("bkt").agg(sum(col("cnt")).as("g"))
       val n = cls.agg(sum(col("cnt")).as("n"))

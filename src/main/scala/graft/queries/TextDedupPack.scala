@@ -1379,9 +1379,8 @@ object TextDedupPack {
       val corpus = docs.unionByName(
         docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + NATIVE_TWIN_OFF).as("doc_id"), col("text")))
-      val pairs = graft.operators.CacheScope.sessionManaged.persist(
-        Dedup.nearDuplicates(corpus, "doc_id", "text")
-      ) // two consumers (twin probe + shape audit); harness clearCache releases
+      val pairs = Dedup.nearDuplicates(corpus, "doc_id", "text")
+        .persist() // two consumers (twin probe + shape audit); Stage.query releases
       val twins = pairs
         .filter(col("id_a") < 50 && col("id_b") === col("id_a") + NATIVE_TWIN_OFF)
         .select(col("id_a").as("doc_id"),
@@ -1422,9 +1421,8 @@ object TextDedupPack {
         docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + NATIVE_TWIN_OFF).as("doc_id"), col("text")))
       val sim = Dedup.simHash64(corpus, "doc_id", "text")
-      val pairs = graft.operators.CacheScope.sessionManaged.persist(
-        Dedup.simHashNearDup(sim, "doc_id", maxDist = 8)
-      ) // two consumers (twin probe + shape audit); harness clearCache releases
+      val pairs = Dedup.simHashNearDup(sim, "doc_id", maxDist = 8)
+        .persist() // two consumers (twin probe + shape audit); Stage.query releases
       val twins = pairs
         .filter(col("id_a") < 50 && col("id_b") === col("id_a") + NATIVE_TWIN_OFF)
         .select(col("id_a").as("doc_id"),
@@ -1464,10 +1462,9 @@ object TextDedupPack {
         docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + NATIVE_TWIN_OFF).as("doc_id"), col("text")))
       val pairs = Dedup.nearDuplicates(corpus, "doc_id", "text")
-      val cc = graft.operators.CacheScope.sessionManaged.persist(
-        graft.operators.Components
-          .connectedComponents(pairs.select("id_a", "id_b"), "id_a", "id_b")
-      ) // three consumers below; harness clearCache releases (cf. q47)
+      val cc = graft.operators.Components
+        .connectedComponents(pairs.select("id_a", "id_b"), "id_a", "id_b")
+        .persist() // three consumers below; Stage.query releases (cf. q47)
       val a = cc.filter(col("id") < 50)
         .select(col("id").as("doc_id"), col("component").as("ca"))
       val b = cc.filter(col("id") >= NATIVE_TWIN_OFF)

@@ -770,27 +770,6 @@ class DedupSpec extends AnyFunSuite {
     assert(graft.operators.Occupancy.cap(df, Seq("k"), Int.MaxValue).count() == 100)
   }
 
-  test("CacheScope releases operator-held caches; default stays session-managed") {
-    import graft.operators.CacheScope
-    // direct lifecycle: a scope-persisted frame is cached until release()
-    val df = docs.limit(10)
-    val s1 = CacheScope()
-    s1.persist(df)
-    df.count()
-    assert(df.storageLevel.useMemory)
-    s1.release()
-    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(s1.heldCount == 0)
-    // through an operator: nearDuplicates persists shingles + signatures +
-    // capped buckets into the caller's scope, all released at once
-    val s2 = CacheScope()
-    Dedup.nearDuplicates(docs, "doc_id", "text", scope = s2).count()
-    assert(s2.heldCount >= 3, s"expected >=3 held caches, got ${s2.heldCount}")
-    s2.release()
-    assert(s2.heldCount == 0)
-    spark.catalog.clearCache()
-  }
-
   test("verifyJaccard computes exact set Jaccard on a known fixture") {
     val docsFx = Seq(
       (1L, "a b c d e"),   // grams: abc bcd cde
