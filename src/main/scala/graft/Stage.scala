@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.streaming.Streams.deleteRecursively
 
@@ -53,6 +55,40 @@ object Stage {
       dir
     }
 
+  /** `rows` staged as `k` single-file batches, written once per (name, sf
+    * dir): the replayable arrival stream [[graft.streaming.Streams.replay]]
+    * reads one file per micro-batch. `rows`' integer `slot` column names
+    * each row's batch (0 until k) and is not staged; a slot computed from
+    * row content (a hash of the row key, or an order-sensitive source's
+    * own tag) makes batch membership independent of how `rows` was
+    * partitioned. Batch b is file `batchNN.parquet` with the b-th of
+    * strictly increasing mtimes — the file source orders by mtime, so
+    * arrival order is slot order — and an empty slot still writes its
+    * empty file, so batch id equals slot. */
+  def batches(name: String, sfDir: String, k: Int)(rows: => DataFrame): String =
+    once(name, sfDir) {
+      val dir = scratch(name)
+      val tagged = rows.persist()
+      try (0 until k).foreach { b =>
+        val tmp = scratch(s"$name-tmp-")
+        tagged.filter(col("slot") === b).drop("slot")
+          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
+          .find(_.getName.endsWith(".parquet"))
+          .getOrElse(sys.error(s"Stage.batches: no part file for batch $b"))
+        val target = dir.resolve(f"batch$b%02d.parquet")
+        Files.move(part.toPath, target)
+        // Files.setLastModifiedTime throws where File.setLastModified
+        // returns false: a filesystem that rejects mtime writes fails the
+        // staging loudly instead of replaying batches out of order
+        Files.setLastModifiedTime(target,
+          java.nio.file.attribute.FileTime.fromMillis(1000000L * (b + 1)))
+        deleteRecursively(tmp)
+      }
+      finally tagged.unpersist(blocking = false)
+      dir.toString
+    }
+
   /** The per-(name, sf dir) store dir, emptied on every call: each run
     * starts from an empty store and no run leaves a new dir behind. */
   def cleared(name: String, sfDir: String): Path = {
@@ -87,7 +123,7 @@ object Stage {
     finally {
       spark.catalog.clearCache()
       sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before(id)) rdd.unpersist(blocking = true)
+        if (!before(id)) SessionBridge.unpersist(rdd)
       }
     }
   }

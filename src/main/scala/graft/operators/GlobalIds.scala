@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   * The range exchange is materialized via `localCheckpoint`, NOT
   * `persist`: both consumers (the per-partition counts and the returned
   * plan) read the same materialized blocks, no cache-manager entry is
-  * created, and the blocks free themselves when the returned frame is
-  * garbage-collected — so composing these operators repeatedly in one
-  * session (q173 calls assign per epoch) accumulates nothing. The
+  * created, and the enclosing [[graft.Stage.query]] scope releases the
+  * blocks when the query ends — so composing these operators repeatedly
+  * in one query (q173 calls assign per epoch) leaves nothing held. The
   * r10-shipped `persist` had no reachable unpersist: the caller never saw
   * the internal frame, and the returned plan was built on it, so even the
   * operator couldn't release it before the caller's action ran.

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import graft.operators.Changes
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,11 +15,6 @@ import org.apache.spark.sql.types.DecimalType
   * aggregation, keep attribute history as validity intervals.
   */
 object ChangeDataPack {
-
-  /** Staged 3-file copy of events per sf dir — the micro-batch replay
-    * source for q116, one file per AvailableNow batch. */
-  private def stagedEventBatches(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Stage.parquet("graft-q116-src-", d)(Tables.load(s, d, "events").repartition(3))
 
   def all: Seq[QueryDef] = Seq(
 
@@ -115,7 +111,7 @@ object ChangeDataPack {
         .orderBy("user_id", "version_no")
     },
 
-    // ---- q116: streaming incremental CDC compaction (foreachBatch MERGE) ---
+    // ---- q116: streaming incremental CDC compaction (per-batch MERGE) -----
     // The deploy shape of q105: the changelog arrives as micro-batches and
     // each batch MERGEs into a persistent compacted state table — compact
     // the batch (one partial agg), union with current state, re-compact,
@@ -139,30 +135,25 @@ object ChangeDataPack {
         |  FROM events)
         |WHERE rn = 1
         |ORDER BY user_id, event_type""".stripMargin) { (s, d) =>
-      val srcDir = stagedEventBatches(s, d)
+      val srcDir = TemporalPack.stagedEventBatches(s, d)
       // the returned plan lazily reads the final version: no eager delete
       val store = Stage.cleared("graft-q116-state-", d)
-      val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = Tables.normalizeTs(s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir))
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val latest = Streams.replay(s, srcDir, Option.empty[String])((prev, batch, batchId) => {
         val compactBatch = Changes.latestByKey(
           batch.select("user_id", "event_type", "ts", "event_id", "value"),
           keys = Seq("user_id", "event_type"), ord = Seq("ts", "event_id"))
-        val merged = Option(latest.get()) match {
-          case Some(prev) =>
+        val merged = prev match {
+          case Some(p) =>
             Changes.mergeCompacted(
-              batch.sparkSession.read.parquet(prev).unionByName(compactBatch),
+              batch.sparkSession.read.parquet(p).unionByName(compactBatch),
               keys = Seq("user_id", "event_type"), ord = Seq("ts", "event_id"))
           case None => compactBatch
         }
         val next = s"$store/v$batchId"
         merged.write.mode("overwrite").parquet(next)
-        latest.set(next)
+        Some(next)
       })
-      s.read.parquet(latest.get())
+      s.read.parquet(latest.get)
         .select(col("user_id"), col("event_type"),
           col("ts").as("last_ts"), col("value").as("last_value"),
           col("n_versions"))

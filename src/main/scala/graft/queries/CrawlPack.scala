@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -265,7 +266,7 @@ object CrawlPack {
     // to crawl ingest: each micro-batch of documents reduces to its own
     // (canonical_url, url) increment rows — cnt / min_id / recovered are
     // all mergeable (sum, min, min) — persisted under batch_id (idempotent
-    // dynamic overwrite under foreachBatch's at-least-once replay). The
+    // dynamic overwrite under at-least-once batch replay). The
     // final ledger sum/min-merges the stored increments per (canonical,
     // url), then folds to canonical groups, so the streaming gate
     // hash-matches batch q221's oracle VERBATIM no matter how ingest was
@@ -281,11 +282,7 @@ object CrawlPack {
       "q225_stream_url_dedup", URL_DEDUP_ORACLE) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q225-url-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         canonicalUrls(batch)
           .groupBy("canonical_url", "url")
           .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("min_id"),
@@ -335,7 +332,7 @@ object CrawlPack {
     // (top-K of a union == top-K of per-part top-Ks), so each micro-batch
     // reduces to ≤ K candidate rows per domain (its own TopKRows pass),
     // persisted under batch_id (idempotent dynamic overwrite under
-    // foreachBatch's at-least-once replay); the final fold re-takes top-K
+    // at-least-once batch replay); the final fold re-takes top-K
     // over the candidate store. Hash-matches batch q232's oracle VERBATIM
     // no matter how ingest was batched — the scheduler's keep-set is
     // stable across restarts by construction (same salted priority, same
@@ -350,11 +347,7 @@ object CrawlPack {
       "q235_stream_domain_quota", DOMAIN_QUOTA_ORACLE) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q235-quota-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         quotaTopK(quotaProject(batch))
           .select(col("regdom"), col("doc_id"), col("prio"))
           // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
@@ -587,11 +580,7 @@ object CrawlPack {
       "q227_stream_overlap_matrix", SRC_OVERLAP_ORACLE) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q227-ovl-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         batch
           .select(col("source"), explode(split(col("text"), " ")).as("tok"))
           .distinct()

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import graft.etl.Etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -287,7 +288,7 @@ object EtlPack {
     // micro-batch, not at the next full audit. The census is a count
     // grid (sums — a commutative monoid), so each batch persists its own
     // ≤ fields×1 increment idempotently (dynamic overwrite under
-    // foreachBatch's at-least-once replay) and the gate's answer
+    // at-least-once batch replay) and the gate's answer
     // sum-merges the stored increments before the declared-schema join.
     // Hash-matches batch q286's oracle VERBATIM however ingest was
     // batched (the q105/q130/q180/q216 shared-oracle pairing).
@@ -295,11 +296,7 @@ object EtlPack {
       "q290_stream_schema_drift", Q286_ORACLE) { (s, d) =>
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q290-drift-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         driftCounts(driftWire(batch))
           // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
           // literal in the plan, so the write stages codegen-cache across

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import graft.operators.Rounds
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -255,7 +256,7 @@ object GraphPack {
     * rounds and may cycle below that), so a warm recurrence can never
     * land bit-exactly on the round-5 snapshot. What IS exactly replayable
     * is the warm recurrence itself: batch membership is portable
-    * (tag = pmod(id_a + id_b, 4)) and arrival-ordered (stagedTaggedBatches),
+    * (slot = pmod(id_a + id_b, 4)) and arrival-ordered (Stage.batches),
     * batch 0 runs the cold 5-round ladder, every later batch runs
     * WARM_PR_ROUNDS warm rounds from the carried rank table with
     * first-seen nodes at the uniform 1e6 (Graph.warmStartPageRank's exact
@@ -746,7 +747,7 @@ object GraphPack {
     // ---- q241: streaming incremental label propagation ---------------------
     // The q194/q200 versioned-state pattern applied to the community
     // view: match edges arrive (the staged Jaccard-pair files,
-    // maxFilesPerTrigger=1) and every micro-batch re-derives the
+    // one per trigger) and every micro-batch re-derives the
     // LPA_ROUNDS community assignment of the graph seen so far — the
     // ingest-time shape of topic/community tracking over a growing
     // near-dup graph. State is the accumulated edge list in versioned
@@ -765,13 +766,7 @@ object GraphPack {
       "q241_stream_incremental_lpa", LPA_MATCH_ORACLE) { (s, d) =>
       val srcDir = stagedPairBatches(s, d)
       val store = Stage.cleared("graft-q241-lpa-", d)
-      val latestLabels =
-        new java.util.concurrent.atomic.AtomicReference[String](null)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val latestLabels = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
         // append-only edge store (r19, cf. q303's surgery): O(batch)
         // write per micro-batch instead of the O(E) full rewrite. LPA
@@ -791,9 +786,9 @@ object GraphPack {
             .unionAll(mp.select(col("doc_b").as("u"), col("doc_a").as("v"))))
         val labelsV = s"$store/labels_v$batchId"
         labels.write.mode("overwrite").parquet(labelsV)
-        latestLabels.set(labelsV)
+        Some(labelsV)
       })
-      Option(latestLabels.get()) match {
+      latestLabels match {
         case Some(last) =>
           s.read.parquet(last)
             .groupBy("lab")
@@ -823,16 +818,11 @@ object GraphPack {
     // carries the per-batch cost next to q241's.
     QueryDef(
       "q308_warm_stream_lpa", WARM_LPA_ORACLE) { (s, d) =>
-      val srcDir = stagedTaggedBatches("graft-q308-src-",
-        jaccardPairs(s, d).select("doc_a", "doc_b"), "doc_a", "doc_b", d)
+      val srcDir = Stage.batches("graft-q308-src-", d, 4)(jaccardPairs(s, d)
+        .select(col("doc_a"), col("doc_b"),
+          pmod(col("doc_a") + col("doc_b"), lit(4)).as("slot")))
       val store = Stage.cleared("graft-q308-lpa-", d)
-      val latestLabels =
-        new java.util.concurrent.atomic.AtomicReference[String](null)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val latestLabels = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
         // append-only edge store (r19, cf. q303): O(batch) write per
         // micro-batch instead of the O(E) full rewrite
@@ -851,9 +841,9 @@ object GraphPack {
           else lpaLabelsFrom(sym, None, LPA_ROUNDS)
         val labelsV = s"$store/labels_v$batchId"
         labels.write.mode("overwrite").parquet(labelsV)
-        latestLabels.set(labelsV)
+        Some(labelsV)
       })
-      Option(latestLabels.get()) match {
+      latestLabels match {
         case Some(last) =>
           s.read.parquet(last)
             .groupBy("lab")
@@ -980,16 +970,11 @@ object GraphPack {
          |ORDER BY cluster_id, doc_id""".stripMargin) { (s, d) =>
       val srcDir = stagedPairBatches(s, d)
       val store = Stage.cleared("graft-q194-cc-", d)
-      val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val latest = Streams.replay(s, srcDir, Option.empty[String])((prev, batch, batchId) => {
         val newEdges = batch.select(col("doc_a").as("u"), col("doc_b").as("v"))
-        val merged = Option(latest.get()) match {
-          case Some(prev) =>
-            batch.sparkSession.read.parquet(prev)
+        val merged = prev match {
+          case Some(p) =>
+            batch.sparkSession.read.parquet(p)
               .select(col("id").as("u"), col("component").as("v"))
               .unionByName(newEdges)
           case None => newEdges
@@ -998,9 +983,9 @@ object GraphPack {
           .connectedComponents(merged, "u", "v")
         val next = s"$store/v$batchId"
         comp.write.mode("overwrite").parquet(next)
-        latest.set(next)
+        Some(next)
       })
-      Option(latest.get()) match {
+      latest match {
         case Some(last) =>
           s.read.parquet(last)
             .select(col("component").as("cluster_id"), col("id").as("doc_id"),
@@ -1081,7 +1066,7 @@ object GraphPack {
     // ---- q200: streaming incremental PageRank over the match graph ---------
     // q194's versioned-state pattern applied to the last iterative-family
     // member: match edges ARRIVE (the staged winnow-pair files,
-    // maxFilesPerTrigger=1) and every micro-batch re-derives the
+    // one per trigger) and every micro-batch re-derives the
     // centrality ranking of the graph seen so far — the ingest-time shape
     // of q124's canonical-doc selection, where each pair discovery can
     // reshuffle which cluster member is canonical. State is the
@@ -1105,13 +1090,7 @@ object GraphPack {
       "q200_stream_incremental_pagerank", PR_MATCH_ORACLE) { (s, d) =>
       val srcDir = stagedWinnowPairBatches(s, d)
       val store = Stage.cleared("graft-q200-pr-", d)
-      val latestRanks =
-        new java.util.concurrent.atomic.AtomicReference[String](null)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val latestRanks = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
         // append-only edge store (r19, cf. q303's surgery): O(batch)
         // write per micro-batch instead of the O(E) full rewrite. PR
@@ -1131,9 +1110,9 @@ object GraphPack {
           .fixedPointPageRank(sym, "u", "v", iters = 5)
         val ranksV = s"$store/ranks_v$batchId"
         pr.write.mode("overwrite").parquet(ranksV)
-        latestRanks.set(ranksV)
+        Some(ranksV)
       })
-      Option(latestRanks.get()) match {
+      latestRanks match {
         case Some(last) =>
           s.read.parquet(last)
             .select(col("id").as("doc_id"), col("r").as("pr_rank"))
@@ -1164,16 +1143,11 @@ object GraphPack {
     // O(E·W/5) with W=2, measured in INCREMENTAL_LEDGER.md.
     QueryDef(
       "q303_warm_stream_pagerank", WARM_PR_ORACLE) { (s, d) =>
-      val srcDir = stagedTaggedBatches("graft-q303-src-",
-        winnowMatchPairs(s, d).select("id_a", "id_b"), "id_a", "id_b", d)
+      val srcDir = Stage.batches("graft-q303-src-", d, 4)(winnowMatchPairs(s, d)
+        .select(col("id_a"), col("id_b"),
+          pmod(col("id_a") + col("id_b"), lit(4)).as("slot")))
       val store = Stage.cleared("graft-q303-warmpr-", d)
-      val latestRanks =
-        new java.util.concurrent.atomic.AtomicReference[String](null)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val latestRanks = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
         // append-only edge store (r19): write THIS batch's edges under
         // their batch_id partition, read the accumulated store back —
@@ -1196,9 +1170,9 @@ object GraphPack {
             graft.operators.Graph.fixedPointPageRank(sym, "u", "v", iters = 5)
         val ranksV = s"$store/ranks_v$batchId"
         pr.write.mode("overwrite").parquet(ranksV)
-        latestRanks.set(ranksV)
+        Some(ranksV)
       })
-      Option(latestRanks.get()) match {
+      latestRanks match {
         case Some(last) =>
           s.read.parquet(last)
             .select(col("id").as("doc_id"), col("r").as("pr_rank"))

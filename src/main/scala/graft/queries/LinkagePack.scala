@@ -105,7 +105,7 @@ object LinkagePack {
         Seq(col("k"), col("doc_id")), "rn")
         .select("doc_id", "rn")
         // both sides of the w rank-equi-joins scan it; localCheckpoint, not
-        // persist — no cache entry to leak, blocks free on GC (cf. GlobalIds)
+        // persist — no cache entry; Stage.query frees the blocks (cf. GlobalIds)
         .localCheckpoint()
       val cand = sorted
         .select(col("doc_id").as("id_a"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import graft.operators.{Multimodal, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2223,11 +2224,7 @@ object MultimodalPack {
       "q294_stream_pcm_gate", Q292_ORACLE) { (s, d) =>
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q294-pcm-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         pcmWalk(pcmBlobs(batch))
           // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
           // literal in the plan, so the write stages codegen-cache across

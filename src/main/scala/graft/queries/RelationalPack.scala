@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2194,7 +2195,7 @@ object RelationalPack {
 
     // ---- q253: streaming incremental HITS over arriving event edges --------
     // The q194/q200/q241 versioned-state pattern applied to q247: the
-    // user→item edges ARRIVE (staged 4-file parquet, maxFilesPerTrigger=1)
+    // user→item edges ARRIVE (staged 4-batch parquet, one per trigger)
     // and every micro-batch re-derives hub/authority scores of the graph
     // seen so far. State is the append-only edge store (per-batch
     // increments under batch_id partitions, idempotent dynamic overwrite
@@ -2209,12 +2210,7 @@ object RelationalPack {
       "q253_stream_hits", HITS_ORACLE) { (s, d) =>
       val srcDir = stagedEventEdgeBatches(s, d)
       val store = Stage.cleared("graft-q253-hits-", d)
-      val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val latest = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
         // append-only edge store (r19, cf. q303's surgery): O(batch)
         // write per micro-batch instead of the O(E) full rewrite; the
@@ -2231,9 +2227,9 @@ object RelationalPack {
             col("s").as("score")))
         val scoresV = s"$store/scores_v$batchId"
         scores.write.mode("overwrite").parquet(scoresV)
-        latest.set(scoresV)
+        Some(scoresV)
       })
-      Option(latest.get()) match {
+      latest match {
         case Some(last) =>
           s.read.parquet(last).orderBy("kind", "id")
         case None =>
@@ -2258,15 +2254,10 @@ object RelationalPack {
     // INCREMENTAL_LEDGER.md.
     QueryDef(
       "q304_warm_stream_hits", WARM_HITS_ORACLE) { (s, d) =>
-      val srcDir = TextDedupPack.stagedTaggedBatches("graft-q304-src-",
-        eventEdges(s, d), "u", "v", d)
+      val srcDir = Stage.batches("graft-q304-src-", d, 4)(eventEdges(s, d)
+        .withColumn("slot", pmod(col("u") + col("v"), lit(4))))
       val store = Stage.cleared("graft-q304-hits-", d)
-      val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val latest = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
         // append-only edge store (r19, cf. q303/q253): O(batch) write per
         // micro-batch instead of the O(E) full rewrite; read-side
@@ -2288,9 +2279,9 @@ object RelationalPack {
             col("s").as("score")))
         val scoresV = s"$store/scores_v$batchId"
         scores.write.mode("overwrite").parquet(scoresV)
-        latest.set(scoresV)
+        Some(scoresV)
       })
-      Option(latest.get()) match {
+      latest match {
         case Some(last) =>
           s.read.parquet(last).orderBy("kind", "id")
         case None =>
@@ -2337,11 +2328,12 @@ object RelationalPack {
       .distinct()
   }
 
-  /** One staged 4-file copy of [[eventEdges]] per sf dir — q253's edge
-    * stream (the q247 graph arriving incrementally); cf.
-    * TextDedupPack.stagedPairBatches. */
+  /** [[eventEdges]] staged as 4 batches per sf dir, split by a hash of
+    * the edge — q253's edge stream (the q247 graph arriving
+    * incrementally); cf. TextDedupPack.stagedPairBatches. */
   private def stagedEventEdgeBatches(s: SparkSession, d: String): String =
-    Stage.parquet("graft-q253-src-", d)(eventEdges(s, d).repartition(4))
+    Stage.batches("graft-q253-src-", d, 4)(eventEdges(s, d)
+      .withColumn("slot", pmod(xxhash64(col("u"), col("v")), lit(4))))
 
   /** Shared oracle for q247 (batch HITS) and q253 (streaming incremental
     * HITS — same final edge set ⇒ same scores): 4 mutual-reinforcement

@@ -5,7 +5,7 @@ import graft.streaming.Streams
 import org.apache.spark.sql.functions._
 
 /** Streaming pack (SURVEY.md §2.7): the reference's streaming semantics run
-  * through the REAL streaming engine (readStream → StateStore-backed agg →
+  * through the REAL streaming engine (a file stream → StateStore-backed agg →
   * memory sink, Trigger.AvailableNow), then compared to batch oracles —
   * batch/stream duality means the final complete-mode table must equal the
   * batch answer over the same data.
@@ -302,7 +302,7 @@ object StreamingPack {
     // ---- q84: streaming quality gate — the q70 funnel on a live stream -----
     // Batch/stream duality for the training ops: the quality rules are pure
     // per-row DataFrame expressions (TrainingPack.qualityPassAll — the SAME
-    // Column q73 filters with in batch), so pointing them at readStream
+    // Column q73 filters with in batch), so pointing them at a stream
     // just works; the per-source pass/total counts aggregate in complete
     // mode through the real StateStore path. This is the live ingest-gate a
     // corpus pipeline runs ahead of its batch rebuild.

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import graft.operators.TemporalJoins
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,12 +96,14 @@ object TemporalPack {
       .orderBy("event_type")
   }
 
-  /** Staged 3-file copy of events per sf dir — q180's micro-batch replay
-    * source, one file per AvailableNow batch. Written from the
-    * ts-normalized load so the stream side reads plain zoned timestamps. */
-  private def stagedEventBatches(
+  /** `events` staged as 3 batches per sf dir, split by a hash of
+    * event_id — the micro-batch replay source of q116, q180 and q285.
+    * Written from the ts-normalized load so the stream side reads plain
+    * zoned timestamps. */
+  private[queries] def stagedEventBatches(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    Stage.parquet("graft-q180-src-", d)(Tables.events(s, d).repartition(3))
+    Stage.batches("graft-events-src-", d, 3)(Tables.events(s, d)
+      .withColumn("slot", pmod(xxhash64(col("event_id")), lit(3))))
 
   def all: Seq[QueryDef] = Seq(
 
@@ -166,11 +169,7 @@ object TemporalPack {
     QueryDef("q180_stream_cusum", CUSUM_SQL) { (s, d) =>
       val srcDir = stagedEventBatches(s, d)
       val store = Stage.cleared("graft-q180-hourly-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         batch.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
           .agg(count(lit(1)).as("c"))
           // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
@@ -352,11 +351,7 @@ object TemporalPack {
       val srcDir = stagedEventBatches(s, d)
       val store = Stage.cleared("graft-q285-asof-", d)
       val o = asofOrders(s, d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         TemporalJoins.asofJoin(
           Tables.normalizeTs(batch).select("event_id", "user_id", "ts"),
           "user_id", "ts", o, "k", "ots",

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import graft.operators.{Dedup, Rounds}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -449,8 +450,8 @@ object TextDedupPack {
     * per table. That fixed per-write constant × 4 micro-batches was the
     * recrawl engines' driver-band lever (r18 verdict: q305 ran 5 write
     * jobs per batch, q306/q309 ran 6 — now 2 each). Dynamic partition
-    * overwrite keeps the q85 idempotence under foreachBatch's
-    * at-least-once replay; coalesce(4) bounds file sprawl as before. An
+    * overwrite keeps the q85 idempotence under at-least-once
+    * batch replay; coalesce(4) bounds file sprawl as before. An
     * all-empty batch writes no partition directories (exactly as the
     * per-table form did) — [[readKindOr]] guards the never-written-
     * anything reads.
@@ -523,7 +524,7 @@ object TextDedupPack {
 
   /** Single-table counterpart of [[appendKinds]]: append one
     * micro-batch's increment under its `batch_id` partition (idempotent
-    * dynamic overwrite under foreachBatch's at-least-once replay, the
+    * dynamic overwrite under at-least-once batch replay, the
     * q85 discipline; coalesce(1) — per-batch edge increments are small).
     * The r19 warm-family surgery: q303/q304/q308 used to REWRITE their
     * full accumulated edge set every micro-batch (O(E) write per batch —
@@ -559,85 +560,29 @@ object TextDedupPack {
     kids.exists(k => k.isFile && k.getName.endsWith(".parquet")) ||
       kids.exists(k => k.isDirectory && hasParquetPart(k))
   }
-  /** One staged 4-split copy of `documents` per sf dir — the replayable
-    * "4 ingest days" source q85 streams with maxFilesPerTrigger=1. */
+  /** `documents` staged as 4 batches per sf dir, split by a hash of
+    * doc_id — the replayable "4 ingest days" source q85 and the other
+    * document streams replay one batch per trigger. */
   private[graft] def stagedDocBatches(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Stage.parquet("graft-q85-src-", d)(Tables.documents(s, d).repartition(4))
+    Stage.batches("graft-q85-src-", d, 4)(Tables.documents(s, d)
+      .withColumn("slot", pmod(xxhash64(col("doc_id")), lit(4))))
 
-  /** One staged 4-file copy of the exact-Jaccard PAIR list per sf dir —
-    * the match-edge stream q194 ingests with maxFilesPerTrigger=1 (the
-    * "pairs arrive as candidates are discovered" shape). */
+  /** The exact-Jaccard PAIR list staged as 4 batches per sf dir, split by
+    * a hash of the pair — the match-edge stream q194 ingests (the "pairs
+    * arrive as candidates are discovered" shape). */
   private[queries] def stagedPairBatches(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Stage.parquet("graft-q194-src-", d)(
-      jaccardPairs(s, d).select("doc_a", "doc_b").repartition(4))
+    Stage.batches("graft-q194-src-", d, 4)(jaccardPairs(s, d)
+      .select(col("doc_a"), col("doc_b"),
+        pmod(xxhash64(col("doc_a"), col("doc_b")), lit(4)).as("slot")))
 
-
-  /** Stage an edge list as 4 SINGLE-FILE parquet batches in DETERMINISTIC
-    * arrival order — the q303/q304 warm-recurrence streams are
-    * order-SENSITIVE (the carried rank/hub state makes each batch's
-    * output depend on every previous batch), unlike q194/q200/q253's
-    * set-semantics streams where repartition(4) suffices. Two guarantees:
-    * (a) batch membership is PORTABLE — tag = pmod(colA + colB, 4),
-    * replayed verbatim in the oracle's `tagged` CTE; (b) arrival order is
-    * tag order — one file per tag with strictly increasing mtimes
-    * (FileStreamSource sorts candidates by modification time). An empty
-    * tag still writes its one empty part file (coalesce(1) commits a
-    * single task), so batchId always equals tag. Built on first use per
-    * (prefix, sf dir). */
-  private[queries] def stagedTaggedBatches(
-      prefix: String, pairs: org.apache.spark.sql.DataFrame,
-      ca: String, cb: String, d: String): String = {
-    var built: Option[org.apache.spark.sql.DataFrame] = None
-    lazy val tagged = {
-      val t = pairs.select(col(ca), col(cb),
-        pmod(col(ca) + col(cb), lit(4)).as("__tag")).persist()
-      built = Some(t); t
-    }
-    // try/finally: if a batch write throws mid-build, the persisted
-    // tagged frame must still release (ADVICE r18 — it leaked for the
-    // session on failure)
-    try stagedOrderedBatches(prefix, d,
-      (0 until 4).map(b => () =>
-        tagged.filter(col("__tag") === b.toLong).select(ca, cb)))
-    finally built.foreach(_.unpersist(blocking = false))
-  }
-
-  /** The general ordered-arrival staging under [[stagedTaggedBatches]]:
-    * each thunk's frame becomes one SINGLE-FILE parquet batch whose
-    * mtime pins its arrival slot. Thunks are only evaluated on first
-    * build (the stage is memoized per (prefix, sf dir)). */
-  private[queries] def stagedOrderedBatches(
-      prefix: String, d: String,
-      batches: Seq[() => org.apache.spark.sql.DataFrame]): String =
-    Stage.once(prefix, d) {
-      val dir = Stage.scratch(prefix)
-      batches.zipWithIndex.foreach { case (mk, b) =>
-        val tmp = Stage.scratch(s"$prefix-tmp-")
-        mk().coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"stagedOrderedBatches: no part file for batch $b"))
-        val target = new java.io.File(dir.toFile, f"batch$b%02d.parquet")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        // strictly increasing, coarse-grained mtimes pin arrival order.
-        // Files.setLastModifiedTime THROWS where File.setLastModified
-        // returns false — on a filesystem that rejects mtime writes the
-        // order-sensitive streams (q303/q304/q308) must fail loudly as a
-        // staging error, not degrade into an oracle mismatch (ADVICE r18)
-        java.nio.file.Files.setLastModifiedTime(target.toPath,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L * (b + 1)))
-        graft.streaming.Streams.deleteRecursively(tmp)
-      }
-      dir.toString
-    }
-
-  /** One staged 4-file copy of the WINNOW match-pair list per sf dir —
-    * q200's edge stream (the q109 graph arriving incrementally); cf.
-    * [[stagedPairBatches]] (which stages the q67/q194 Jaccard pairs). */
+  /** The WINNOW match-pair list staged as 4 batches per sf dir, split by a
+    * hash of the pair — q200's edge stream (the q109 graph arriving
+    * incrementally); cf. [[stagedPairBatches]]. */
   private[queries] def stagedWinnowPairBatches(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    Stage.parquet("graft-q200-src-", d)(
-      winnowMatchPairs(s, d).select("id_a", "id_b").repartition(4))
+    Stage.batches("graft-q200-src-", d, 4)(winnowMatchPairs(s, d)
+      .select(col("id_a"), col("id_b"),
+        pmod(xxhash64(col("id_a"), col("id_b")), lit(4)).as("slot")))
 
   /** Spark side of [[pairsSql]]: exact n-gram Jaccard near-dup pairs
     * (doc_a, doc_b, jaccard ≥ 0.5), unordered. Shared by q27 (pair listing),
@@ -1189,9 +1134,9 @@ object TextDedupPack {
 
     // ---- q85: incremental cardinality — per-batch HLL sketches, merged -----
     // The cross-batch story q43's one-pass HLL doesn't cover, run through the
-    // REAL streaming engine: the corpus is staged as 4 parquet splits and
-    // replayed via readStream with maxFilesPerTrigger=1, so each micro-batch
-    // is a genuine ingest day. foreachBatch aggregates a FIXED-SIZE mergeable
+    // REAL streaming engine: the corpus is staged as 4 parquet batches and
+    // replayed one per trigger (Streams.replay), so each micro-batch is a
+    // genuine ingest day. Each batch aggregates a FIXED-SIZE mergeable
     // Datasketches HLL of each batch's normalized fingerprints per source and
     // PERSISTS the sketch bytes next to the batch (a parquet sketch store);
     // the corpus-wide distinct count comes from UNIONING the stored sketches
@@ -1225,11 +1170,7 @@ object TextDedupPack {
       // one reusable store per sf dir, cleared per invocation; never
       // deleted eagerly — the returned plan lazily reads it
       val store = Stage.cleared("graft-q85-sketches-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         batch.select(col("source"), norm.as("fp"))
           .groupBy("source")
           .agg(hll_sketch_agg(col("fp")).as("sk"))
@@ -1294,11 +1235,7 @@ object TextDedupPack {
       val bk = udaf(new graft.functions.BottomKLongs(64))
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q298-kmv-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         batch.select(col("source"), kmvHash.as("h"))
           .groupBy("source").agg(bk(col("h")).as("mins"))
           .select(col("source"), explode(col("mins")).as("h"))
@@ -2186,11 +2123,7 @@ object TextDedupPack {
     QueryDef("q130_stream_countmin", CM_ORACLE) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q130-grid-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         cmCells(batch.select(explode(split(col("text"), " ")).as("t")), "t")
           .groupBy("r", "c").agg(count(lit(1)).as("cnt"))
           // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
@@ -2226,11 +2159,7 @@ object TextDedupPack {
       val topk = udaf(new graft.functions.TopKRows(5))
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q139-topk-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         batch.groupBy("source")
           .agg(topk(col("n_chars").cast("double"), col("doc_id"), col("doc_id")).as("tk"))
           .select(col("source"), explode(col("tk")).as("row"))
@@ -2585,10 +2514,10 @@ object TextDedupPack {
     // ---- q205: streaming HLL — per-batch registers, max-merged -------------
     // q85's incremental-cardinality loop with the portable q204 sketch in
     // place of the engine-specific binary: each micro-batch (real streaming
-    // engine, maxFilesPerTrigger=1) reduces to its own (source, j, m)
+    // engine, one staged batch per trigger) reduces to its own (source, j, m)
     // register rows — O(256 · sources) regardless of batch size — persisted
     // under batch_id with dynamic partition overwrite (idempotent under
-    // foreachBatch's at-least-once replay, the q85/q153 discipline). The
+    // at-least-once batch replay, the q85/q153 discipline). The
     // corpus-wide answer max-merges the stored registers; because register
     // max is associative, commutative, and idempotent, the merged state is
     // IDENTICAL to the single-pass batch sketch no matter how ingest was
@@ -2599,11 +2528,7 @@ object TextDedupPack {
     QueryDef("q205_stream_hll_merge", HLL_ORACLE_STREAM) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q205-hll-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         hllRegisters(batch)
           // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
           // literal in the plan, so the write stages codegen-cache across
@@ -3258,11 +3183,6 @@ object TextDedupPack {
       }) { (s, d) =>
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q305-recrawl-", d)
-      val latest = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
       // TWO appendKinds stores (r19 surgery — was 5 write jobs/batch):
       // doc-state kinds gram|size|bucket, pair-state kinds event|pair
       val docState = s"$store/docstate"
@@ -3276,7 +3196,7 @@ object TextDedupPack {
         ss.range(0).select(col("id").as("doc_a"), col("id").as("doc_b"),
           lit(null).cast("int").as("band"), lit(null).cast("string").as("bh"),
           lit(0).as("batch_id"), lit("").as("kind"))
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch0, batchId) => {
+      val last = Streams.replay(s, srcDir, -1L)((_, batch0, batchId) => {
         // per-batch pipeline planned at the measured store width (r20;
         // see storeWidth / versionedRecrawlClusters — same anti-scaling fix)
         val ss = Rounds.scope(batch0.sparkSession,
@@ -3333,9 +3253,9 @@ object TextDedupPack {
           "event" -> ev.select("doc_a", "doc_b", "band", "bh"),
           "pair" -> verified))
         ev.unpersist(blocking = false)
-        latest.set(batchId)
+        batchId
       })
-      if (latest.get() < 0L) {
+      if (last < 0L) {
         // zero micro-batches fired — match the batch oracle's empty answer
         s.range(0).select(col("id").as("cluster_id"), col("id").as("doc_id"),
           col("id").as("is_canonical"))
@@ -3467,18 +3387,18 @@ object TextDedupPack {
            |FROM comp
            |ORDER BY cluster_id, doc_id""".stripMargin
       }) { (s, d) =>
-      val srcDir = stagedOrderedBatches("graft-q306-src-", d, (0 until 4).map {
-        case 0 => () => Tables.documents(s, d).select(col("doc_id"), col("text"))
-        case b => () => {
+      val srcDir = Stage.batches("graft-q306-src-", d, 4)((0 until 4).map {
+        case 0 => Tables.documents(s, d)
+          .select(col("doc_id"), col("text"), lit(0).as("slot"))
+        case b =>
           val t = split(col("text"), " ")
           Tables.documents(s, d)
             .filter(pmod(col("doc_id"), lit(4)) === b.toLong)
             .select(col("doc_id"), t.as("t"), size(t).cast("long").as("n"))
             .select(col("doc_id"), concat_ws(" ",
               slice(col("t"), lit(1), ((col("n") * 2L + 2L) / 3L).cast("int")))
-              .as("text"))
-        }
-      })
+              .as("text"), lit(b).as("slot"))
+      }.reduce(_ unionByName _))
       versionedRecrawlClusters(s, srcDir, Stage.cleared("graft-q306-recrawl-", d))
     },
 
@@ -3562,14 +3482,15 @@ object TextDedupPack {
            |FROM comp
            |ORDER BY cluster_id, doc_id""".stripMargin
       }) { (s, d) =>
-      val srcDir = stagedOrderedBatches("graft-q309-src-", d, (0 until 4).map {
-        case 0 => () => Tables.documents(s, d).select(col("doc_id"), col("text"))
-        case b => () =>
+      val srcDir = Stage.batches("graft-q309-src-", d, 4)((0 until 4).map {
+        case 0 => Tables.documents(s, d)
+          .select(col("doc_id"), col("text"), lit(0).as("slot"))
+        case b =>
           // deletion notices: a tombstone version with EMPTY text
           Tables.documents(s, d)
             .filter(pmod(col("doc_id"), lit(5)) === b.toLong)
-            .select(col("doc_id"), lit("").as("text"))
-      })
+            .select(col("doc_id"), lit("").as("text"), lit(b).as("slot"))
+      }.reduce(_ unionByName _))
       versionedRecrawlClusters(s, srcDir, Stage.cleared("graft-q309-recrawl-", d))
     },
 
@@ -3585,11 +3506,6 @@ object TextDedupPack {
   private def versionedRecrawlClusters(
       s: org.apache.spark.sql.SparkSession, srcDir: String,
       store: java.nio.file.Path): org.apache.spark.sql.DataFrame = {
-      val latest = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
       // TWO appendKinds stores (r19 surgery — was 6 write jobs/batch):
       // doc-state kinds gram|size|bucket|version (version rows carry the
       // RAW doc_id; the uid-keyed kinds carry uid = doc_id·4 + ver in the
@@ -3606,7 +3522,7 @@ object TextDedupPack {
           col("id").as("ua"), col("id").as("ub"),
           lit(null).cast("int").as("band"), lit(null).cast("string").as("bh"),
           lit(0).as("batch_id"), lit("").as("kind"))
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch0, batchId) => {
+      val last = Streams.replay(s, srcDir, -1L)((_, batch0, batchId) => {
         // the whole per-batch pipeline (derive + write + reconcile joins)
         // plans inside a conf-isolated clone at the measured store width
         // (r20; see storeWidth — the fix for the family's 8c-beats-32c
@@ -3675,9 +3591,9 @@ object TextDedupPack {
           "event" -> ev.select("doc_a", "doc_b", "ua", "ub", "band", "bh"),
           "pair" -> verified))
         ev.unpersist(blocking = false)
-        latest.set(batchId)
+        batchId
       })
-      if (latest.get() < 0L) {
+      if (last < 0L) {
         s.range(0).select(col("id").as("cluster_id"), col("id").as("doc_id"),
           col("id").as("is_canonical"))
       } else {

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import graft.operators.{Occupancy, Packing, Redact, Sampling}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -927,11 +928,7 @@ object TrainingPack {
         te, col("gram"), expectedItems = 1000000L)
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q153-flags-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         batch
           .select(col("doc_id"), assigned.as("split"), split(col("text"), " ").as("t"))
           .filter(col("split") === "train" && size(t) >= DECON_N)
@@ -1256,11 +1253,7 @@ object TrainingPack {
       "q158_stream_priority_sample", PRIO_SAMPLE_SQL) { (s, d) =>
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q158-prio-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         prioDraw(batch)
           .orderBy(col("prio").desc, col("doc_id"))
           .limit(PRIO_K + 1)
@@ -1774,7 +1767,7 @@ object TrainingPack {
     // q197's monitor made incremental — the q105/q116/q130/q205
     // shared-oracle pairing applied to drift: each micro-batch reduces to
     // its own ≤ 8-row bin-count increment persisted under batch_id
-    // (idempotent dynamic overwrite under foreachBatch's at-least-once
+    // (idempotent dynamic overwrite under at-least-once batch
     // replay), and the gate's answer sum-merges the stored increments.
     // Because bin counts merge by exact addition, the merged histogram is
     // IDENTICAL to the one-pass scan no matter how ingest was batched —
@@ -1786,11 +1779,7 @@ object TrainingPack {
       "q216_stream_drift_gate", PSI_ORACLE) { (s, d) =>
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q216-psi-", d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         psiBinCounts(batch)
           // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
           // literal in the plan, so the write stages codegen-cache across

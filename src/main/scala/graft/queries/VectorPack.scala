@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Stage, Tables}
+import graft.streaming.Streams
 import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -201,14 +202,15 @@ object VectorPack {
        |FROM scored
        |ORDER BY vec_id""".stripMargin
 
-  /** One staged 4-split copy of the PLANTED (twinned) corpus per sf dir —
-    * q307's arrival stream. The split is repartition(4)-arbitrary because
-    * q307's answer is split-INDEPENDENT (pair discovery at the later
-    * arrival, keep-lowest at the end); cf. TextDedupPack.stagedDocBatches. */
+  /** The PLANTED (twinned) corpus staged as 4 batches per sf dir, split by
+    * a hash of vec_id — the arrival stream of q307 and of q98's streamed
+    * IVF build. Both answers are split-INDEPENDENT (q307: pair discovery
+    * at the later arrival, keep-lowest at the end; q98: cell appends);
+    * cf. TextDedupPack.stagedDocBatches. */
   private def stagedTwinCorpusBatches(s: SparkSession, d: String): String =
-    Stage.parquet("graft-q307-src-", d)(
+    Stage.batches("graft-q307-src-", d, 4)(
       Similarity.plantTwins(Tables.embeddings(s, d), "vec_id", "embedding",
-        TWIN_OFFSET).repartition(4))
+        TWIN_OFFSET).withColumn("slot", pmod(xxhash64(col("vec_id")), lit(4))))
 
   /** q310's arrival stream: two ADD batches (vec_id parity split of the
     * planted corpus — twin offset is even, so a twin lands in its base's
@@ -220,18 +222,20 @@ object VectorPack {
   private def stagedSemDeleteBatches(s: SparkSession, d: String): String = {
     def corpus = Similarity.plantTwins(
       Tables.embeddings(s, d), "vec_id", "embedding", TWIN_OFFSET)
-    def adds(par: Int) = () => corpus
+    def adds(par: Int) = corpus
       .filter(col("vec_id") % 2 === par)
       .select(col("vec_id"), col("embedding"), lit("a").as("op"))
-    def dels(pred: Column) = () => corpus.filter(pred)
+    def dels(pred: Column) = corpus.filter(pred)
       .select(col("vec_id"),
         lit(null).cast("array<float>").as("embedding"), lit("d").as("op"))
-    TextDedupPack.stagedOrderedBatches("graft-q310-src-", d, Seq(
+    Stage.batches("graft-q310-src-", d, 4)(Seq(
       adds(0), adds(1),
       dels(col("vec_id") < TWIN_OFFSET && col("vec_id") % 7 === 3 ||
         col("vec_id") >= TWIN_OFFSET &&
           (col("vec_id") - TWIN_OFFSET) % 11 === 5),
-      dels(col("vec_id") < TWIN_OFFSET && col("vec_id") % 7 === 6)))
+      dels(col("vec_id") < TWIN_OFFSET && col("vec_id") % 7 === 6))
+      .zipWithIndex.map { case (f, b) => f.withColumn("slot", lit(b)) }
+      .reduce(_ unionByName _))
   }
 
   /** q311's arrival stream: the full twinned corpus at version 0, then
@@ -240,16 +244,17 @@ object VectorPack {
     * exact power-of-two float scaling, so both engines compute the
     * identical revised vector). Order-sensitive (ver = batch id). */
   private def stagedSemUpdateBatches(s: SparkSession, d: String): String = {
-    def rev(b: Int) = () => Tables.embeddings(s, d)
+    def rev(b: Int) = Tables.embeddings(s, d)
       .filter(col("vec_id") % 9 === b)
       .select(col("vec_id"),
         transform(col("embedding"), (x, i) =>
           when(i === 0, (x.cast("double") / 8.0d).cast("float")).otherwise(x))
-          .as("embedding"))
-    TextDedupPack.stagedOrderedBatches("graft-q311-src-", d, Seq(
-      () => Similarity.plantTwins(Tables.embeddings(s, d), "vec_id",
-        "embedding", TWIN_OFFSET).select("vec_id", "embedding"),
-      rev(1), rev(2), rev(3)))
+          .as("embedding"), lit(b).as("slot"))
+    Stage.batches("graft-q311-src-", d, 4)(
+      Similarity.plantTwins(Tables.embeddings(s, d), "vec_id",
+        "embedding", TWIN_OFFSET).select(col("vec_id"), col("embedding"),
+          lit(0).as("slot"))
+        .unionByName(rev(1)).unionByName(rev(2)).unionByName(rev(3)))
   }
 
   /** q310's oracle: q87's scored twins with the two deterministic
@@ -380,9 +385,9 @@ object VectorPack {
         Tables.embeddings(s, d), "vec_id", "embedding", nlist = 16, iters = 2))
 
   /** One STREAMING-BUILT IVF layout (+ its frozen centroids) per sf dir:
-    * the planted corpus is staged as 4 parquet splits and replayed through
-    * the REAL streaming engine (readStream, maxFilesPerTrigger=1,
-    * AvailableNow), each micro-batch cell-assigned with the pre-trained
+    * the planted corpus ([[stagedTwinCorpusBatches]]) is replayed through
+    * the REAL streaming engine (Streams.replay, one staged batch per
+    * trigger), each micro-batch cell-assigned with the pre-trained
     * centroid model and APPENDED to the cell-partitioned layout — the
     * incremental-index-maintenance shape: ingest never rewrites or rescans
     * existing cells, it only adds files to their directories. Built on
@@ -393,12 +398,8 @@ object VectorPack {
         Tables.embeddings(s, d), "vec_id", "embedding", TWIN_OFFSET)
       // the frozen quantizer model — trained once, before ingest starts
       val centroids = semCentroidsFor(corpus, d)
-      val src = Stage.scratch("graft-q98-src-")
       val layout = Stage.scratch("graft-q98-ivf-")
-      corpus.repartition(4).write.mode("overwrite").parquet(src.toString)
-      val stream = s.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src.toString)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, _) =>
+      Streams.replay(s, stagedTwinCorpusBatches(s, d), ())((_, batch, _) =>
         graft.operators.Ivf.writeCellPartitioned(
           batch, "vec_id", "embedding", centroids, layout.toString,
           org.apache.spark.sql.SaveMode.Append))
@@ -794,11 +795,6 @@ object VectorPack {
       val centroids = semCentroidsFor(corpus, d)
       val srcDir = stagedTwinCorpusBatches(s, d)
       val store = Stage.cleared("graft-q307-semdedup-", d)
-      val latest = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
       // TWO write jobs per batch (r19 surgery, cf. q305): vectors + cell
       // assignments land as kinds of ONE appendKinds doc-state table;
       // verified pairs are the second write. readKindOr guards the
@@ -814,7 +810,7 @@ object VectorPack {
         ss.range(0).select(col("id").as("id_a"), col("id").as("id_b"),
           lit(null).cast("double").as("s"),
           lit(0).as("batch_id"), lit("").as("kind"))
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val last = Streams.replay(s, srcDir, -1L)((_, batch, batchId) => {
         val ss = batch.sparkSession
         TextDedupPack.appendKinds(docState, batchId, Seq(
           "vector" -> batch.select("vec_id", "embedding"),
@@ -844,9 +840,9 @@ object VectorPack {
           .select(col("id_a"), col("id_b"),
             cosineDec(col("va"), col("vb")).as("s"))
           .filter(col("s") >= 0.99)))
-        latest.set(batchId)
+        batchId
       })
-      if (latest.get() < 0L) {
+      if (last < 0L) {
         s.range(0).select(col("id").as("vec_id"), col("id").as("kept"),
           col("id").as("dup_of"), col("id").cast("double").as("dup_sim"))
       } else {
@@ -889,11 +885,6 @@ object VectorPack {
       val centroids = semCentroidsFor(corpus, d)
       val srcDir = stagedSemDeleteBatches(s, d)
       val store = Stage.cleared("graft-q310-semdel-", d)
-      val latest = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
       // q307's two appendKinds stores + a third doc-state kind: tomb
       val docState = s"$store/docstate"
       val pairState = s"$store/pairstate"
@@ -906,7 +897,7 @@ object VectorPack {
         ss.range(0).select(col("id").as("id_a"), col("id").as("id_b"),
           lit(null).cast("double").as("s"),
           lit(0).as("batch_id"), lit("").as("kind"))
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val last = Streams.replay(s, srcDir, -1L)((_, batch, batchId) => {
         val ss = batch.sparkSession
         val adds = batch.filter(col("op") === "a")
           .select("vec_id", "embedding")
@@ -937,9 +928,9 @@ object VectorPack {
           .select(col("id_a"), col("id_b"),
             cosineDec(col("va"), col("vb")).as("s"))
           .filter(col("s") >= 0.99)))
-        latest.set(batchId)
+        batchId
       })
-      if (latest.get() < 0L) {
+      if (last < 0L) {
         s.range(0).select(col("id").as("vec_id"), col("id").as("kept"),
           col("id").as("dup_of"), col("id").cast("double").as("dup_sim"))
       } else {
@@ -992,11 +983,6 @@ object VectorPack {
       val centroids = semCentroidsFor(corpus, d)
       val srcDir = stagedSemUpdateBatches(s, d)
       val store = Stage.cleared("graft-q311-semupd-", d)
-      val latest = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
       val docState = s"$store/docstate"
       val pairState = s"$store/pairstate"
       def emptyDocState(ss: org.apache.spark.sql.SparkSession) =
@@ -1008,7 +994,7 @@ object VectorPack {
         ss.range(0).select(col("id").as("id_a"), col("id").as("id_b"),
           lit(null).cast("double").as("s"),
           lit(0).as("batch_id"), lit("").as("kind"))
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) => {
+      val last = Streams.replay(s, srcDir, -1L)((_, batch, batchId) => {
         val ss = batch.sparkSession
         // this batch's versions, keyed by uid = vec_id*4 + ver(=batchId);
         // version rows carry the RAW vec_id (q306's layout)
@@ -1042,9 +1028,9 @@ object VectorPack {
           .select(col("id_a"), col("id_b"),
             cosineDec(col("va"), col("vb")).as("s"))
           .filter(col("s") >= 0.99)))
-        latest.set(batchId)
+        batchId
       })
-      if (latest.get() < 0L) {
+      if (last < 0L) {
         s.range(0).select(col("id").as("vec_id"), col("id").as("kept"),
           col("id").as("dup_of"), col("id").cast("double").as("dup_sim"))
       } else {
@@ -2136,8 +2122,8 @@ object VectorPack {
     // is STATELESS per batch (each corpus row's verdict depends only on
     // itself and the static side — the q188 stream-static gate shape, no
     // StateStore, no watermark), per-batch verdicts persist under
-    // batch_id (idempotent dynamic overwrite under foreachBatch's
-    // at-least-once replay), and the final fold is a plain union — rows
+    // batch_id (idempotent dynamic overwrite under at-least-once
+    // batch replay), and the final fold is a plain union — rows
     // are disjoint across batches. Hash-matches batch q276's oracle
     // VERBATIM no matter how ingest was batched.
     //
@@ -2149,11 +2135,7 @@ object VectorPack {
       val srcDir = stagedDecontamBatches(s, d)
       val store = Stage.cleared("graft-q279-decontam-", d)
       val bench = decontamBench(s, d)
-      val schema = s.read.parquet(srcDir).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(s, stream, (batch, batchId) =>
+      Streams.replay(s, srcDir, ())((_, batch, batchId) =>
         decontamBest(batch, bench)
           // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
           // literal in the plan, so the write stages codegen-cache across
@@ -2214,10 +2196,11 @@ object VectorPack {
         when(col("sim") >= 0.9, 1L).otherwise(0L).as("contaminated"))
   }
 
-  /** One staged 4-file copy of q276's corpus per sf dir — q279's ingest
-    * stream; cf. TextDedupPack.stagedDocBatches. */
+  /** q276's corpus staged as 4 batches per sf dir, split by a hash of
+    * cid — q279's ingest stream; cf. TextDedupPack.stagedDocBatches. */
   private def stagedDecontamBatches(s: SparkSession, d: String): String =
-    Stage.parquet("graft-q279-src-", d)(decontamCorpus(s, d).repartition(4))
+    Stage.batches("graft-q279-src-", d, 4)(decontamCorpus(s, d)
+      .withColumn("slot", pmod(xxhash64(col("cid")), lit(4))))
 
   /** q276/q279's shared oracle — the corpus CTE replays the twin plant,
     * scoring is the q35/q87 decimal-exact cosine, and the ≥0.9 flag is

@@ -48,13 +48,6 @@ object KafkaWire {
       .options(scanOptions(bootstrap, topic, startingOffsets))
       .load()
 
-  /** S2: unbounded scan of the same topic (`spark_kafka_direct.py:21-27`). */
-  def stream(spark: SparkSession, bootstrap: String, topic: String,
-             startingOffsets: String = "earliest"): DataFrame =
-    spark.readStream.format("kafka")
-      .options(scanOptions(bootstrap, topic, startingOffsets))
-      .load()
-
   /** Surrogate wire: wrap (key, value) string columns of `df` into the
     * Kafka schema — deterministic offsets by key order within one
     * partition, epoch timestamp. For tests and oracle-checked queries.

@@ -70,6 +70,16 @@ object Streams {
       .parquet(s"$sfDir/$table.parque[t]")
   }
 
+  /** S2: unbounded scan of a Kafka topic (`spark_kafka_direct.py:21-27`)
+    * with the same options as the batch scan
+    * [[graft.sources.KafkaWire.batch]]. Requires the kafka connector on
+    * the classpath at runtime. */
+  def kafkaStream(spark: SparkSession, bootstrap: String, topic: String,
+                  startingOffsets: String = "earliest"): DataFrame =
+    spark.readStream.format("kafka")
+      .options(graft.sources.KafkaWire.scanOptions(bootstrap, topic, startingOffsets))
+      .load()
+
   /** A3: streaming global COUNT(*) (`spark_kafka_direct.py:35-40`). */
   def globalCount(stream: DataFrame): DataFrame =
     stream.groupBy().count()
@@ -283,29 +293,42 @@ object Streams {
       spark: SparkSession, agg: DataFrame, name: String): DataFrame =
     runToMemory(spark, agg, name, "complete")
 
-  /** Run a (stateless) stream through `foreachBatch` with
-    * Trigger.AvailableNow and an explicit checkpoint, blocking until every
-    * available micro-batch has been processed. The per-batch function runs
-    * BATCH Spark jobs — this is the incremental-ingest shape where each
-    * micro-batch derives and persists its own compact artifact (a sketch,
-    * a signature table, a partial index) next to the data, instead of the
-    * engine holding it as StateStore state. No session clone needed: with
-    * no stateful operator in the stream there is no state store to size,
-    * and the batch jobs inside `f` should see the caller's normal conf.
+  /** Replays a [[graft.Stage.batches]] dir through the streaming engine,
+    * one file per micro-batch (`maxFilesPerTrigger` 1, Trigger.AvailableNow,
+    * a scratch checkpoint), blocking until every batch has run. `f` folds a
+    * driver-side value across the batches in arrival order:
+    * `f(previous, batch, batchId)` runs inside `foreachBatch` and may run
+    * BATCH Spark jobs — the incremental-ingest shape where each micro-batch
+    * derives and persists its own artifact (a sketch, a state version, a
+    * partial index) instead of the engine holding StateStore state. Returns
+    * the last value, `zero` if no batch fired. No session clone: with no
+    * stateful operator there is no state store to size, and the jobs inside
+    * `f` see the caller's conf.
     */
-  def runForeachBatch(spark: SparkSession, stream: DataFrame,
-                      f: (DataFrame, Long) => Unit): Unit = {
-    val ckpt = Stage.scratch("graft-ckpt-feb-")
-    // try/finally spans start() too (cf. runToMemory): a config error that
-    // throws from start() must still clean up the fresh checkpoint dir
-    try {
-      val q = stream.writeStream
-        .foreachBatch(f)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteRecursively(ckpt)
+  def replay[S](spark: SparkSession, dir: String, zero: S)(
+      f: (S, DataFrame, Long) => S): S = {
+    val staged = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .exists(_.getName.endsWith(".parquet"))
+    val state = new java.util.concurrent.atomic.AtomicReference[S](zero)
+    if (staged) {
+      val step: (DataFrame, Long) => Unit =
+        (batch, batchId) => state.set(f(state.get, batch, batchId))
+      val ckpt = Stage.scratch("graft-ckpt-feb-")
+      // try/finally spans start() too (cf. runToMemory): a config error
+      // that throws from start() must still clean up the checkpoint dir
+      try {
+        spark.readStream.schema(spark.read.parquet(dir).schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(dir)
+          .writeStream
+          .foreachBatch(step)
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      } finally deleteRecursively(ckpt)
+    }
+    state.get
   }
 
   private[graft] def deleteRecursively(root: java.nio.file.Path): Unit = {

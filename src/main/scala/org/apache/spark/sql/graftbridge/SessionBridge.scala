@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * overrides (`graft.streaming.Streams.runToMemory`) to a cloned session
   * instead of mutating the caller's — a session-global mutate-and-restore
   * would leak the override to any concurrent query on the same session —
-  * and into the `private[spark]` listener bus.
+  * and into the `private[spark]` listener bus and RDD release.
   */
 object SessionBridge {
 
@@ -29,4 +29,16 @@ object SessionBridge {
     * of a query that just returned. */
   def drainListenerBus(s: SparkSession): Unit =
     s.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Unpersist `rdd`, blocking. A `localCheckpoint`ed RDD is released
+    * through the context: `RDD.unpersist` logs a WARN for each one that
+    * its truncated lineage cannot be recomputed, which a release that
+    * drops such blocks on purpose does not need to say. A later read of
+    * it still fails loudly (`CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`). */
+  def unpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.checkpointData match {
+      case Some(_: org.apache.spark.rdd.LocalRDDCheckpointData[_]) =>
+        rdd.sparkContext.unpersistRDD(rdd.id, blocking = true)
+      case _ => rdd.unpersist(blocking = true)
+    }
 }

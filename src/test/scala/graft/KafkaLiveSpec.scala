@@ -54,7 +54,7 @@ class KafkaLiveSpec extends AnyFunSuite {
     graft.sinks.Sinks.kafkaWrite(
       spark.range(7).select(concat(lit("k"), col("id")).as("key"),
         concat(lit("v"), col("id")).as("value")), bs, topic)
-    val q = graft.sources.KafkaWire.stream(spark, bs, topic)
+    val q = graft.streaming.Streams.kafkaStream(spark, bs, topic)
       .select(col("value").cast("string").as("value"))
       .writeStream.format("memory").queryName("kafka_live_s2")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -59,7 +59,7 @@ class KafkaShapeSpec extends AnyFunSuite {
         s"expected the kafka data-source lookup to be the failing step, got: $msgs")
     }
     failsAtLookup(KafkaWire.batch(spark, "broker:9092", "t"))
-    failsAtLookup(KafkaWire.stream(spark, "broker:9092", "t"))
+    failsAtLookup(graft.streaming.Streams.kafkaStream(spark, "broker:9092", "t"))
     failsAtLookup {
       import spark.implicits._
       Sinks.kafkaWrite(Seq(("k", "v")).toDF("key", "value"), "broker:9092", "t")

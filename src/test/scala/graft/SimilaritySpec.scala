@@ -184,12 +184,10 @@ class SimilaritySpec extends AnyFunSuite {
     try {
       val batchDir = s"$root/batch"
       val streamDir = s"$root/stream"
-      val srcDir = s"$root/src"
       Ivf.writeCellPartitioned(emb, "vec_id", "embedding", centroids, batchDir)
-      emb.repartition(3).write.mode("overwrite").parquet(srcDir)
-      val stream = spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      graft.streaming.Streams.runForeachBatch(spark, stream, (b, _) =>
+      val srcDir = Stage.batches("graft-q98-spec-src-", "spec", 3)(
+        emb.withColumn("slot", pmod(xxhash64(col("vec_id")), lit(3))))
+      graft.streaming.Streams.replay(spark, srcDir, ())((_, b, _) =>
         Ivf.writeCellPartitioned(b, "vec_id", "embedding", centroids, streamDir,
           SaveMode.Append))
       def cells(dir: String) = spark.read.parquet(dir)

@@ -68,10 +68,11 @@ class StageSpec extends AnyFunSuite {
     paths.foreach(p => assert(p.startsWith(Stage.root), p))
   }
 
-  /** "file: word" for every `words` hit in a src/main source, the files
-    * named in `exempt` skipped. */
-  private def sourceHits(words: Seq[String], exempt: Set[String]): Seq[String] = {
-    val root = Paths.get("src/main/scala")
+  /** "file: word" for every `words` hit in a source under `dir`, the
+    * files named in `exempt` skipped. */
+  private def sourceHits(words: Seq[String], exempt: Set[String],
+                         dir: String = "src/main/scala"): Seq[String] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repository root: $root")
     val stream = Files.walk(root)
     try stream.iterator().asScala.toSeq
@@ -95,6 +96,14 @@ class StageSpec extends AnyFunSuite {
     val offenders =
       sourceHits(Seq("clearCache(", "getPersistentRDDs"), Set("Stage.scala")) ++
         sourceHits(Seq("CacheScope"), Set.empty)
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("queries replay through Streams.replay only; readStream lives in Streams.scala") {
+    val offenders =
+      sourceHits(Seq("maxFilesPerTrigger", "foreachBatch", "java.util.concurrent.atomic"),
+        Set.empty, "src/main/scala/graft/queries") ++
+        sourceHits(Seq("readStream"), Set("Streams.scala"))
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
 
