@@ -44,6 +44,10 @@ object GraftSession {
     // predicates this disables are marginal for these plans — every join
     // key here is explicitly filtered or dimension-broadcast.
     c.set("spark.sql.constraintPropagation.enabled", "false")
+    // Whole-stage classes are cached by source text; with the stage id in
+    // the class name, an identical stage body that AQE renumbers compiles
+    // again. Without it the body hits the codegen cache.
+    c.set("spark.sql.codegen.useIdInClassName", "false")
     spark
   }
 

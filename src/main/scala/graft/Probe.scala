@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Dev harness: run one or more queries repeatedly in one session, each
   * iteration in its own [[Stage.query]] (the conditions Bench measures
@@ -13,7 +15,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * (allocation), whole-stage-codegen compiles and their mean time (Spark's
   * CodegenMetrics source) and heap in use. A spike whose GC delta is close
   * to its wall delta is allocation; one with many compiles is codegen; one
-  * with neither is I/O or scheduling. `held` is what stays persistent after
+  * with neither is I/O or scheduling. `jobs` is the Spark jobs the
+  * iteration started (a listener's `onJobStart` count, taken after the
+  * listener bus drained). `held` is what stays persistent after
   * the iteration's release: a nonzero count is a query that leaks blocks.
   *
   * Usage: runMain graft.Probe <q1[,q2,...]> <sfDir> [iters] [plansDir]
@@ -39,6 +43,11 @@ object Probe {
     def gcTimeMs: Long = gcs.map(_.getCollectionTime).sum
     def gcCount: Long = gcs.map(_.getCollectionCount).sum
     val cg = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val jobsStarted = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobsStarted.incrementAndGet()
+    })
+    def jobs: Long = { SessionBridge.drainListenerBus(spark); jobsStarted.get }
     def heapMb: Long = {
       val r = Runtime.getRuntime
       (r.totalMemory - r.freeMemory) / (1024 * 1024)
@@ -46,7 +55,7 @@ object Probe {
     try names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to iters).foreach { i =>
-        val (gct0, gcc0, cgc0) = (gcTimeMs, gcCount, cg.getCount)
+        val (gct0, gcc0, cgc0, jobs0) = (gcTimeMs, gcCount, cg.getCount, jobs)
         val t0 = System.nanoTime()
         var dt = 0.0
         val n = Stage.query(spark) {
@@ -63,6 +72,7 @@ object Probe {
         println(f"[probe] $name iter $i: wall=$dt%.2f s " +
           f"gc=${(gcTimeMs - gct0) / 1000.0}%.2f s (${gcCount - gcc0} colls) " +
           f"codegenCompiles=${cg.getCount - cgc0} (mean ${cg.getSnapshot.getMean}%.0f ms) " +
+          f"jobs=${jobs - jobs0} " +
           f"heap=$heapMb MB ($n rows) " +
           f"held=$heldRdds RDDs, ${heldBytes / 1e6}%.1f MB")
       }

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md / FIXTURES.md §2).
   *
@@ -8,14 +11,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reach the scan via Catalyst, so callers should `select`/`filter` early and
   * let the optimizer prune (verified via `.explain("formatted")`:
   * `PushedFilters` / `ReadSchema`).
+  *
+  * A bare `spark.read.parquet` starts one Spark job to infer the schema from
+  * the footers, before the query's own jobs. Each load here instead reads
+  * with the schema [[schemaOf]] resolved once per path, so a load starts no
+  * job; it still builds a fresh relation with fresh expression IDs, so
+  * self-joins and plans are as before.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+    SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+    SQLConf.PARQUET_BINARY_AS_STRING,
+    SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+    SQLConf.PARQUET_SCHEMA_MERGING_ENABLED).map(_.key)
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once and kept
+    * in [[Stage.once]]. The key is the path, every file under it (path,
+    * size and mtime, listed through Hadoop `FileSystem`) and the session's
+    * values of the confs that change inference, so a rewritten file or a
+    * flipped conf infers again. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val listing = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Iterator.unfold(listing)(it => Option.when(it.hasNext)((it.next(), it)))
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .toSeq.sorted
+    val confs = inferenceConfs.map(k => s"$k=${spark.conf.get(k)}")
+    Stage.once((confs ++ files).mkString("schema|", "|", ""), path) {
+      spark.read.parquet(path).schema
+    }
+  }
+
+  /** The parquet at `path`, read with its [[schemaOf]] schema. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

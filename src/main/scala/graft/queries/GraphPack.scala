@@ -181,7 +181,7 @@ object GraphPack {
     * [[stagedPairBatches]]. */
   private def stagedWalkCorpus(s: org.apache.spark.sql.SparkSession,
                                d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(Stage.parquet("graft-walks-", d)(walkCorpus(s, d)))
+    Tables.parquet(s, Stage.parquet("graft-walks-", d)(walkCorpus(s, d)))
 
 
   /** q217's planted-wedge id offsets (prefix / suffix variant). Disjoint

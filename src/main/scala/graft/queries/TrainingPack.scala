@@ -2894,7 +2894,7 @@ object TrainingPack {
     * TextDedupPack's staged walk corpus for the pattern. */
   private[queries] def unigramNllPerDoc(s: org.apache.spark.sql.SparkSession,
                                d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(Stage.parquet("graft-nllpd-", d)(unigramNllPerDocBuild(s, d)))
+    Tables.parquet(s, Stage.parquet("graft-nllpd-", d)(unigramNllPerDocBuild(s, d)))
 
   private[queries] def unigramNllPerDocBuild(s: org.apache.spark.sql.SparkSession,
                                     d: String): org.apache.spark.sql.DataFrame = {

@@ -31,15 +31,13 @@ object Streams {
 
   /** Streaming scan over the driver's events parquet (S2-surrogate: same
     * shape as a Kafka topic replay — unbounded source API, bounded data).
-    * Schema comes from a batch footer read; ts is normalized to a zoned
+    * Schema comes from [[graft.Tables.schemaOf]]; ts is normalized to a zoned
     * micros TIMESTAMP by [[graft.Tables.normalizeTs]] whichever physical
     * type the generator wrote (nanos-long legacy read or TIMESTAMP_NTZ).
     */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = s"$sfDir/events.parquet"
-    val schema = spark.read.parquet(path).schema
     graft.Tables.normalizeTs(spark.readStream
-      .schema(schema)
+      .schema(graft.Tables.schemaOf(spark, s"$sfDir/events.parquet"))
       // glob, not the bare file path: FileStreamSource requires its base
       // path to be a directory, and the non-glob prefix here is $sfDir
       .parquet(s"$sfDir/events.parque[t]"))
@@ -64,9 +62,8 @@ object Streams {
     * to be a directory, and the non-glob prefix here is `sfDir`. */
   private def tableStream(spark: SparkSession, sfDir: String,
                           table: String): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/$table.parquet").schema
     spark.readStream
-      .schema(schema)
+      .schema(graft.Tables.schemaOf(spark, s"$sfDir/$table.parquet"))
       .parquet(s"$sfDir/$table.parque[t]")
   }
 
@@ -317,7 +314,7 @@ object Streams {
       // try/finally spans start() too (cf. runToMemory): a config error
       // that throws from start() must still clean up the checkpoint dir
       try {
-        spark.readStream.schema(spark.read.parquet(dir).schema)
+        spark.readStream.schema(graft.Tables.schemaOf(spark, dir))
           .option("maxFilesPerTrigger", 1)
           .parquet(dir)
           .writeStream

@@ -28,13 +28,14 @@ class GraftSessionSpec extends AnyFunSuite {
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.constraintPropagation.enabled" -> "false")
+      "spark.sql.constraintPropagation.enabled" -> "false",
+      "spark.sql.codegen.useIdInClassName" -> "false")
     expected.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
   }
 
-  test("codegen class names and the state-store provider stay at Spark's defaults") {
-    Seq(SQLConf.WHOLESTAGE_CODEGEN_USE_ID_IN_CLASS_NAME, SQLConf.STATE_STORE_PROVIDER_CLASS)
-      .foreach { e => assert(spark.conf.get(e.key) == e.defaultValueString, e.key) }
+  test("the state-store provider stays at Spark's default") {
+    val e = SQLConf.STATE_STORE_PROVIDER_CLASS
+    assert(spark.conf.get(e.key) == e.defaultValueString, e.key)
   }
 
   test("SparkSession.builder appears in src/main only in GraftSession.scala") {
