@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
   *   - versioned tables `X_v{b}` / `v{b}` (q194/q200/q241/q253 — the
   *     per-batch REWRITTEN accumulated state; rows at version b ARE the
   *     state the batch processed), and
-  *   - increment partitions `batch_id={b}` (q225/q227/q235 — per-batch
-  *     APPENDED increments; state at b = cumulative rows ≤ b).
+  *   - per-batch increments ([[Stage.append]], named by [[Stage.batchOf]];
+  *     q225/q227/q235 — state at b = cumulative rows ≤ b).
   *
   * Usage: runMain graft.IncrementalLedger [sfDir] [outMd]
   * Writes a markdown ledger (default INCREMENTAL_LEDGER.md) and prints it.
@@ -68,7 +68,6 @@ object IncrementalLedger {
     "q311_semantic_recrawl_updates" -> "graft-q311-semupd-")
 
   private val VersionedDir = "(?:(.+)_)?v(\\d+)".r
-  private val IncrementDir = "batch_id=(\\d+)".r
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -117,26 +116,23 @@ object IncrementalLedger {
           case _ => None
         }
       }
-      // increments either sit directly in the store root (q225-style:
-      // store/batch_id=N) or one level down in NAMED tables (q305/q306:
-      // store/grams/batch_id=N, store/events/batch_id=N, ...) — walk both
+      // increments either sit directly in the store root (q225-style) or
+      // one level down in NAMED tables (q305/q306: store/docstate/...)
+      // — walk both
+      def isIncrement(f: java.io.File) = Stage.batchOf(f.getName).isDefined
       val incRoots: Seq[(String, java.io.File)] =
-        children.collect { case f if IncrementDir.matches(f.getName) =>
+        children.collect { case f if isIncrement(f) =>
           "store" -> f.getParentFile
         }.distinct ++
           children.flatMap { t =>
             Option(t.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
-              .filter(c => c.isDirectory && IncrementDir.matches(c.getName))
+              .filter(c => c.isDirectory && isIncrement(c))
               .map(_ => t.getName -> t)
           }.distinct
       val cumulative = incRoots.flatMap { case (tname, root) =>
         val incs = Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-          .toSeq.flatMap { f =>
-            f.getName match {
-              case IncrementDir(b) => Some((b.toLong, rows(f)))
-              case _ => None
-            }
-          }.sortBy(_._1)
+          .toSeq.flatMap(f => Stage.batchOf(f.getName).map(b => (b, rows(f))))
+          .sortBy(_._1)
         incs.scanLeft((-1L, 0L)) {
           case ((_, acc), (b, n)) => (b, acc + n)
         }.drop(1).map { case (b, n) =>

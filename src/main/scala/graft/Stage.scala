@@ -3,15 +3,17 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path => FsPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.SessionBridge
 
 import graft.streaming.Streams.deleteRecursively
 
 /** The one owner of graft's per-JVM staged state: replayable stream
-  * sources, per-batch stores, driver-held models and scratch dirs, and of
-  * the cache and checkpoint blocks each query makes ([[query]]).
+  * sources, per-batch stores and their format ([[append]]), driver-held
+  * models and scratch dirs, and of the cache and checkpoint blocks each
+  * query makes ([[query]]).
   *
   * Everything on disk lives under [[root]], one temp dir created on first
   * use and deleted at JVM exit by the one shutdown hook. Staged values are
@@ -102,6 +104,102 @@ object Stage {
     * left, without creating or emptying it. */
   def existing(name: String, sfDir: String): Option[Path] =
     Option(memos.get((name, sfDir))).map(_.value).collect { case p: Path => p }
+
+  private val BatchDir = "batch_id=(\\d+)".r
+
+  private def batchDir(store: String, batchId: Long): String =
+    s"$store/batch_id=$batchId"
+
+  /** The batch id of a store subdir that [[append]] wrote, from its name. */
+  def batchOf(dirName: String): Option[Long] = dirName match {
+    case BatchDir(b) => Some(b.toLong)
+    case _ => None
+  }
+
+  /** Writes one micro-batch of a per-batch store: a static overwrite of
+    * `store/batch_id=N`. The store reads back whole with `batch_id` as a
+    * discovered partition column ([[read]]).
+    *
+    * The batch id sits in the path, never in a `lit(batchId)` column, for
+    * two reasons. A per-batch literal inlines into every generated
+    * whole-stage source above the write, so every stage would recompile on
+    * every micro-batch; with the id out of the plan, the write plan is
+    * byte-identical across batches and the codegen cache holds. And the
+    * overwrite covers the batch's own dir only, so a replayed batch
+    * (at-least-once delivery, or a killed attempt's stray part files)
+    * rewrites exactly that dir: the store is replay-idempotent.
+    */
+  def append(store: String, batchId: Long, df: DataFrame): Unit =
+    df.write.mode("overwrite").parquet(batchDir(store, batchId))
+
+  /** [[append]] for several logical tables of one store in ONE write job:
+    * the frames are null-padded to the union schema, tagged with a `kind`
+    * column, unioned and written partitioned by `kind` under the batch's
+    * dir, so each table reads back with a partition-pruned kind filter
+    * ([[readKind]]) for one job submit, commit and listing per batch
+    * instead of one per table. The overwrite is [[append]]'s static one
+    * of the whole batch dir, so a replay drops also a kind the earlier
+    * attempt wrote and this one does not. An all-empty batch writes no
+    * kind dir. */
+  def appendKinds(store: String, batchId: Long, parts: Seq[(String, DataFrame)]): Unit = {
+    val cols = parts.flatMap(_._2.columns).distinct
+    val fieldType = parts.flatMap(_._2.schema.fields.map(f => f.name -> f.dataType)).toMap
+    parts.map { case (kind, df) =>
+      val have = df.columns.toSet
+      df.select(cols.map(c =>
+        (if (have(c)) col(c) else lit(null).cast(fieldType(c))).as(c)): _*)
+        .withColumn("kind", lit(kind))
+    }.reduce(_.unionByName(_))
+      .coalesce(4)
+      .write.mode("overwrite")
+      .partitionBy("kind")
+      .parquet(batchDir(store, batchId))
+  }
+
+  /** The store read back whole, or `empty` when no part file lies under it
+    * (nothing was ever written, so there is no schema to infer and
+    * `read.parquet` would throw). */
+  def read(spark: SparkSession, store: String, empty: => DataFrame): DataFrame =
+    if (hasPart(spark, store)) spark.read.parquet(store) else empty
+
+  /** One `kind` of an [[appendKinds]] store, or `empty` as in [[read]]. A
+    * store with part files but no rows of this kind reads back empty with
+    * the union schema. */
+  def readKind(spark: SparkSession, store: String, kind: String,
+      empty: => DataFrame): DataFrame =
+    if (hasPart(spark, store)) spark.read.parquet(store).where(col("kind") === kind)
+    else empty
+
+  /** The shuffle width for a pipeline over the stores `dirs`: one
+    * partition per 64 MiB of files under them, plus one. Sized from a
+    * driver-side listing, so it starts no Spark job. Per-batch pipelines
+    * over stores of a few MB otherwise plan every exchange at the
+    * session's full width, and the task launch and commit overhead of
+    * those waves outweighs the work; AQE does not coalesce below the
+    * default parallelism. At scale the width saturates at the session's
+    * own ([[graft.operators.Rounds.scope]] clamps it). */
+  def width(spark: SparkSession, dirs: Seq[String]): Long =
+    dirs.map(d => files(spark, d).map(_.getLen).sum).sum / (64L << 20) + 1L
+
+  /** Whether any parquet part file lies under `dir`. */
+  private[graft] def hasPart(spark: SparkSession, dir: String): Boolean =
+    files(spark, dir).exists(_.getPath.getName.endsWith(".parquet"))
+
+  /** Every file under `dir`, none if it does not exist, listed lazily
+    * through Hadoop `FileSystem` so any store scheme works. A checksummed
+    * file system lists through its raw one, so its `.crc` sidecars count.
+    * `listStatus`, not `listFiles`: a located status reads each local
+    * file's permissions, which forks an `ls` per file without native IO. */
+  private def files(spark: SparkSession, dir: String): Iterator[FileStatus] = {
+    val root = new FsPath(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    def walk(p: FsPath): Iterator[FileStatus] = fs.listStatus(p).iterator
+      .flatMap(f => if (f.isDirectory) walk(f.getPath) else Iterator.single(f))
+    if (fs.exists(root)) walk(root) else Iterator.empty
+  }
 
   /** Runs `action` as one query and then releases every block it made: the
     * session's cached frames (`clearCache`) and every RDD that became

@@ -266,7 +266,7 @@ object CrawlPack {
     // to crawl ingest: each micro-batch of documents reduces to its own
     // (canonical_url, url) increment rows — cnt / min_id / recovered are
     // all mergeable (sum, min, min) — persisted under batch_id (idempotent
-    // dynamic overwrite under at-least-once batch replay). The
+    // batch-dir overwrite under at-least-once batch replay). The
     // final ledger sum/min-merges the stored increments per (canonical,
     // url), then folds to canonical groups, so the streaming gate
     // hash-matches batch q221's oracle VERBATIM no matter how ingest was
@@ -283,17 +283,12 @@ object CrawlPack {
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q225-url-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        canonicalUrls(batch)
-          .groupBy("canonical_url", "url")
-          .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("min_id"),
-            min(when(col("canonical_url") === col("expected"), 1L)
-              .otherwise(0L)).as("rec"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          canonicalUrls(batch)
+            .groupBy("canonical_url", "url")
+            .agg(count(lit(1)).as("cnt"), min(col("doc_id")).as("min_id"),
+              min(when(col("canonical_url") === col("expected"), 1L)
+                .otherwise(0L)).as("rec"))))
       s.read.parquet(store.toString)
         .groupBy("canonical_url", "url")
         .agg(sum(col("cnt")).as("cnt"), min(col("min_id")).as("min_id"),
@@ -331,7 +326,7 @@ object CrawlPack {
     // pairing applied to the quota: fixed-K selection is MERGEABLE
     // (top-K of a union == top-K of per-part top-Ks), so each micro-batch
     // reduces to ≤ K candidate rows per domain (its own TopKRows pass),
-    // persisted under batch_id (idempotent dynamic overwrite under
+    // persisted under batch_id (idempotent batch-dir overwrite under
     // at-least-once batch replay); the final fold re-takes top-K
     // over the candidate store. Hash-matches batch q232's oracle VERBATIM
     // no matter how ingest was batched — the scheduler's keep-set is
@@ -348,14 +343,9 @@ object CrawlPack {
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q235-quota-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        quotaTopK(quotaProject(batch))
-          .select(col("regdom"), col("doc_id"), col("prio"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          quotaTopK(quotaProject(batch))
+            .select(col("regdom"), col("doc_id"), col("prio"))))
       quotaTopK(s.read.parquet(store.toString)
           .select("regdom", "doc_id", "prio"))
         .orderBy("regdom", "rk")
@@ -581,15 +571,10 @@ object CrawlPack {
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q227-ovl-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        batch
-          .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-          .distinct()
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          batch
+            .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+            .distinct()))
       overlapMatrix(
         s.read.parquet(store.toString)
           .select(col("source"), col("tok"))

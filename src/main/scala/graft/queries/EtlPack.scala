@@ -287,7 +287,7 @@ object EtlPack {
     // so a producer deploy that changes the wire is caught within a
     // micro-batch, not at the next full audit. The census is a count
     // grid (sums — a commutative monoid), so each batch persists its own
-    // ≤ fields×1 increment idempotently (dynamic overwrite under
+    // ≤ fields×1 increment idempotently (batch-dir overwrite under
     // at-least-once batch replay) and the gate's answer
     // sum-merges the stored increments before the declared-schema join.
     // Hash-matches batch q286's oracle VERBATIM however ingest was
@@ -297,13 +297,8 @@ object EtlPack {
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q290-drift-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        driftCounts(driftWire(batch))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          driftCounts(driftWire(batch))))
       val merged = s.read.parquet(store.toString)
         .groupBy("field")
         .agg(sum(col("n_present")).as("n_present"),

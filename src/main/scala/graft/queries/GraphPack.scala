@@ -768,18 +768,14 @@ object GraphPack {
       val store = Stage.cleared("graft-q241-lpa-", d)
       val latestLabels = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
-        // append-only edge store (r19, cf. q303's surgery): O(batch)
-        // write per micro-batch instead of the O(E) full rewrite. LPA
-        // votes are multiplicity-sensitive, and dynamic partition
-        // overwrite keyed by batch_id keeps at-least-once replay
-        // idempotent (a replayed batch rewrites its own partition, never
-        // doubling edges — the same guarantee the old keyed
-        // v{batchId-1} reads bought, r15 ADVICE)
+        // append-only edge store (cf. q303): O(batch) write per
+        // micro-batch instead of the O(E) full rewrite. LPA votes are
+        // multiplicity-sensitive; Stage.append's batch-addressed
+        // overwrite keeps at-least-once replay from doubling edges
         val edges = s"$store/edges"
-        TextDedupPack.appendIncrement(edges, batchId,
-          batch.select(col("doc_a"), col("doc_b")))
-        val mp = TextDedupPack.readStoreOr(ss, edges,
-            batch.select(col("doc_a"), col("doc_b")))
+        Stage.append(edges, batchId,
+          batch.select(col("doc_a"), col("doc_b")).coalesce(1))
+        val mp = Stage.read(ss, edges, batch.select(col("doc_a"), col("doc_b")))
           .select("doc_a", "doc_b")
         val labels = lpaLabels(
           mp.select(col("doc_a").as("u"), col("doc_b").as("v"))
@@ -813,32 +809,30 @@ object GraphPack {
     // when a batch adds few edges, so bounded warm rounds re-settle the
     // community structure. The oracle replays the warm ladder over the
     // deterministic tagged split (WARM_LPA_ORACLE); state (edge set +
-    // label table, versioned parquet, keyed v{batchId-1} reads) is
-    // idempotent under at-least-once replay. INCREMENTAL_LEDGER.md
-    // carries the per-batch cost next to q241's.
+    // label table, versioned parquet, the previous version from the
+    // replay fold) is idempotent under at-least-once replay.
+    // INCREMENTAL_LEDGER.md carries the per-batch cost next to q241's.
     QueryDef(
       "q308_warm_stream_lpa", WARM_LPA_ORACLE) { (s, d) =>
       val srcDir = Stage.batches("graft-q308-src-", d, 4)(jaccardPairs(s, d)
         .select(col("doc_a"), col("doc_b"),
           pmod(col("doc_a") + col("doc_b"), lit(4)).as("slot")))
       val store = Stage.cleared("graft-q308-lpa-", d)
-      val latestLabels = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
+      val latestLabels = Streams.replay(s, srcDir, Option.empty[String])((prev, batch, batchId) => {
         val ss = batch.sparkSession
-        // append-only edge store (r19, cf. q303): O(batch) write per
+        // append-only edge store (cf. q303): O(batch) write per
         // micro-batch instead of the O(E) full rewrite
         val edges = s"$store/edges"
-        TextDedupPack.appendIncrement(edges, batchId,
-          batch.select(col("doc_a"), col("doc_b")))
-        val mp = TextDedupPack.readStoreOr(ss, edges,
-            batch.select(col("doc_a"), col("doc_b")))
+        Stage.append(edges, batchId,
+          batch.select(col("doc_a"), col("doc_b")).coalesce(1))
+        val mp = Stage.read(ss, edges, batch.select(col("doc_a"), col("doc_b")))
           .select("doc_a", "doc_b")
         val sym = mp.select(col("doc_a").as("u"), col("doc_b").as("v"))
           .unionAll(mp.select(col("doc_b").as("u"), col("doc_a").as("v")))
-        val prevLabV = s"$store/labels_v${batchId - 1}"
-        val labels =
-          if (batchId > 0 && new java.io.File(prevLabV).isDirectory)
-            lpaLabelsFrom(sym, Some(ss.read.parquet(prevLabV)), WARM_LPA_ROUNDS)
-          else lpaLabelsFrom(sym, None, LPA_ROUNDS)
+        val labels = prev match {
+          case Some(p) => lpaLabelsFrom(sym, Some(ss.read.parquet(p)), WARM_LPA_ROUNDS)
+          case None => lpaLabelsFrom(sym, None, LPA_ROUNDS)
+        }
         val labelsV = s"$store/labels_v$batchId"
         labels.write.mode("overwrite").parquet(labelsV)
         Some(labelsV)
@@ -1092,17 +1086,14 @@ object GraphPack {
       val store = Stage.cleared("graft-q200-pr-", d)
       val latestRanks = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
-        // append-only edge store (r19, cf. q303's surgery): O(batch)
-        // write per micro-batch instead of the O(E) full rewrite. PR
-        // degrees are multiplicity-sensitive; dynamic partition
-        // overwrite keyed by batch_id keeps at-least-once replay
-        // idempotent (same guarantee as the old keyed v{batchId-1}
-        // reads, r15 ADVICE)
+        // append-only edge store (cf. q303): O(batch) write per
+        // micro-batch instead of the O(E) full rewrite. PR degrees are
+        // multiplicity-sensitive; Stage.append's batch-addressed
+        // overwrite keeps at-least-once replay from doubling edges
         val edges = s"$store/edges"
-        TextDedupPack.appendIncrement(edges, batchId,
-          batch.select(col("id_a"), col("id_b")))
-        val mp = TextDedupPack.readStoreOr(ss, edges,
-            batch.select(col("id_a"), col("id_b")))
+        Stage.append(edges, batchId,
+          batch.select(col("id_a"), col("id_b")).coalesce(1))
+        val mp = Stage.read(ss, edges, batch.select(col("id_a"), col("id_b")))
           .select("id_a", "id_b")
         val sym = mp.select(col("id_a").as("u"), col("id_b").as("v"))
           .unionAll(mp.select(col("id_b").as("u"), col("id_a").as("v")))
@@ -1134,11 +1125,11 @@ object GraphPack {
     // error at equal rounds). Because the integer recurrence has no
     // reachable EXACT fixed point on the fixture (measured r18 — see
     // WARM_PR_ORACLE), the oracle replays the warm ladder itself over the
-    // deterministic tagged batch split; both state tables are versioned
-    // parquet with keyed v{batchId-1} reads (the q200 idempotence
-    // discipline: a replayed micro-batch recomputes ranks_v{b} from
-    // exactly the same inputs). Per-batch cost: 2 keyed joins + 2
-    // map-side-combined aggs per round over the current graph, rounds
+    // deterministic tagged batch split; the edge store is append-only
+    // and the rank table versioned parquet, its previous version taken
+    // from the replay fold (a replayed micro-batch recomputes its
+    // version from exactly the same inputs). Per-batch cost: 2 keyed
+    // joins + 2 map-side-combined aggs per round over the current graph, rounds
     // CONSTANT — the O(E) term q200 pays per batch drops to
     // O(E·W/5) with W=2, measured in INCREMENTAL_LEDGER.md.
     QueryDef(
@@ -1147,27 +1138,25 @@ object GraphPack {
         .select(col("id_a"), col("id_b"),
           pmod(col("id_a") + col("id_b"), lit(4)).as("slot")))
       val store = Stage.cleared("graft-q303-warmpr-", d)
-      val latestRanks = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
+      val latestRanks = Streams.replay(s, srcDir, Option.empty[String])((prev, batch, batchId) => {
         val ss = batch.sparkSession
-        // append-only edge store (r19): write THIS batch's edges under
-        // their batch_id partition, read the accumulated store back —
-        // same cumulative edge frame as the old full rewrite at O(batch)
-        // write cost instead of O(E) per micro-batch
+        // append-only edge store: write THIS batch's edges, read the
+        // accumulated store back — same cumulative edge frame as a full
+        // rewrite at O(batch) write cost instead of O(E) per micro-batch
         val edges = s"$store/edges"
-        TextDedupPack.appendIncrement(edges, batchId,
-          batch.select(col("id_a"), col("id_b")))
-        val mp = TextDedupPack.readStoreOr(ss, edges,
-            batch.select(col("id_a"), col("id_b")))
+        Stage.append(edges, batchId,
+          batch.select(col("id_a"), col("id_b")).coalesce(1))
+        val mp = Stage.read(ss, edges, batch.select(col("id_a"), col("id_b")))
           .select("id_a", "id_b")
         val sym = mp.select(col("id_a").as("u"), col("id_b").as("v"))
           .unionAll(mp.select(col("id_b").as("u"), col("id_a").as("v")))
-        val prevRanksV = s"$store/ranks_v${batchId - 1}"
-        val pr =
-          if (batchId > 0 && new java.io.File(prevRanksV).isDirectory)
+        val pr = prev match {
+          case Some(p) =>
             graft.operators.Graph.warmStartPageRank(sym, "u", "v",
-              ss.read.parquet(prevRanksV), iters = WARM_PR_ROUNDS)
-          else
+              ss.read.parquet(p), iters = WARM_PR_ROUNDS)
+          case None =>
             graft.operators.Graph.fixedPointPageRank(sym, "u", "v", iters = 5)
+        }
         val ranksV = s"$store/ranks_v$batchId"
         pr.write.mode("overwrite").parquet(ranksV)
         Some(ranksV)

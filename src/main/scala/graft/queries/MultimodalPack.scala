@@ -2225,13 +2225,8 @@ object MultimodalPack {
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q294-pcm-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        pcmWalk(pcmBlobs(batch))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          pcmWalk(pcmBlobs(batch))))
       s.read.parquet(store.toString)
         .select("doc_id", "valid", "n_samples", "peak_abs", "sum_sq",
           "n_zero", "rms")

@@ -2198,10 +2198,9 @@ object RelationalPack {
     // user→item edges ARRIVE (staged 4-batch parquet, one per trigger)
     // and every micro-batch re-derives hub/authority scores of the graph
     // seen so far. State is the append-only edge store (per-batch
-    // increments under batch_id partitions, idempotent dynamic overwrite
-    // under at-least-once replay — r19, cf. q303; HITS sums are
-    // multiplicity-sensitive, hence the read-side distinct replacing the
-    // old merge-side one); per batch the full 4 mutual-reinforcement
+    // increments, replay-idempotent through Stage.append, cf. q303;
+    // HITS sums are multiplicity-sensitive, hence the read-side
+    // distinct); per batch the full 4 mutual-reinforcement
     // rounds re-run from uniform inside the Rounds scope. The final
     // batch's output hash-matches batch q247's oracle VERBATIM (mutual
     // reinforcement from uniform is a function of the edge SET, so any
@@ -2212,13 +2211,12 @@ object RelationalPack {
       val store = Stage.cleared("graft-q253-hits-", d)
       val latest = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
         val ss = batch.sparkSession
-        // append-only edge store (r19, cf. q303's surgery): O(batch)
-        // write per micro-batch instead of the O(E) full rewrite; the
-        // read-side distinct() reproduces the old merge-side distinct
-        // exactly (HITS sums are multiplicity-sensitive)
+        // append-only edge store (cf. q303): O(batch) write per
+        // micro-batch instead of the O(E) full rewrite; the read-side
+        // distinct() keeps HITS' multiplicity-sensitive sums on the edge set
         val edges = s"$store/edges"
-        TextDedupPack.appendIncrement(edges, batchId, batch.select("u", "v"))
-        val mp = TextDedupPack.readStoreOr(ss, edges, batch.select("u", "v"))
+        Stage.append(edges, batchId, batch.select("u", "v").coalesce(1))
+        val mp = Stage.read(ss, edges, batch.select("u", "v"))
           .select("u", "v").distinct()
         val (h, a) = graft.operators.Graph.hits(mp, "u", "v", 4)
         val scores = a
@@ -2248,8 +2246,9 @@ object RelationalPack {
     // registry's heaviest bench line (q253 ~10 s = 4 micro-batches × full
     // HITS over the accumulated store). The oracle replays the warm
     // ladder over the deterministic tagged split (see WARM_HITS_ORACLE);
-    // state (append-only edge increments + versioned hub vector) is
-    // idempotent under at-least-once replay (r19, cf. q303).
+    // state (append-only edge increments + versioned hub vector, the
+    // previous version from the replay fold) is idempotent under
+    // at-least-once replay (cf. q303).
     // Per-batch cost: rounds CONSTANT at 2 — measured against q253 in
     // INCREMENTAL_LEDGER.md.
     QueryDef(
@@ -2257,32 +2256,35 @@ object RelationalPack {
       val srcDir = Stage.batches("graft-q304-src-", d, 4)(eventEdges(s, d)
         .withColumn("slot", pmod(col("u") + col("v"), lit(4))))
       val store = Stage.cleared("graft-q304-hits-", d)
-      val latest = Streams.replay(s, srcDir, Option.empty[String])((_, batch, batchId) => {
+      // the fold carries the (hubs, scores) versions the last batch wrote
+      val latest = Streams.replay(s, srcDir,
+          Option.empty[(String, String)])((prev, batch, batchId) => {
         val ss = batch.sparkSession
-        // append-only edge store (r19, cf. q303/q253): O(batch) write per
+        // append-only edge store (cf. q303/q253): O(batch) write per
         // micro-batch instead of the O(E) full rewrite; read-side
-        // distinct() == the old merge-side distinct
+        // distinct() as in q253
         val edges = s"$store/edges"
-        TextDedupPack.appendIncrement(edges, batchId, batch.select("u", "v"))
-        val mp = TextDedupPack.readStoreOr(ss, edges, batch.select("u", "v"))
+        Stage.append(edges, batchId, batch.select("u", "v").coalesce(1))
+        val mp = Stage.read(ss, edges, batch.select("u", "v"))
           .select("u", "v").distinct()
-        val prevHubsV = s"$store/hubs_v${batchId - 1}"
-        val (h, a) =
-          if (batchId > 0 && new java.io.File(prevHubsV).isDirectory)
+        val (h, a) = prev match {
+          case Some((prevHubs, _)) =>
             graft.operators.Graph.warmStartHits(mp, "u", "v",
-              ss.read.parquet(prevHubsV), iters = WARM_HITS_ROUNDS)
-          else graft.operators.Graph.hits(mp, "u", "v", 4)
-        h.write.mode("overwrite").parquet(s"$store/hubs_v$batchId")
+              ss.read.parquet(prevHubs), iters = WARM_HITS_ROUNDS)
+          case None => graft.operators.Graph.hits(mp, "u", "v", 4)
+        }
+        val hubsV = s"$store/hubs_v$batchId"
+        h.write.mode("overwrite").parquet(hubsV)
         val scores = a
           .select(lit("authority").as("kind"), col("id"), col("s").as("score"))
           .unionByName(h.select(lit("hub").as("kind"), col("id"),
             col("s").as("score")))
         val scoresV = s"$store/scores_v$batchId"
         scores.write.mode("overwrite").parquet(scoresV)
-        Some(scoresV)
+        Some((hubsV, scoresV))
       })
       latest match {
-        case Some(last) =>
+        case Some((_, last)) =>
           s.read.parquet(last).orderBy("kind", "id")
         case None =>
           s.range(0).select(col("id").cast("string").as("kind"),

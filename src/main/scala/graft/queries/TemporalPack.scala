@@ -159,7 +159,7 @@ object TemporalPack {
     // The deployed form of q176: the hourly-count materialized view is
     // maintained incrementally from the stream (per-batch keyed count
     // partials — counts are a commutative monoid, so batch boundaries can
-    // straddle hours freely), persisted idempotently (dynamic overwrite of
+    // straddle hours freely), persisted idempotently (batch-dir overwrite of
     // the batch's own partition — a micro-batch retry can never double its
     // rows, cf. q130), and the CUSUM scoring pass runs over the merged MV.
     // Hash-checked against q176's byte-identical oracle: maintenance and
@@ -170,14 +170,9 @@ object TemporalPack {
       val srcDir = stagedEventBatches(s, d)
       val store = Stage.cleared("graft-q180-hourly-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        batch.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-          .agg(count(lit(1)).as("c"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          batch.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
+            .agg(count(lit(1)).as("c"))))
       cusumScore(s.read.parquet(store.toString)
         .groupBy("event_type", "h").agg(sum(col("c")).as("c")))
     },
@@ -339,7 +334,7 @@ object TemporalPack {
     // stream-static gate shape — no StateStore, no watermark), each
     // batch runs the same single-exchange union-window as-of against the
     // deduped dimension, persists its disjoint verdict slice under
-    // batch_id (idempotent dynamic overwrite), and the final fold is a
+    // batch_id (idempotent batch-dir overwrite), and the final fold is a
     // plain union. Hash-matches batch q45's oracle VERBATIM no matter
     // how ingest was batched.
     //
@@ -352,19 +347,14 @@ object TemporalPack {
       val store = Stage.cleared("graft-q285-asof-", d)
       val o = asofOrders(s, d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        TemporalJoins.asofJoin(
-          Tables.normalizeTs(batch).select("event_id", "user_id", "ts"),
-          "user_id", "ts", o, "k", "ots",
-          struct(col("okey"), col("oprice")), asofCol = "__asof")
-          .select(col("event_id"), col("user_id"),
-            col("__asof.okey").as("last_orderkey"),
-            col("__asof.oprice").as("last_totalprice"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          TemporalJoins.asofJoin(
+            Tables.normalizeTs(batch).select("event_id", "user_id", "ts"),
+            "user_id", "ts", o, "k", "ots",
+            struct(col("okey"), col("oprice")), asofCol = "__asof")
+            .select(col("event_id"), col("user_id"),
+              col("__asof.okey").as("last_orderkey"),
+              col("__asof.oprice").as("last_totalprice"))))
       s.read.parquet(store.toString)
         .select("event_id", "user_id", "last_orderkey", "last_totalprice")
         .orderBy("event_id")

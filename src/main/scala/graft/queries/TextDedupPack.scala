@@ -441,125 +441,6 @@ object TextDedupPack {
   private[queries] def sparkGrams(s: org.apache.spark.sql.SparkSession, d: String) =
     sparkGramsOf(Tables.documentsSpread(s, d))
 
-  /** Append one micro-batch's increments for SEVERAL logical store
-    * tables as ONE write job: the frames are null-padded to the union
-    * schema, tagged with a `kind` discriminator, unioned, and written
-    * partitioned by (batch_id, kind) — so each logical table reads back
-    * with a partition-PRUNED kind filter, at the cost of a single
-    * job-submit + commit + directory listing per batch instead of one
-    * per table. That fixed per-write constant × 4 micro-batches was the
-    * recrawl engines' driver-band lever (r18 verdict: q305 ran 5 write
-    * jobs per batch, q306/q309 ran 6 — now 2 each). Dynamic partition
-    * overwrite keeps the q85 idempotence under at-least-once
-    * batch replay; coalesce(4) bounds file sprawl as before. An
-    * all-empty batch writes no partition directories (exactly as the
-    * per-table form did) — [[readKindOr]] guards the never-written-
-    * anything reads.
-    */
-  private[queries] def appendKinds(
-      store: String, batchId: Long,
-      parts: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit = {
-    val cols = parts.flatMap(_._2.columns).distinct
-    val fieldType = parts.flatMap(_._2.schema.fields.map(f => f.name -> f.dataType)).toMap
-    parts.map { case (kind, df) =>
-      val have = df.columns.toSet
-      df.select(cols.map(c =>
-        (if (have(c)) col(c) else lit(null).cast(fieldType(c))).as(c)): _*)
-        .withColumn("kind", lit(kind))
-    }.reduce(_.unionByName(_))
-      .coalesce(4)
-      // batch_id is PATH-addressed (write into store/batch_id=N, never a
-      // lit(batchId) column): a per-batch literal inlines into every
-      // generated whole-stage source above the write, so all of the write
-      // job's stages janino-recompiled on EVERY micro-batch of every run
-      // (ProfileOne r19: q305/q306/q309 paid 84-93 recompiles ≈ 1.6-1.9 s
-      // per WARM iteration). With the batch id out of the plan, the
-      // per-batch plans are byte-identical and the codegen cache holds.
-      // The directory layout (store/batch_id=N/kind=K), read-back schema
-      // (batch_id discovered as a partition column) and the dynamic-
-      // overwrite idempotence under at-least-once replay are unchanged.
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kind")
-      .parquet(s"$store/batch_id=$batchId")
-  }
-
-  /** Measured narrow width for a per-batch store pipeline (r20; guide §2
-    * "make partitioning scale-adaptive", the [[Rounds]] discipline
-    * applied to the streaming-store engines): one shuffle partition per
-    * ~64 MB of accumulated on-disk store, which [[Rounds.scope]] clamps
-    * to [1, the session's configured width]. Sized by a DRIVER-side
-    * directory walk — no Spark job, no extra action per micro-batch.
-    * Rationale: the recrawl/semantic per-batch reconcile pipelines run
-    * ~15-20 exchange-bearing stages per micro-batch over stores that are
-    * a few MB at bench scale; planned at the session width (32 locally)
-    * every one of those stages schedules full-width task waves whose
-    * launch/commit overhead dominates the work — the measured source of
-    * the family's ANTI-scaling (BENCH_r19: q306 ran 2.4× FASTER on 8
-    * cores than 32). AQE cannot fix it: coalescePartitions.
-    * parallelismFirst (default true) refuses to coalesce below
-    * defaultParallelism. At 100 TB the same formula saturates at the
-    * submit-time width (stores are GB-TB), so nothing is tuned to local
-    * mode. */
-  private[queries] def storeWidth(dirs: Seq[String]): Long = {
-    def bytes(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles()).map(_.map(bytes).sum).getOrElse(0L)
-    dirs.map(d => bytes(new java.io.File(d))).sum / (64L << 20) + 1L
-  }
-
-  /** Read one logical table (`kind` partition) back from an
-    * [[appendKinds]] store — or, when the store directory holds no part
-    * file at all (EVERY append was empty, so there is nothing to infer a
-    * schema from and read.parquet would throw AnalysisException — the
-    * r18 ADVICE latent crash), fall back to the caller's typed empty
-    * frame. A store with files but no rows of this kind just filters to
-    * empty with the union schema. */
-  private[queries] def readKindOr(
-      s: org.apache.spark.sql.SparkSession, store: String, kind: String,
-      empty: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (hasParquetPart(new java.io.File(store)))
-      s.read.parquet(store).where(col("kind") === kind)
-    else empty
-
-  /** Single-table counterpart of [[appendKinds]]: append one
-    * micro-batch's increment under its `batch_id` partition (idempotent
-    * dynamic overwrite under at-least-once batch replay, the
-    * q85 discipline; coalesce(1) — per-batch edge increments are small).
-    * The r19 warm-family surgery: q303/q304/q308 used to REWRITE their
-    * full accumulated edge set every micro-batch (O(E) write per batch —
-    * the replay-discipline artifact the r18 verdict named); appending
-    * O(batch) and reading the whole store back gives the identical
-    * cumulative edge frame at O(batch) write cost. */
-  private[queries] def appendIncrement(store: String, batchId: Long,
-      df: org.apache.spark.sql.DataFrame): Unit =
-    // batch_id PATH-addressed, not a lit(batchId) column — see appendKinds:
-    // keeps the per-batch write plan byte-identical so whole-stage codegen
-    // caches across micro-batches AND iterations. Overwriting the batch's
-    // own directory preserves the replay idempotence the dynamic partition
-    // overwrite bought (a replayed batch rewrites exactly its own dir).
-    // One behavioral delta, strictly safer: an EMPTY increment now lands a
-    // zero-row part file (schema-ful) where the dynamic form wrote nothing,
-    // so sparse stores read back with a real schema instead of relying on
-    // the readStoreOr fallback.
-    df.coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$store/batch_id=$batchId")
-
-  /** Guarded read of an [[appendIncrement]] store — the caller's typed
-    * empty frame when no increment ever wrote a part file (cf.
-    * [[readKindOr]]). */
-  private[queries] def readStoreOr(
-      s: org.apache.spark.sql.SparkSession, store: String,
-      empty: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (hasParquetPart(new java.io.File(store))) s.read.parquet(store)
-    else empty
-
-  private[queries] def hasParquetPart(f: java.io.File): Boolean = {
-    val kids = Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-    kids.exists(k => k.isFile && k.getName.endsWith(".parquet")) ||
-      kids.exists(k => k.isDirectory && hasParquetPart(k))
-  }
   /** `documents` staged as 4 batches per sf dir, split by a hash of
     * doc_id — the replayable "4 ingest days" source q85 and the other
     * document streams replay one batch per trigger. */
@@ -1171,15 +1052,10 @@ object TextDedupPack {
       // deleted eagerly — the returned plan lazily reads it
       val store = Stage.cleared("graft-q85-sketches-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        batch.select(col("source"), norm.as("fp"))
-          .groupBy("source")
-          .agg(hll_sketch_agg(col("fp")).as("sk"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          batch.select(col("source"), norm.as("fp"))
+            .groupBy("source")
+            .agg(hll_sketch_agg(col("fp")).as("sk"))))
       val merged = s.read.parquet(store.toString)
         .groupBy("source")
         .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("n_merged"))
@@ -1225,7 +1101,7 @@ object TextDedupPack {
     // ---- q298: streaming KMV — per-batch sketch union ----------------------
     // q297 as the shards stream in (the q205 pattern for KMV): each
     // micro-batch aggregates ITS OWN bottom-64 per source and appends the
-    // values under batch_id (idempotent dynamic overwrite); the final
+    // values under batch_id (idempotent batch-dir overwrite); the final
     // merge re-runs BottomKLongs over the stored union. Capped sorted-set
     // union is associative/commutative/IDEMPOTENT, so min-k(∪ batch
     // min-k) = single-pass min-k whatever the batching — and the result
@@ -1236,15 +1112,10 @@ object TextDedupPack {
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q298-kmv-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        batch.select(col("source"), kmvHash.as("h"))
-          .groupBy("source").agg(bk(col("h")).as("mins"))
-          .select(col("source"), explode(col("mins")).as("h"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          batch.select(col("source"), kmvHash.as("h"))
+            .groupBy("source").agg(bk(col("h")).as("mins"))
+            .select(col("source"), explode(col("mins")).as("h"))))
       kmvFinalize(s, d,
         s.read.parquet(store.toString)
           .groupBy("source").agg(bk(col("h")).as("mins")))
@@ -2124,14 +1995,9 @@ object TextDedupPack {
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q130-grid-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        cmCells(batch.select(explode(split(col("text"), " ")).as("t")), "t")
-          .groupBy("r", "c").agg(count(lit(1)).as("cnt"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          cmCells(batch.select(explode(split(col("text"), " ")).as("t")), "t")
+            .groupBy("r", "c").agg(count(lit(1)).as("cnt"))))
       val counters = s.read.parquet(store.toString)
         .groupBy("r", "c").agg(sum(col("cnt")).as("cnt"))
       val toks = Tables.documents(s, d)
@@ -2160,16 +2026,11 @@ object TextDedupPack {
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q139-topk-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        batch.groupBy("source")
-          .agg(topk(col("n_chars").cast("double"), col("doc_id"), col("doc_id")).as("tk"))
-          .select(col("source"), explode(col("tk")).as("row"))
-          .select(col("source"), col("row._1").as("nch"), col("row._2").as("did"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          batch.groupBy("source")
+            .agg(topk(col("n_chars").cast("double"), col("doc_id"), col("doc_id")).as("tk"))
+            .select(col("source"), explode(col("tk")).as("row"))
+            .select(col("source"), col("row._1").as("nch"), col("row._2").as("did"))))
       s.read.parquet(store.toString)
         .groupBy("source")
         .agg(topk(col("nch"), col("did"), col("did")).as("tk"))
@@ -2516,7 +2377,7 @@ object TextDedupPack {
     // place of the engine-specific binary: each micro-batch (real streaming
     // engine, one staged batch per trigger) reduces to its own (source, j, m)
     // register rows — O(256 · sources) regardless of batch size — persisted
-    // under batch_id with dynamic partition overwrite (idempotent under
+    // under batch_id with a batch-dir overwrite (idempotent under
     // at-least-once batch replay, the q85/q153 discipline). The
     // corpus-wide answer max-merges the stored registers; because register
     // max is associative, commutative, and idempotent, the merged state is
@@ -2529,13 +2390,8 @@ object TextDedupPack {
       val srcDir = stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q205-hll-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        hllRegisters(batch)
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          hllRegisters(batch)))
       val merged = s.read.parquet(store.toString)
         .groupBy("source", "j").agg(max(col("m")).as("m"))
       hllFinalize(merged).orderBy("source")
@@ -3109,8 +2965,8 @@ object TextDedupPack {
     // store of every previous snapshot, and the store grows incrementally
     // — old docs are NEVER re-shingled, re-hashed, or re-bucketed. The
     // q194/q200 versioned-state pattern applied to MinHash-LSH buckets,
-    // with four append-only logical stores (q85's dynamic-partition-
-    // overwrite idempotence), physically packed into TWO appendKinds
+    // with four append-only logical stores (replay-idempotent per-batch
+    // writes, see Stage.append), physically packed into TWO appendKinds
     // tables — doc-state and pair-state — so each micro-batch pays two
     // write jobs, not five (r19 surgery): uncapped grams, gram-set
     // sizes, band buckets
@@ -3197,10 +3053,10 @@ object TextDedupPack {
           lit(null).cast("int").as("band"), lit(null).cast("string").as("bh"),
           lit(0).as("batch_id"), lit("").as("kind"))
       val last = Streams.replay(s, srcDir, -1L)((_, batch0, batchId) => {
-        // per-batch pipeline planned at the measured store width (r20;
-        // see storeWidth / versionedRecrawlClusters — same anti-scaling fix)
+        // per-batch pipeline planned at the measured store width (see
+        // Stage.width / versionedRecrawlClusters — same anti-scaling fix)
         val ss = Rounds.scope(batch0.sparkSession,
-          storeWidth(Seq(docState, pairState)))
+          Stage.width(batch0.sparkSession, Seq(docState, pairState)))
         val batch = SessionBridge.rebind(batch0, ss)
         val docs = batch.select(col("doc_id"), col("text"))
         // new docs' derived state, computed ONCE (never recomputed later),
@@ -3209,7 +3065,7 @@ object TextDedupPack {
         // re-derives the grams AND runs interpreted (measured r18: ~2×
         // per-batch cost on this store)
         val ng = uncappedGramsOf(docs).persist()
-        appendKinds(docState, batchId, Seq(
+        Stage.appendKinds(docState, batchId, Seq(
           "gram" -> ng,
           "size" -> ng.groupBy("doc_id").agg(count(lit(1)).as("n")),
           "bucket" ->
@@ -3217,7 +3073,7 @@ object TextDedupPack {
         ng.unpersist(blocking = false)
         // candidate events: new buckets × accumulated store, capped by
         // CURRENT occupancy (monotone — see scaladoc)
-        val all = readKindOr(ss, docState, "bucket", emptyDocState(ss))
+        val all = Stage.readKind(ss, docState, "bucket", emptyDocState(ss))
         val under = all.groupBy("band", "bh").agg(count(lit(1)).as("nb"))
           .filter(col("nb") <= MAX_BUCKET).select("band", "bh")
         val ev = all.filter(col("batch_id") === batchId)
@@ -3234,8 +3090,8 @@ object TextDedupPack {
         // exact-verify each NEW pair once, by keyed gram-store fetch (a
         // pair always involves a batch doc, so no pair verifies twice)
         val np = ev.select("doc_a", "doc_b").distinct()
-        val g = readKindOr(ss, docState, "gram", emptyDocState(ss))
-        val sz = readKindOr(ss, docState, "size", emptyDocState(ss))
+        val g = Stage.readKind(ss, docState, "gram", emptyDocState(ss))
+        val sz = Stage.readKind(ss, docState, "size", emptyDocState(ss))
         val common = np
           .join(g.select(col("doc_id").as("doc_a"), col("gram")), "doc_a")
           .join(g.select(col("doc_id").as("doc_b"), col("gram")),
@@ -3249,7 +3105,7 @@ object TextDedupPack {
           .filter(jc >= 0.5)
           .select("doc_a", "doc_b")
         // events + verified pairs land as the second (and last) write job
-        appendKinds(pairState, batchId, Seq(
+        Stage.appendKinds(pairState, batchId, Seq(
           "event" -> ev.select("doc_a", "doc_b", "band", "bh"),
           "pair" -> verified))
         ev.unpersist(blocking = false)
@@ -3263,14 +3119,14 @@ object TextDedupPack {
         // final reconcile: FINAL occupancy re-filters the event store, the
         // survivors' verified pairs feed the q67 closure — planned at the
         // measured store width (r20), rebound to the caller
-        val sN = Rounds.scope(s, storeWidth(Seq(docState, pairState)))
-        val allB = readKindOr(sN, docState, "bucket", emptyDocState(sN))
+        val sN = Rounds.scope(s, Stage.width(s, Seq(docState, pairState)))
+        val allB = Stage.readKind(sN, docState, "bucket", emptyDocState(sN))
         val under = allB.groupBy("band", "bh").agg(count(lit(1)).as("nb"))
           .filter(col("nb") <= MAX_BUCKET).select("band", "bh")
-        val kept = readKindOr(sN, pairState, "event", emptyPairState(sN))
+        val kept = Stage.readKind(sN, pairState, "event", emptyPairState(sN))
           .join(under, Seq("band", "bh"))
           .select("doc_a", "doc_b").distinct()
-          .join(readKindOr(sN, pairState, "pair", emptyPairState(sN))
+          .join(Stage.readKind(sN, pairState, "pair", emptyPairState(sN))
             .select("doc_a", "doc_b"),
             Seq("doc_a", "doc_b"))
         Rounds.back(
@@ -3525,11 +3381,11 @@ object TextDedupPack {
       val last = Streams.replay(s, srcDir, -1L)((_, batch0, batchId) => {
         // the whole per-batch pipeline (derive + write + reconcile joins)
         // plans inside a conf-isolated clone at the measured store width
-        // (r20; see storeWidth — the fix for the family's 8c-beats-32c
+        // (see Stage.width — the fix for the family's 8c-beats-32c
         // anti-scaling). Results are partitioning-independent: integer
         // keys, md5 strings, count aggregates, set semantics.
         val ss = Rounds.scope(batch0.sparkSession,
-          storeWidth(Seq(docState, pairState)))
+          Stage.width(batch0.sparkSession, Seq(docState, pairState)))
         val batch = SessionBridge.rebind(batch0, ss)
         // this batch's versions, keyed by uid = doc_id*4 + ver(=batchId);
         // derived state computed ONCE and landed as ONE write job (bands
@@ -3538,7 +3394,7 @@ object TextDedupPack {
         val uidDocs = batch.select(
           (col("doc_id") * 4L + lit(batchId)).as("doc_id"), col("text"))
         val ng = uncappedGramsOf(uidDocs).persist()
-        appendKinds(docState, batchId, Seq(
+        Stage.appendKinds(docState, batchId, Seq(
           "gram" -> ng,
           "size" -> ng.groupBy("doc_id").agg(count(lit(1)).as("n")),
           "bucket" ->
@@ -3546,10 +3402,10 @@ object TextDedupPack {
           "version" -> batch.select("doc_id")))
         ng.unpersist(blocking = false)
         // live-NOW uids from the versions kind (max batch per doc)
-        val liveUid = readKindOr(ss, docState, "version", emptyDocState(ss))
+        val liveUid = Stage.readKind(ss, docState, "version", emptyDocState(ss))
           .groupBy("doc_id").agg(max(col("batch_id")).as("ver"))
           .select((col("doc_id") * 4L + col("ver")).as("doc_id"))
-        val all = readKindOr(ss, docState, "bucket", emptyDocState(ss))
+        val all = Stage.readKind(ss, docState, "bucket", emptyDocState(ss))
         // CUMULATIVE occupancy (every version ever staged — monotone)
         val under = all.groupBy("band", "bh").agg(count(lit(1)).as("nb"))
           .filter(col("nb") <= MAX_BUCKET).select("band", "bh")
@@ -3571,8 +3427,8 @@ object TextDedupPack {
           .persist()
         // exact-verify each new (version-pair) once, by keyed uid fetches
         val np = ev.select("doc_a", "doc_b", "ua", "ub").distinct()
-        val g = readKindOr(ss, docState, "gram", emptyDocState(ss))
-        val sz = readKindOr(ss, docState, "size", emptyDocState(ss))
+        val g = Stage.readKind(ss, docState, "gram", emptyDocState(ss))
+        val sz = Stage.readKind(ss, docState, "size", emptyDocState(ss))
         val common = np
           .join(g.select(col("doc_id").as("ua"), col("gram")), "ua")
           .join(g.select(col("doc_id").as("ub"), col("gram")),
@@ -3587,7 +3443,7 @@ object TextDedupPack {
           .filter(jc >= 0.5)
           .select("doc_a", "doc_b", "ua", "ub")
         // events + verified version-pairs: the second (last) write job
-        appendKinds(pairState, batchId, Seq(
+        Stage.appendKinds(pairState, batchId, Seq(
           "event" -> ev.select("doc_a", "doc_b", "ua", "ub", "band", "bh"),
           "pair" -> verified))
         ev.unpersist(blocking = false)
@@ -3600,19 +3456,19 @@ object TextDedupPack {
         // final reconcile: cumulative cap + both endpoint versions latest —
         // planned at the measured store width like the per-batch pipelines
         // (r20; CC narrows its own rounds already), rebound to the caller
-        val sN = Rounds.scope(s, storeWidth(Seq(docState, pairState)))
-        val lat = readKindOr(sN, docState, "version", emptyDocState(sN))
+        val sN = Rounds.scope(s, Stage.width(s, Seq(docState, pairState)))
+        val lat = Stage.readKind(sN, docState, "version", emptyDocState(sN))
           .groupBy("doc_id").agg(max(col("batch_id")).as("ver"))
           .select((col("doc_id") * 4L + col("ver")).as("uid"))
-        val allB = readKindOr(sN, docState, "bucket", emptyDocState(sN))
+        val allB = Stage.readKind(sN, docState, "bucket", emptyDocState(sN))
         val under = allB.groupBy("band", "bh").agg(count(lit(1)).as("nb"))
           .filter(col("nb") <= MAX_BUCKET).select("band", "bh")
-        val kept = readKindOr(sN, pairState, "event", emptyPairState(sN))
+        val kept = Stage.readKind(sN, pairState, "event", emptyPairState(sN))
           .join(under, Seq("band", "bh"))
           .join(lat.select(col("uid").as("ua")), "ua")
           .join(lat.select(col("uid").as("ub")), "ub")
           .select("doc_a", "doc_b", "ua", "ub").distinct()
-          .join(readKindOr(sN, pairState, "pair", emptyPairState(sN))
+          .join(Stage.readKind(sN, pairState, "pair", emptyPairState(sN))
             .select("doc_a", "doc_b", "ua", "ub"),
             Seq("doc_a", "doc_b", "ua", "ub"))
         Rounds.back(

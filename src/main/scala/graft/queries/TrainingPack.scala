@@ -929,27 +929,22 @@ object TrainingPack {
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q153-flags-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        batch
-          .select(col("doc_id"), assigned.as("split"), split(col("text"), " ").as("t"))
-          .filter(col("split") === "train" && size(t) >= DECON_N)
-          .select(col("doc_id").as("train_doc_id"),
-            explode(array_distinct(transform(
-              sequence(lit(1), size(t) - (DECON_N - 1)),
-              i => concat_ws(" ", (0 until DECON_N).map(k => element_at(t, i + k)): _*)
-            ))).as("gram"))
-          .filter(graft.functions.BloomFuncs.mightContain(bloom, col("gram")))
-          .join(te, "gram")
-          .groupBy("train_doc_id")
-          .agg(
-            countDistinct(col("gram")).as("n_shared_grams"),
-            countDistinct(col("test_doc_id")).as("n_test_docs"),
-            min(col("test_doc_id")).as("min_test_doc"))
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          batch
+            .select(col("doc_id"), assigned.as("split"), split(col("text"), " ").as("t"))
+            .filter(col("split") === "train" && size(t) >= DECON_N)
+            .select(col("doc_id").as("train_doc_id"),
+              explode(array_distinct(transform(
+                sequence(lit(1), size(t) - (DECON_N - 1)),
+                i => concat_ws(" ", (0 until DECON_N).map(k => element_at(t, i + k)): _*)
+              ))).as("gram"))
+            .filter(graft.functions.BloomFuncs.mightContain(bloom, col("gram")))
+            .join(te, "gram")
+            .groupBy("train_doc_id")
+            .agg(
+              countDistinct(col("gram")).as("n_shared_grams"),
+              countDistinct(col("test_doc_id")).as("n_test_docs"),
+              min(col("test_doc_id")).as("min_test_doc"))))
       s.read.parquet(store.toString)
         .select("train_doc_id", "n_shared_grams", "n_test_docs", "min_test_doc")
         .orderBy("train_doc_id")
@@ -1244,7 +1239,7 @@ object TrainingPack {
     // q155's deploy shape for continuous ingest: priorities are mergeable
     // (any element of the global top-(k+1) is in its slice's top-(k+1)),
     // so each micro-batch keeps only its own top-(k+1) draw — k+1 rows of
-    // state per batch, written idempotently (batch_id dynamic overwrite,
+    // state per batch, written idempotently (Stage.append,
     // cf. q130/q139) — and the final sample is the top-(k+1) of the
     // store's union. Same tau/HT math as q155, same oracle, and the
     // stream must land on the byte-identical sample and estimates with
@@ -1254,15 +1249,10 @@ object TrainingPack {
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q158-prio-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        prioDraw(batch)
-          .orderBy(col("prio").desc, col("doc_id"))
-          .limit(PRIO_K + 1)
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          prioDraw(batch)
+            .orderBy(col("prio").desc, col("doc_id"))
+            .limit(PRIO_K + 1)))
       val top = s.read.parquet(store.toString)
         .orderBy(col("prio").desc, col("doc_id"))
         .limit(PRIO_K + 1)
@@ -1767,7 +1757,7 @@ object TrainingPack {
     // q197's monitor made incremental — the q105/q116/q130/q205
     // shared-oracle pairing applied to drift: each micro-batch reduces to
     // its own ≤ 8-row bin-count increment persisted under batch_id
-    // (idempotent dynamic overwrite under at-least-once batch
+    // (idempotent batch-dir overwrite under at-least-once batch
     // replay), and the gate's answer sum-merges the stored increments.
     // Because bin counts merge by exact addition, the merged histogram is
     // IDENTICAL to the one-pass scan no matter how ingest was batched —
@@ -1780,13 +1770,8 @@ object TrainingPack {
       val srcDir = TextDedupPack.stagedDocBatches(s, d)
       val store = Stage.cleared("graft-q216-psi-", d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        psiBinCounts(batch)
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          psiBinCounts(batch)))
       val merged = s.read.parquet(store.toString)
         .groupBy("bin")
         .agg(sum(col("ref_n")).as("ref_n"), sum(col("cur_n")).as("cur_n"))

@@ -797,8 +797,8 @@ object VectorPack {
       val store = Stage.cleared("graft-q307-semdedup-", d)
       // TWO write jobs per batch (r19 surgery, cf. q305): vectors + cell
       // assignments land as kinds of ONE appendKinds doc-state table;
-      // verified pairs are the second write. readKindOr guards the
-      // never-written-anything reconcile (the r18 ADVICE latent crash).
+      // verified pairs are the second write. Stage.readKind guards the
+      // never-written-anything reconcile.
       val docState = s"$store/docstate"
       val pairState = s"$store/pairstate"
       def emptyDocState(ss: org.apache.spark.sql.SparkSession) =
@@ -812,12 +812,12 @@ object VectorPack {
           lit(0).as("batch_id"), lit("").as("kind"))
       val last = Streams.replay(s, srcDir, -1L)((_, batch, batchId) => {
         val ss = batch.sparkSession
-        TextDedupPack.appendKinds(docState, batchId, Seq(
+        Stage.appendKinds(docState, batchId, Seq(
           "vector" -> batch.select("vec_id", "embedding"),
           "cell" -> batch.select(col("vec_id"),
             explode(graft.operators.Ivf.probeCells(
               col("embedding"), centroids, 2)).as("cid"))))
-        val cells = TextDedupPack.readKindOr(ss, docState, "cell",
+        val cells = Stage.readKind(ss, docState, "cell",
           emptyDocState(ss))
         val newC = cells.filter(col("batch_id") === batchId)
           .select(col("vec_id").as("nid"), col("cid"))
@@ -827,9 +827,9 @@ object VectorPack {
           .select(least(col("nid"), col("oid")).as("id_a"),
             greatest(col("nid"), col("oid")).as("id_b"))
           .distinct()
-        val v = TextDedupPack.readKindOr(ss, docState, "vector",
+        val v = Stage.readKind(ss, docState, "vector",
           emptyDocState(ss))
-        TextDedupPack.appendKinds(pairState, batchId, Seq("pair" -> cand
+        Stage.appendKinds(pairState, batchId, Seq("pair" -> cand
           .join(v.select(col("vec_id").as("id_a"), col("embedding").as("va")),
             "id_a")
           .join(v.select(col("vec_id").as("id_b"), col("embedding").as("vb")),
@@ -847,7 +847,7 @@ object VectorPack {
           col("id").as("dup_of"), col("id").cast("double").as("dup_sim"))
       } else {
         // keep-lowest over the ACCUMULATED pair set — q87's exact rule
-        val pairs = TextDedupPack.readKindOr(s, pairState, "pair",
+        val pairs = Stage.readKind(s, pairState, "pair",
           emptyPairState(s))
         val dropped = pairs.groupBy("id_b")
           .agg(min(struct(col("id_a"), col("s"))).as("m"))
@@ -901,13 +901,13 @@ object VectorPack {
         val ss = batch.sparkSession
         val adds = batch.filter(col("op") === "a")
           .select("vec_id", "embedding")
-        TextDedupPack.appendKinds(docState, batchId, Seq(
+        Stage.appendKinds(docState, batchId, Seq(
           "vector" -> adds,
           "cell" -> adds.select(col("vec_id"),
             explode(graft.operators.Ivf.probeCells(
               col("embedding"), centroids, 2)).as("cid")),
           "tomb" -> batch.filter(col("op") === "d").select("vec_id")))
-        val cells = TextDedupPack.readKindOr(ss, docState, "cell",
+        val cells = Stage.readKind(ss, docState, "cell",
           emptyDocState(ss))
         val newC = cells.filter(col("batch_id") === batchId)
           .select(col("vec_id").as("nid"), col("cid"))
@@ -917,9 +917,9 @@ object VectorPack {
           .select(least(col("nid"), col("oid")).as("id_a"),
             greatest(col("nid"), col("oid")).as("id_b"))
           .distinct()
-        val v = TextDedupPack.readKindOr(ss, docState, "vector",
+        val v = Stage.readKind(ss, docState, "vector",
           emptyDocState(ss))
-        TextDedupPack.appendKinds(pairState, batchId, Seq("pair" -> cand
+        Stage.appendKinds(pairState, batchId, Seq("pair" -> cand
           .join(v.select(col("vec_id").as("id_a"), col("embedding").as("va")),
             "id_a")
           .join(v.select(col("vec_id").as("id_b"), col("embedding").as("vb")),
@@ -934,14 +934,14 @@ object VectorPack {
         s.range(0).select(col("id").as("vec_id"), col("id").as("kept"),
           col("id").as("dup_of"), col("id").cast("double").as("dup_sim"))
       } else {
-        val v = TextDedupPack.readKindOr(s, docState, "vector",
+        val v = Stage.readKind(s, docState, "vector",
           emptyDocState(s)).select("vec_id")
-        val tomb = TextDedupPack.readKindOr(s, docState, "tomb",
+        val tomb = Stage.readKind(s, docState, "tomb",
           emptyDocState(s)).select(col("vec_id").as("tid"))
         val live = v.join(tomb, col("vec_id") === col("tid"), "left_anti")
         // keep-lowest over pairs with BOTH endpoints live — the
         // resurrect rule falls out of the restriction
-        val pairs = TextDedupPack.readKindOr(s, pairState, "pair",
+        val pairs = Stage.readKind(s, pairState, "pair",
           emptyPairState(s))
           .join(live.select(col("vec_id").as("id_a")), "id_a")
           .join(live.select(col("vec_id").as("id_b")), "id_b")
@@ -1000,13 +1000,13 @@ object VectorPack {
         // version rows carry the RAW vec_id (q306's layout)
         val uidDocs = batch.select(
           (col("vec_id") * 4L + lit(batchId)).as("vec_id"), col("embedding"))
-        TextDedupPack.appendKinds(docState, batchId, Seq(
+        Stage.appendKinds(docState, batchId, Seq(
           "vector" -> uidDocs,
           "cell" -> uidDocs.select(col("vec_id"),
             explode(graft.operators.Ivf.probeCells(
               col("embedding"), centroids, 2)).as("cid")),
           "version" -> batch.select("vec_id")))
-        val cells = TextDedupPack.readKindOr(ss, docState, "cell",
+        val cells = Stage.readKind(ss, docState, "cell",
           emptyDocState(ss))
         val newC = cells.filter(col("batch_id") === batchId)
           .select(col("vec_id").as("nid"), col("cid"))
@@ -1017,9 +1017,9 @@ object VectorPack {
           .select(least(col("nid"), col("oid")).as("id_a"),
             greatest(col("nid"), col("oid")).as("id_b"))
           .distinct()
-        val v = TextDedupPack.readKindOr(ss, docState, "vector",
+        val v = Stage.readKind(ss, docState, "vector",
           emptyDocState(ss))
-        TextDedupPack.appendKinds(pairState, batchId, Seq("pair" -> cand
+        Stage.appendKinds(pairState, batchId, Seq("pair" -> cand
           .join(v.select(col("vec_id").as("id_a"), col("embedding").as("va")),
             "id_a")
           .join(v.select(col("vec_id").as("id_b"), col("embedding").as("vb")),
@@ -1035,11 +1035,11 @@ object VectorPack {
           col("id").as("dup_of"), col("id").cast("double").as("dup_sim"))
       } else {
         // latest uid per vec_id from the versions kind (max batch wins)
-        val lat = TextDedupPack.readKindOr(s, docState, "version",
+        val lat = Stage.readKind(s, docState, "version",
           emptyDocState(s))
           .groupBy("vec_id").agg(max(col("batch_id")).as("ver"))
           .select((col("vec_id") * 4L + col("ver")).as("uid"))
-        val pairs = TextDedupPack.readKindOr(s, pairState, "pair",
+        val pairs = Stage.readKind(s, pairState, "pair",
           emptyPairState(s))
           .join(lat.select(col("uid").as("id_a")), "id_a")
           .join(lat.select(col("uid").as("id_b")), "id_b")
@@ -2122,7 +2122,7 @@ object VectorPack {
     // is STATELESS per batch (each corpus row's verdict depends only on
     // itself and the static side — the q188 stream-static gate shape, no
     // StateStore, no watermark), per-batch verdicts persist under
-    // batch_id (idempotent dynamic overwrite under at-least-once
+    // batch_id (idempotent batch-dir overwrite under at-least-once
     // batch replay), and the final fold is a plain union — rows
     // are disjoint across batches. Hash-matches batch q276's oracle
     // VERBATIM no matter how ingest was batched.
@@ -2136,13 +2136,8 @@ object VectorPack {
       val store = Stage.cleared("graft-q279-decontam-", d)
       val bench = decontamBench(s, d)
       Streams.replay(s, srcDir, ())((_, batch, batchId) =>
-        decontamBest(batch, bench)
-          // batch_id PATH-addressed (write into store/batch_id=N; no per-batch
-          // literal in the plan, so the write stages codegen-cache across
-          // micro-batches) — identical layout, read-back schema and replay
-          // idempotence; see TextDedupPack.appendIncrement
-          .write.mode("overwrite")
-          .parquet(s"${store}/batch_id=$batchId"))
+        Stage.append(store.toString, batchId,
+          decontamBest(batch, bench)))
       s.read.parquet(store.toString)
         .select("cid", "best_bid", "max_sim", "contaminated")
         .orderBy("cid")

@@ -304,10 +304,8 @@ object Streams {
     */
   def replay[S](spark: SparkSession, dir: String, zero: S)(
       f: (S, DataFrame, Long) => S): S = {
-    val staged = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .exists(_.getName.endsWith(".parquet"))
     val state = new java.util.concurrent.atomic.AtomicReference[S](zero)
-    if (staged) {
+    if (Stage.hasPart(spark, dir)) {
       val step: (DataFrame, Long) => Unit =
         (batch, batchId) => state.set(f(state.get, batch, batchId))
       val ckpt = Stage.scratch("graft-ckpt-feb-")

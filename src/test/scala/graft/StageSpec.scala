@@ -1,14 +1,20 @@
 package graft
 
+import java.io.RandomAccessFile
+import java.net.URI
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Stage]] is the one owner of staged inputs, per-batch stores and
   * driver-held models: memoized per (name, sf dir), nestable, retried after
-  * a failed build, and all on disk under one root. It also owns each
+  * a failed build, and all on disk under one root. It owns the per-batch
+  * store format: a replayed batch rewrites only its own dir, and reads
+  * and sizes list through Hadoop `FileSystem`. It also owns each
   * query's blocks: [[Stage.query]] releases every cache and checkpoint
   * block the query made.
   */
@@ -107,6 +113,105 @@ class StageSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString(", "))
   }
 
+  test("the per-batch store format is spelled out only in Stage.scala") {
+    val offenders =
+      sourceHits(Seq("batch_id=", "partitionOverwriteMode"), Set("Stage.scala")) ++
+        sourceHits(Seq("java.io.File"), Set.empty, "src/main/scala/graft/queries") ++
+        sourceHits(Seq("java.io.File"), Set.empty, "src/main/scala/graft/streaming")
+    assert(offenders.isEmpty, offenders.mkString(", "))
+    assert(Files.readString(Paths.get("src/main/scala/graft/IncrementalLedger.scala"))
+      .contains("Stage.batchOf"))
+  }
+
+  /** The subdir of `store` that holds batch `b`. */
+  private def batchDir(store: String, b: Long): Path =
+    Files.list(Paths.get(store)).iterator().asScala
+      .find(p => Stage.batchOf(p.getFileName.toString).contains(b))
+      .getOrElse(fail(s"no dir for batch $b in $store"))
+
+  test("a replayed append rewrites its batch dir, stray part files included") {
+    import spark.implicits._
+    val store = Stage.scratch("stage-spec-append-").toString
+    Stage.append(store, 0, Seq(1L, 2L).toDF("x"))
+    Stage.append(store, 1, Seq(7L).toDF("x"))
+    // a killed attempt at batch 1 left one more part file in its dir
+    val dir1 = batchDir(store, 1)
+    val part = Files.list(dir1).iterator().asScala.find(_.toString.endsWith(".parquet")).get
+    Files.copy(part, dir1.resolve("part-99999-stray.parquet"))
+    assert(Stage.read(spark, store, spark.emptyDataFrame).count() == 4)
+    Stage.append(store, 1, Seq(3L, 4L).toDF("x"))
+    val rows = Stage.read(spark, store, spark.emptyDataFrame)
+      .select(col("x"), col("batch_id").cast("long")).as[(Long, Long)].collect()
+    assert(rows.sorted.toSeq == Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L)))
+  }
+
+  test("a replayed appendKinds batch keeps no kind the replay left out") {
+    import spark.implicits._
+    val store = Stage.scratch("stage-spec-kinds-").toString
+    def batch(b: Long, as: Seq[Long], bs: Seq[Long]): Unit =
+      Stage.appendKinds(store, b, Seq("a" -> as.toDF("x"), "b" -> bs.toDF("x")))
+    def kind(k: String): Seq[(Long, Long)] =
+      Stage.readKind(spark, store, k, spark.emptyDataFrame)
+        .select(col("x"), col("batch_id").cast("long")).as[(Long, Long)]
+        .collect().sorted.toSeq
+    batch(0, Seq(1L), Seq(10L))
+    batch(1, Seq(2L), Seq(20L))
+    batch(1, Seq(3L), Seq.empty)
+    assert(kind("a") == Seq((1L, 0L), (3L, 1L)))
+    assert(kind("b") == Seq((10L, 0L)))
+  }
+
+  test("read and readKind return the typed empty frame when no dir holds a part file") {
+    val store = Stage.scratch("stage-spec-empty-")
+    Files.createDirectories(store.resolve("batch_id=0"))
+    Files.writeString(store.resolve("batch_id=0/_SUCCESS"), "")
+    val empty = spark.range(0).select(col("id").as("x"))
+    Seq(Stage.read(spark, store.toString, empty),
+      Stage.readKind(spark, store.toString, "a", empty)).foreach { df =>
+      assert(df.schema == empty.schema)
+      assert(df.count() == 0)
+    }
+    assert(Stage.read(spark, store.resolve("missing").toString, empty).count() == 0)
+  }
+
+  /** A `len`-byte file at `p` that takes no disk blocks. */
+  private def sparse(p: Path, len: Long): Unit = {
+    val f = new RandomAccessFile(p.toFile, "rw")
+    try f.setLength(len) finally f.close()
+  }
+
+  test("width counts a 65 MiB store as 2, on a plain path and off file://") {
+    val dir = Stage.scratch("stage-spec-width-")
+    sparse(dir.resolve("part-00000.parquet"), 65L << 20)
+    assert(Stage.width(spark, Seq(dir.toString)) == 2)
+    // the same dir under a scheme other than file, where a java.io.File
+    // walk of the path string finds nothing
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftother.impl", classOf[OtherSchemeFileSystem].getName)
+    val other = s"graftother://$dir"
+    assert(!new java.io.File(other).exists())
+    assert(Stage.width(spark, Seq(other)) == 2)
+    assert(Stage.hasPart(spark, other))
+    assert(Stage.width(spark, Seq(s"$other-missing")) == 1)
+  }
+
+  test("width is the byte sum of every file under a local store / 64 MiB + 1") {
+    import spark.implicits._
+    val store = Stage.scratch("stage-spec-bytes-")
+    Stage.append(store.toString, 0, Seq(1L, 2L).toDF("x"))
+    def bytes(): Long = {
+      val files = Files.walk(store).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+      assert(files.exists(_.toString.endsWith(".crc")))
+      files.map(Files.size).sum
+    }
+    assert(Stage.width(spark, Seq(store.toString)) == 1)
+    // pad to exactly 64 MiB of files, checksum sidecars included
+    sparse(store.resolve("pad"), (64L << 20) - bytes())
+    assert(bytes() == (64L << 20))
+    assert(Stage.width(spark, Seq(store.toString)) == bytes() / (64L << 20) + 1)
+    assert(Stage.width(spark, Seq(store.toString)) == 2)
+  }
+
   private def persistentIds: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
@@ -174,4 +279,10 @@ class StageSpec extends AnyFunSuite {
     assert(builds == 1)
     assert(Stage.query(spark)(spark.read.parquet(first).count()) == 10)
   }
+}
+
+/** The local file system under another scheme: stands in for a store
+  * that is not on `file://`. */
+class OtherSchemeFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("graftother:///")
 }
