@@ -76,6 +76,11 @@ object GraftSession {
       // creation-time only: with isolation on, every session clone binds its
       // own executor classloader, which re-keys the codegen cache per clone
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // file: metadata through java.nio, not a forked chmod/readlink/ls per
+      // call (NioLocal.scala); spark.hadoop.* reaches every Hadoop conf the
+      // session, its clones and its tasks build
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

@@ -188,9 +188,8 @@ object Stage {
   /** Every file under `dir`, none if it does not exist, listed lazily
     * through Hadoop `FileSystem` so any store scheme works. A checksummed
     * file system lists through its raw one, so its `.crc` sidecars count.
-    * `listStatus`, not `listFiles`: a located status reads each local
-    * file's permissions, which forks an `ls` per file without native IO. */
-  private def files(spark: SparkSession, dir: String): Iterator[FileStatus] = {
+    * Plain statuses, not located ones: no block locations are needed. */
+  private[graft] def files(spark: SparkSession, dir: String): Iterator[FileStatus] = {
     val root = new FsPath(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration) match {
       case c: ChecksumFileSystem => c.getRawFileSystem

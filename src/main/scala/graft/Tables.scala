@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -33,13 +32,12 @@ object Tables {
 
   /** The schema `spark.read.parquet(path)` infers, inferred once and kept
     * in [[Stage.once]]. The key is the path, every file under it (path,
-    * size and mtime, listed through Hadoop `FileSystem`) and the session's
-    * values of the confs that change inference, so a rewritten file or a
-    * flipped conf infers again. */
+    * size and mtime, listed by [[Stage.files]]) and the session's values
+    * of the confs that change inference, so a rewritten file or a flipped
+    * conf infers again. A missing path lists nothing and fails in the
+    * read, as the plain read does. */
   def schemaOf(spark: SparkSession, path: String): StructType = {
-    val p = new Path(path)
-    val listing = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
-    val files = Iterator.unfold(listing)(it => Option.when(it.hasNext)((it.next(), it)))
+    val files = Stage.files(spark, path)
       .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
       .toSeq.sorted
     val confs = inferenceConfs.map(k => s"$k=${spark.conf.get(k)}")

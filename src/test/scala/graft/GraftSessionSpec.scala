@@ -15,8 +15,12 @@ class GraftSessionSpec extends AnyFunSuite {
   import TestSpark.spark
 
   test("local() sets its creation-time confs") {
-    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
-    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    val expected = Map(
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+    expected.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
   }
 
   test("every conf tune() sets reads back") {

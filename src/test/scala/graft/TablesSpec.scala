@@ -94,6 +94,14 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.schemaOf(spark, file)("bin").dataType == BinaryType)
   }
 
+  test("a missing path fails in schemaOf as the plain read does") {
+    val missing = Stage.scratch("graft-schema-").resolve("absent.parquet").toString
+    def failure(read: => Any) =
+      intercept[org.apache.spark.sql.AnalysisException](read).getCondition
+    assert(failure(spark.read.parquet(missing)) == "PATH_NOT_FOUND")
+    assert(failure(Tables.schemaOf(spark, missing)) == "PATH_NOT_FOUND")
+  }
+
   test("read.parquet(...).schema appears in src/main only in Tables.scala") {
     val schemaRead = """read\.parquet\((?:[^()]|\([^()]*\))*\)\s*\.schema\b""".r
     val root = Paths.get("src/main/scala")
