@@ -77,15 +77,30 @@ object Streams {
       .options(graft.sources.KafkaWire.scanOptions(bootstrap, topic, startingOffsets))
       .load()
 
+  /** One task wave for the map side of a stateful micro-batch: a
+    * streaming frame is narrowed (`coalesce`, no shuffle) to the session's
+    * task slots, `defaultParallelism`; a batch frame comes back unchanged,
+    * so batch plans stay AQE-sized. Streaming runs with AQE off, so without
+    * this the map side runs one task per source partition whatever its
+    * size: one per `MemoryStream.addData` block, one per Kafka topic
+    * partition. A source with no more partitions than slots (a one-file
+    * trigger, a two-stream union) is left as it is. The state side keeps
+    * its shuffle to `statePartitions` stores. Every stateful transform
+    * below reads its input through here, and nothing else in
+    * `graft.streaming` sets a partition count. */
+  private def oneWave(stream: DataFrame): DataFrame =
+    if (stream.isStreaming) stream.coalesce(stream.sparkSession.sparkContext.defaultParallelism)
+    else stream
+
   /** A3: streaming global COUNT(*) (`spark_kafka_direct.py:35-40`). */
   def globalCount(stream: DataFrame): DataFrame =
-    stream.groupBy().count()
+    oneWave(stream).groupBy().count()
 
   /** Event-time tumbling-window counts — the extension the reference's
     * complete-mode count points at. Complete mode needs no watermark (state
     * = one row per open window, re-emitted each batch). */
   def hourlyCounts(stream: DataFrame): DataFrame =
-    stream
+    oneWave(stream)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
@@ -97,7 +112,7 @@ object Streams {
     * on-time data (asserted in StreamingSpec).
     */
   def hourlyCountsAppend(stream: DataFrame, delay: String = "1 hour"): DataFrame =
-    stream
+    oneWave(stream)
       .withWatermark("ts", delay)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -110,7 +125,7 @@ object Streams {
     */
   def slidingCountsAppend(stream: DataFrame, size: String, slide: String,
                           delay: String = "1 hour"): DataFrame =
-    stream
+    oneWave(stream)
       .withWatermark("ts", delay)
       .groupBy(window(col("ts"), size, slide).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -124,7 +139,7 @@ object Streams {
     */
   def dedupWithinWatermark(stream: DataFrame, keyCol: String,
                            delay: String = "1 hour"): DataFrame =
-    stream.withWatermark("ts", delay).dropDuplicatesWithinWatermark(keyCol)
+    oneWave(stream).withWatermark("ts", delay).dropDuplicatesWithinWatermark(keyCol)
 
   /** Stream-stream inner join with an event-time range: right rows within
     * `[left.ts − windowSec, left.ts]` for the same key. Both sides carry
@@ -138,8 +153,8 @@ object Streams {
                        lKey: String, rKey: String, lTs: String, rTs: String,
                        windowSec: Long, delay: String = "1 hour",
                        joinType: String = "inner"): DataFrame = {
-    val l = left.withWatermark(lTs, delay)
-    val r = right.withWatermark(rTs, delay)
+    val l = oneWave(left).withWatermark(lTs, delay)
+    val r = oneWave(right).withWatermark(rTs, delay)
     l.join(r,
       col(lKey) === col(rKey) &&
         col(rTs) >= col(lTs) - expr(s"INTERVAL $windowSec SECONDS") &&
@@ -179,68 +194,70 @@ object Streams {
                  delay: String = "0 seconds"): Dataset[ClosedSession] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    val gapMs = gapSec * 1000L
-    stream
+    oneWave(stream)
       .withWatermark("ts", delay)
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"), col("ts"))
       .as[SessionEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[OpenSession, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, events: Iterator[SessionEvent], state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(ClosedSession(uid, s.start, s.n))
-          } else {
-            // batch arrival order is arbitrary — restore event-time order
-            val sorted = events.toIndexedSeq.sortBy(e =>
-              (e.ts.getTime, e.ts.getNanos, e.event_id))
-            var open = state.getOption
-            // very-late events (> gap BEFORE the open session's start)
-            // cannot belong to it; they gap-cluster among themselves and
-            // their sessions emit at batch end (best-effort for extreme
-            // lateness — they never reopen already-emitted history)
-            var late = Option.empty[OpenSession]
-            val closed = IndexedSeq.newBuilder[ClosedSession]
-            sorted.foreach { e =>
-              val ms = e.ts.getTime
-              open match {
-                case Some(s) if ms < s.start.getTime - gapMs =>
-                  late match {
-                    case Some(l) if ms - l.lastMs <= gapMs =>
-                      late = Some(OpenSession(l.start, math.max(l.lastMs, ms), l.n + 1))
-                    case Some(l) =>
-                      closed += ClosedSession(uid, l.start, l.n)
-                      late = Some(OpenSession(e.ts, ms, 1))
-                    case None =>
-                      late = Some(OpenSession(e.ts, ms, 1))
-                  }
-                case Some(s) if ms - s.lastMs <= gapMs =>
-                  // merge-eligible (incl. late-but-within-gap events)
-                  // WITHOUT moving bounds backwards — a regressing lastMs
-                  // would rewind the event-time timeout and mis-split on
-                  // the next in-order event
-                  val start =
-                    if (e.ts.compareTo(s.start) < 0) e.ts else s.start
-                  open = Some(OpenSession(start, math.max(s.lastMs, ms), s.n + 1))
-                case Some(s) =>
-                  closed += ClosedSession(uid, s.start, s.n)
-                  open = Some(OpenSession(e.ts, ms, 1))
-                case None =>
-                  open = Some(OpenSession(e.ts, ms, 1))
-              }
-            }
-            late.foreach(l => closed += ClosedSession(uid, l.start, l.n))
-            open.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastMs + gapMs)
-            }
-            closed.result().iterator
-          }
-      }
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(sessionStep(gapSec * 1000L))
   }
+
+  /** [[sessionize]]'s per-user state step, for a session gap of `gapMs`. */
+  private[graft] def sessionStep(gapMs: Long)
+      : (Long, Iterator[SessionEvent], GroupState[OpenSession]) => Iterator[ClosedSession] =
+    (uid, events, state) =>
+      if (state.hasTimedOut) {
+        val s = state.get
+        state.remove()
+        Iterator.single(ClosedSession(uid, s.start, s.n))
+      } else {
+        // batch arrival order is arbitrary — restore event-time order
+        val sorted = events.toIndexedSeq.sortBy(e =>
+          (e.ts.getTime, e.ts.getNanos, e.event_id))
+        var open = state.getOption
+        // very-late events (> gap BEFORE the open session's start)
+        // cannot belong to it; they gap-cluster among themselves and
+        // their sessions emit at batch end (best-effort for extreme
+        // lateness — they never reopen already-emitted history)
+        var late = Option.empty[OpenSession]
+        val closed = IndexedSeq.newBuilder[ClosedSession]
+        sorted.foreach { e =>
+          val ms = e.ts.getTime
+          open match {
+            case Some(s) if ms < s.start.getTime - gapMs =>
+              late match {
+                case Some(l) if ms - l.lastMs <= gapMs =>
+                  late = Some(OpenSession(l.start, math.max(l.lastMs, ms), l.n + 1))
+                case Some(l) =>
+                  closed += ClosedSession(uid, l.start, l.n)
+                  late = Some(OpenSession(e.ts, ms, 1))
+                case None =>
+                  late = Some(OpenSession(e.ts, ms, 1))
+              }
+            case Some(s) if ms - s.lastMs <= gapMs =>
+              // merge-eligible (incl. late-but-within-gap events)
+              // WITHOUT moving bounds backwards — a regressing lastMs
+              // would rewind the event-time timeout and mis-split on
+              // the next in-order event
+              val start =
+                if (e.ts.compareTo(s.start) < 0) e.ts else s.start
+              open = Some(OpenSession(start, math.max(s.lastMs, ms), s.n + 1))
+            case Some(s) =>
+              closed += ClosedSession(uid, s.start, s.n)
+              open = Some(OpenSession(e.ts, ms, 1))
+            case None =>
+              open = Some(OpenSession(e.ts, ms, 1))
+          }
+        }
+        late.foreach(l => closed += ClosedSession(uid, l.start, l.n))
+        open.foreach { s =>
+          state.update(s)
+          state.setTimeoutTimestamp(s.lastMs + gapMs)
+        }
+        closed.result().iterator
+      }
 
   /** Run a streaming aggregate to a memory sink with Trigger.AvailableNow
     * and an explicit checkpoint, block until done, and return the final

@@ -123,6 +123,22 @@ class StageSpec extends AnyFunSuite {
       .contains("Stage.batchOf"))
   }
 
+  test("in graft.streaming only Streams.oneWave sets a partition count") {
+    val words = Seq(".coalesce(", ".repartition(")
+    val streams = Paths.get("src/main/scala/graft/streaming/Streams.scala")
+    val src = Files.readString(streams)
+    val helper = src.indexOf("private def oneWave(")
+    assert(helper >= 0, s"$streams: oneWave is gone")
+    // the helper's definition runs to the first blank line after it
+    val end = src.indexOf("\n\n", helper)
+    val outside = src.take(helper) + src.drop(end)
+    val offenders =
+      sourceHits(words, Set("Streams.scala"), "src/main/scala/graft/streaming") ++
+        words.filter(outside.contains).map(w => s"$streams: $w")
+    assert(offenders.isEmpty, offenders.mkString(", "))
+    assert(src.slice(helper, end).contains(".coalesce("), "oneWave no longer bounds its input")
+  }
+
   /** The subdir of `store` that holds batch `b`. */
   private def batchDir(store: String, b: Long): Path =
     Files.list(Paths.get(store)).iterator().asScala

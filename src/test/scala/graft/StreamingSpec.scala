@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Batch/stream duality (SURVEY.md §2.7): the same aggregates through the
   * real streaming engine (StateStore, Trigger.AvailableNow) must equal the
   * batch answers over the same parquet data.
@@ -72,7 +74,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("a stream stopped after batch 1 restarts from its checkpoint to the uninterrupted answer") {
-    // the events as four arrival batches by day of month (1-8, 9-16, 17-24,
+    // batches 0-1 run the plain Spark calls, as a checkpoint written before
+    // Streams bounded its map side, and the restart over batches 2-3 runs
+    // the Streams transform on that checkpoint.
+    // The events as four arrival batches by day of month (1-8, 9-16, 17-24,
     // 25-30), every third event delivered again in the next batch, where
     // only the restored dedup state drops it
     val staged = Stage.batches("restart-events", sf, 4) {
@@ -83,14 +88,20 @@ class StreamingSpec extends AnyFunSuite {
     val files = new java.io.File(staged).listFiles().map(_.toPath).sortBy(_.toString).toSeq
     assert(files.size == 4)
     val delay = "10 days"
-    val shapes = Seq[(String, DataFrame => DataFrame)](
-      "dedup" -> (df => Streams.dedupWithinWatermark(df, "event_id", delay)),
-      "hourly" -> (df => Streams.hourlyCountsAppend(df, delay)))
-    shapes.foreach { case (name, shape) =>
+    // (name, the transform, the same Spark calls without the bound)
+    val shapes = Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)](
+      ("dedup", Streams.dedupWithinWatermark(_, "event_id", delay),
+        _.withWatermark("ts", delay).dropDuplicatesWithinWatermark("event_id")),
+      ("hourly", Streams.hourlyCountsAppend(_, delay),
+        _.withWatermark("ts", delay)
+          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("n"))))
+    shapes.foreach { case (name, shape, plain) =>
       def dir(tag: String) = Stage.scratch(s"graft-restart-$name-$tag-")
       // drains `src` into the parquet sink `out` on checkpoint `ckpt`: the
       // ids of the batches that read rows, and the last batch's state rows
-      def run(src: String, out: String, ckpt: String): (Seq[Long], Long) = {
+      def run(shape: DataFrame => DataFrame, src: String, out: String,
+              ckpt: String): (Seq[Long], Long) = {
         val q = shape(spark.readStream.schema(Tables.schemaOf(spark, staged))
             .option("maxFilesPerTrigger", 1).parquet(src))
           .writeStream.outputMode("append").format("parquet")
@@ -103,15 +114,15 @@ class StreamingSpec extends AnyFunSuite {
       def rows(out: String) = spark.read.parquet(out).collect().map(_.toString).toSeq.sorted
 
       val (wholeOut, wholeCkpt) = (dir("whole-out").toString, dir("whole-ckpt").toString)
-      val (_, wholeState) = run(staged, wholeOut, wholeCkpt)
+      val (_, wholeState) = run(shape, staged, wholeOut, wholeCkpt)
 
       val (src, out, ckpt) = (dir("src"), dir("out").toString, dir("ckpt").toString)
       def arrive(batches: Seq[java.nio.file.Path]): Unit = batches.foreach(f =>
         Files.copy(f, src.resolve(f.getFileName), StandardCopyOption.COPY_ATTRIBUTES))
       arrive(files.take(2))
-      val (before, _) = run(src.toString, out, ckpt)
+      val (before, _) = run(plain, src.toString, out, ckpt)
       arrive(files.drop(2))
-      val (after, restartState) = run(src.toString, out, ckpt)
+      val (after, restartState) = run(shape, src.toString, out, ckpt)
 
       assert(before == Seq(0L, 1L), name)
       assert(after.size == 2 && after.min > 1L, s"$name resumed at $after")
@@ -119,6 +130,98 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows(out) == rows(wholeOut), name)
       assert(restartState == wholeState, name)
     }
+  }
+
+  test("each stateful transform runs one map wave per micro-batch and emits the unbounded rows") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.graftbridge.SessionBridge
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val slots = spark.sparkContext.defaultParallelism
+    // the events in 40 arrival blocks, every fifth one delivered twice
+    val events = batchEvents.select("event_id", "user_id", "event_type", "ts")
+    val deliveries = events.unionByName(events.filter(col("event_id") % 5 === 0))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getTimestamp(3)))
+    val blocks = deliveries.groupBy(e => (e._1 * 7 % 40).toInt).toSeq.sortBy(_._1).map(_._2.toSeq)
+    assert(blocks.size == 40)
+
+    def side(df: DataFrame, t: String, prefix: String) =
+      df.filter(col("event_type") === t).select(col("event_id").as(s"${prefix}_event_id"),
+        col("user_id").as(s"${prefix}_user_id"), col("ts").as(s"${prefix}_ts"))
+    def hourly(df: DataFrame) =
+      df.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type")).agg(count(lit(1)).as("n"))
+    def sliding(df: DataFrame) =
+      df.groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+    // (name, output mode, the transform, the same Spark calls unbounded)
+    val shapes = Seq[(String, String, DataFrame => DataFrame, DataFrame => DataFrame)](
+      ("count", "complete", Streams.globalCount, _.groupBy().count()),
+      ("hourly", "complete", Streams.hourlyCounts, hourly),
+      ("hourly_append", "append", Streams.hourlyCountsAppend(_),
+        df => hourly(df.withWatermark("ts", "1 hour"))),
+      ("sliding", "append", Streams.slidingCountsAppend(_, "1 hour", "15 minutes"),
+        df => sliding(df.withWatermark("ts", "1 hour"))),
+      ("dedup", "append", Streams.dedupWithinWatermark(_, "event_id"),
+        _.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark("event_id")),
+      ("join", "append",
+        df => Streams.streamStreamJoin(side(df, "purchase", "p"), side(df, "click", "c"),
+          "p_user_id", "c_user_id", "p_ts", "c_ts", windowSec = 1800),
+        df => side(df, "purchase", "p").withWatermark("p_ts", "1 hour")
+          .join(side(df, "click", "c").withWatermark("c_ts", "1 hour"),
+            col("p_user_id") === col("c_user_id") &&
+              col("c_ts") >= col("p_ts") - expr("INTERVAL 1800 SECONDS") &&
+              col("c_ts") <= col("p_ts"))),
+      ("sessionize", "append", Streams.sessionize(_).toDF(),
+        _.withWatermark("ts", "0 seconds")
+          .select(col("user_id"), col("event_id"), col("ts")).as[Streams.SessionEvent]
+          .groupByKey(_.user_id)
+          .flatMapGroupsWithState[Streams.OpenSession, Streams.ClosedSession](
+            OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+            Streams.sessionStep(1800000L)).toDF()))
+
+    // (query id, batch id, tasks) of every stage a stream submits that
+    // reads its source: one with no parent stage, the map side of the
+    // state shuffle
+    val mapStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Int)]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .filter(_ => e.stageInfo.parentIds.isEmpty)
+          .foreach(q => mapStages.add((q, e.properties.getProperty("streaming.sql.batchId"),
+            e.stageInfo.numTasks)))
+    }
+    // the shape's emitted rows over the 40 blocks, and its map-stage task
+    // count per micro-batch
+    def run(name: String, mode: String, shape: DataFrame => DataFrame)
+        : (Seq[String], Map[String, Seq[Int]]) = {
+      val mem = MemoryStream[(Long, Long, String, java.sql.Timestamp)]
+      blocks.foreach(b => mem.addData(b))
+      SessionBridge.drainListenerBus(spark)
+      mapStages.clear()
+      val out = Streams.runToMemory(spark,
+        shape(mem.toDF().toDF("event_id", "user_id", "event_type", "ts")), name, mode)
+        .collect().map(_.toString).toSeq.sorted
+      SessionBridge.drainListenerBus(spark)
+      val stages = mapStages.asScala.toSeq
+      assert(stages.map(_._1).distinct.size == 1, s"$name: one query's stages")
+      (out, stages.groupBy(_._2).map { case (b, ss) => b -> ss.map(_._3) })
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try shapes.foreach { case (name, mode, bounded, unbounded) =>
+      val (rows, waves) = run(s"t_wave_$name", mode, bounded)
+      val (plainRows, plainWaves) = run(s"t_wave_plain_$name", mode, unbounded)
+      assert(plainWaves.values.flatten.max == 40, s"$name: the unbounded map stage reads every block")
+      assert(waves.values.flatten.nonEmpty && waves.values.flatten.forall(_ <= slots),
+        s"$name: map tasks per micro-batch $waves over $slots slots")
+      assert(rows.nonEmpty, name)
+      assert(rows == plainRows, name)
+      val batchPlan = bounded(events).queryExecution.analyzed
+      assert(batchPlan.collectFirst { case r: Repartition => r }.isEmpty,
+        s"$name: a batch frame must keep its AQE-sized plan")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("sessionize: a late event inside the watermark merges without rewinding session bounds") {
